@@ -1,0 +1,4 @@
+from . import pyworker as _pyworker
+
+if _pyworker.in_worker():
+    _pyworker.install()

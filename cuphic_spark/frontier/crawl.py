@@ -50,6 +50,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 from dataclasses import dataclass, field
 from xml.parsers import expat as _expat
 
@@ -437,6 +438,8 @@ def _fetch_extract(scheduled: DataFrame, universe: int,
 
 
 _COL_MEMO: dict = {}
+# run_wave's pool threads build plans concurrently with the main thread
+_COL_MEMO_LOCK = threading.Lock()
 
 
 def _memo_cols(key, build):
@@ -452,21 +455,25 @@ def _memo_cols(key, build):
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context
-    hit = _COL_MEMO.get(key)
+    with _COL_MEMO_LOCK:
+        hit = _COL_MEMO.get(key)
     if hit is not None and hit[0] is sc:
         return hit[1]
-    if len(_COL_MEMO) >= 4096:
-        # bound the memo: wave-keyed entries accumulate over very long
-        # crawls, and each holds a py4j ref that pins a JVM expression
-        # — drop stale-context entries first, everything if still full
-        # (rebuild is the pre-memo behavior: a few ms per tree)
-        stale = [k for k, v in _COL_MEMO.items() if v[0] is not sc]
-        for k in stale:
-            del _COL_MEMO[k]
-        if len(_COL_MEMO) >= 4096:
-            _COL_MEMO.clear()
+    # built outside the lock: a racing miss only duplicates a build
     val = build()
-    _COL_MEMO[key] = (sc, val)
+    with _COL_MEMO_LOCK:
+        if len(_COL_MEMO) >= 4096:
+            # bound the memo: wave-keyed entries accumulate over very
+            # long crawls, and each holds a py4j ref that pins a JVM
+            # expression — drop stale-context entries first, everything
+            # if still full (rebuild is the pre-memo behavior: a few ms
+            # per tree)
+            stale = [k for k, v in _COL_MEMO.items() if v[0] is not sc]
+            for k in stale:
+                del _COL_MEMO[k]
+            if len(_COL_MEMO) >= 4096:
+                _COL_MEMO.clear()
+        _COL_MEMO[key] = (sc, val)
     return val
 
 
@@ -1022,6 +1029,19 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         # ranked cache is lazy; its Observations and accumulator die
         # with it) — drop its cache registrations and rebuild over
         # the extended read set.
+        # the provisional layouts are discarded too: cancel their build
+        # if it has not started, else wait it out (its closure reads
+        # this iteration's variables, which the re-plan rebinds) and
+        # surface a failure instead of dropping it with the future
+        if f_layouts is not None and not f_layouts.cancel():
+            exc = f_layouts.exception()
+            if exc is not None:
+                import warnings
+
+                warnings.warn(
+                    f"wave {wave}: discarded layout build failed "
+                    f"({type(exc).__name__}: {str(exc)[:120]}); the "
+                    "extension round rebuilds it")
         for c in (ranked, stats_q, with_rank, fetched, distinct_links,
                   new_rows):
             c.unpersist()
@@ -1224,8 +1244,7 @@ def _partition_layout(df: DataFrame, cfg: CrawlConfig,
 
 
 def _partitioned_write(df: DataFrame, path: str, cfg: CrawlConfig,
-                       salt: bool = False, dir_partitioned: bool = True,
-                       bloom_acc=None):
+                       salt: bool = False, dir_partitioned: bool = True):
     """Seen snapshots/deltas (frontier writes go through
     bands.write_wave_frontier, which applies the same layout INSIDE
     each score band): partitioned by pmod(xxhash64(host),P)
@@ -1236,36 +1255,8 @@ def _partitioned_write(df: DataFrame, path: str, cfg: CrawlConfig,
     dir_partitioned=False keeps `part` as a data column (flat layout)
     — required for the seen DELTA dirs, which are read as a multi-root
     union (partition-directory inference would see conflicting
-    structures across roots).
-
-    ``bloom_acc`` (a seen.BloomUpdateAccumulator) folds bloom
-    maintenance INTO this write: an order-preserving mapInPandas
-    stage accumulates each batch's bit positions while the rows
-    stream to parquet — one pass, no separate per-wave bloom job.
-    The hashes are JVM-computed (F.xxhash64, the same expression the
-    probe uses) and dropped before the write, so the on-disk layout
-    is unchanged."""
+    structures across roots)."""
     out = _partition_layout(df, cfg, salt=salt)
-    if bloom_acc is not None:
-        if dir_partitioned:
-            raise ValueError("bloom_acc is wired for the flat seen-"
-                             "delta layout only")
-        out_schema = out.schema
-        acc = bloom_acc
-
-        def fold(batches):
-            # one accumulator update per TASK (see
-            # BloomUpdateAccumulator): chunks collected across the
-            # generator's batches, sent once at partition end
-            chunks = []
-            for pdf in batches:
-                if len(pdf):
-                    chunks.append(acc.positions(pdf["__h"]))
-                yield pdf.drop(columns="__h")
-            acc.add_positions(chunks)
-
-        out = (out.withColumn("__h", F.xxhash64("url"))
-               .mapInPandas(fold, out_schema))
     writer = out.write.mode("overwrite")
     if dir_partitioned:
         writer = writer.partitionBy("part")
@@ -1388,7 +1379,13 @@ def crawl(spark: SparkSession, cfg: CrawlConfig) -> dict:
     # (a write racing session teardown is worse than a leaked cache)
     # 5 slots: fetch_log + frontier + cuckoo + sharded-bloom writes +
     # the bloom bitmap fold can all be in flight once the seen delta
-    # commits
+    # commits. The driver-side overlap tasks (stats collect, layout
+    # build, the previous wave's finalize) queue behind them, which is
+    # safe only under one rule: NO POOL TASK EVER WAITS ON A FUTURE
+    # SUBMITTED AFTER ITSELF. Every wait on the pool's results happens
+    # on the main thread (or on an earlier-submitted future), so a full
+    # pool only delays work and cannot deadlock; a task that blocks on
+    # a later submission could wait forever behind itself.
     pool = ThreadPoolExecutor(max_workers=5)
     try:
         return _crawl_loop(spark, cfg, pool)

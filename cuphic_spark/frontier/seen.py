@@ -31,7 +31,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark import AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -136,73 +135,6 @@ def bloom_est_fp(popcount: int, m: int) -> float:
     Pure function of two ints — the oracle twin computes the
     identical float."""
     return (popcount / m) ** _K_HASHES
-
-
-class _ListParam(AccumulatorParam):
-    def zero(self, value):
-        return []
-
-    def addInPlace(self, a, b):
-        a.extend(b)
-        return a
-
-
-class BloomUpdateAccumulator:
-    """Fold bloom maintenance INTO the seen-delta write (one pass):
-    tasks accumulate their delta's bit positions while the rows
-    stream to parquet — the separate per-wave bloom job disappears.
-
-    Each task contributes ONE update — either its raw position
-    arrays (small deltas) or a pre-folded partial bitmap (when the
-    positions would outweigh m/8 bytes) — so the driver-bound update
-    volume per wave is min(24·|delta_rows_in_task|, m/8) per task
-    (accumulating per Arrow BATCH instead would make the bitmap
-    fallback unreachable — batches are always small — and ship
-    24 bytes/url unconditionally: GBs at 10^8-url waves). OR-ing
-    bitmaps is IDEMPOTENT, so task retries/speculation can only
-    re-set the same bits — the merged bitmap is exact even when
-    accumulator updates are delivered more than once (unlike
-    counting accumulators).
-    """
-
-    def __init__(self, spark, m: int):
-        self.m = m
-        self.acc = spark.sparkContext.accumulator([], _ListParam())
-
-    def positions(self, h: "pd.Series") -> np.ndarray:
-        """Executor-side: one batch's bit positions (no send)."""
-        return _bit_indices(h, self.m).reshape(-1).astype(np.int64)
-
-    def add_positions(self, chunks: list) -> None:
-        """Executor-side, once per TASK: send the task's accumulated
-        position chunks — as positions if small, else folded into a
-        single partial bitmap."""
-        if not chunks:
-            return
-        nbytes = self.m // 8 + 1
-        total = sum(c.nbytes for c in chunks)
-        if total < nbytes:
-            self.acc.add([("pos", c.tobytes()) for c in chunks])
-        else:
-            arr = np.zeros(nbytes, dtype=np.uint8)
-            for idx in chunks:
-                np.bitwise_or.at(arr, idx // 8,
-                                 (1 << (idx % 8)).astype(np.uint8))
-            self.acc.add([("bmp", arr.tobytes())])
-
-    def merged(self, base: bytes | None = None) -> bytes:
-        """Driver-side: fold the accumulated updates into ``base``."""
-        nbytes = self.m // 8 + 1
-        out = (np.frombuffer(base, dtype=np.uint8).copy()
-               if base is not None else np.zeros(nbytes, dtype=np.uint8))
-        for kind, blob in self.acc.value:
-            if kind == "bmp":
-                out |= np.frombuffer(blob, dtype=np.uint8)
-            else:
-                idx = np.frombuffer(blob, dtype=np.int64)
-                np.bitwise_or.at(out, idx // 8,
-                                 (1 << (idx % 8)).astype(np.uint8))
-        return out.tobytes()
 
 
 def build_bloom(seen: DataFrame, m: int = BLOOM_BITS_DEFAULT) -> bytes:

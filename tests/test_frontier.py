@@ -1796,3 +1796,79 @@ def test_memo_cols_reuses_within_session(spark):
     assert spark.range(2).select(a.alias("x")).count() == 2
     crawl_mod._COL_MEMO.pop(key, None)
     crawl_mod._COL_MEMO.pop(("test_memo", 8), None)
+
+
+def test_memo_cols_concurrent_builds_and_evictions(monkeypatch):
+    """run_wave's pool threads call _memo_cols alongside the main
+    thread: under a tiny switch interval, with more threads than cores
+    and a key space that keeps the memo at its bound (stale-context
+    entries included), every call returns its own key's value and no
+    thread dies mid-eviction."""
+    import sys
+    import threading
+
+    from cuphic_spark.frontier import crawl as crawl_mod
+
+    memo = {("stale", i): (object(), i) for i in range(4000)}
+    monkeypatch.setattr(crawl_mod, "_COL_MEMO", memo)
+    errors, wrong = [], []
+
+    def hammer(t):
+        try:
+            for i in range(3000):
+                key = ("k", (t * 7919 + i) % 6000)
+                if crawl_mod._memo_cols(key, lambda: key) != key:
+                    wrong.append(key)
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    prior = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=hammer, args=(t,))
+                   for t in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(prior)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == [] and wrong == []
+    assert 0 < len(memo) <= 4096
+
+
+def test_extension_round_surfaces_discarded_layout_failure(
+        spark, tmp_path, monkeypatch):
+    """An extension round discards the wave's provisional layout build:
+    the build is cancelled or awaited before the re-plan, and a failure
+    inside it is warned about instead of dying unread with its future.
+    The crawl still matches the oracle."""
+    import threading
+
+    from cuphic_spark.frontier import bands
+
+    kw = dict(CFG, budget_per_host=1, band_width=3)  # wave 2 extends
+    needs, raised = [], []
+    real_plan, real_prep = bands.plan_read, bands._prep_delta
+
+    def plan_read(manifest, need):
+        needs.append(need)
+        return real_plan(manifest, need)
+
+    def prep_delta(*a, **k):
+        # the pool-side layout build over wave 2's first read plan
+        if (len(needs) == 3 and not raised
+                and threading.current_thread()
+                is not threading.main_thread()):
+            raised.append(1)
+            raise RuntimeError("provisional layout build failed")
+        return real_prep(*a, **k)
+
+    monkeypatch.setattr(bands, "plan_read", plan_read)
+    monkeypatch.setattr(bands, "_prep_delta", prep_delta)
+    cfg = CrawlConfig(checkpoint_dir=str(tmp_path / "ext"), **kw)
+    with pytest.warns(UserWarning, match="discarded layout build failed"):
+        summary = crawl(spark, cfg)
+    assert raised and len(needs) == 4 and needs[3] > needs[2]
+    assert summary["metrics"] == crawl_oracle.run(**kw).metrics
