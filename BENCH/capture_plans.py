@@ -123,23 +123,6 @@ def main() -> None:
         "broadcast centroids) differs, and it runs at index-build/"
         "probe-expansion time, never in the scan.")
 
-    from cuphic_spark.frontier.seen import prune_seen_paths
-
-    seen_dir = "/tmp/cuphic_plan_seen"
-    (spark.range(2000).selectExpr(
-        "concat('https://h', id % 50, '.x/', id) as url",
-        "0 as added_wave", "concat('h', id % 50, '.x') as host",
-        "cast(id % 8 as int) as part")
-     .repartition(8, "part")
-     .sortWithinPartitions("part", "url")
-     .write.mode("overwrite").parquet(seen_dir))
-    add("Partition-pruned seen read (footer-stat file selection)",
-        prune_seen_paths(spark, [seen_dir], [2, 5]),
-        "File list selected driver-side from parquet footer part "
-        "stats (manifest-style pruning), then a pushed part IN (...) "
-        "filter skips row groups inside kept files: check "
-        "PushedFilters on part and the bounded file count.")
-
     from cuphic_spark.frontier.robots import parse_robots, robots_allowed
 
     bodies = spark.createDataFrame(

@@ -129,43 +129,6 @@ def q_match_li_bullet(spark, sf_dir):
     return m.select("url", F.element_at("bindings", "body").alias("body"))
 
 
-def q_media_features(spark, sf_dir):
-    """Multimodal decode gate: synthesize media payloads from
-    document ids EXECUTOR-side (real WAV/PPM bytes), decode them FOR
-    REAL (stdlib wave + numpy — operators/multimodal.py), and emit
-    integer facts the decode must recover: image dimensions, audio
-    duration, container byte sizes. The oracle recomputes every value
-    closed-form WITHOUT decoding — a value-exact round-trip check on
-    the decoders themselves."""
-    from cuphic_spark.operators.multimodal import (
-        extract_features,
-        synth_payloads,
-    )
-
-    ids = (_docs(spark, sf_dir).where(F.col("doc_id") < 150)
-           .select(F.col("doc_id").alias("media_id")))
-    feats = extract_features(synth_payloads(ids))
-    return feats.select(
-        "media_id", "kind", "format",
-        # jpeg rows (every fifth image: 4:2:0 + restart intervals,
-        # every other one progressive SOF2, every fourth planar
-        # multi-scan) and png rows (from-scratch zlib codec, filters
-        # cycled, alternating RGBA, id%3==0 PALETTE +tRNS, id%3==1
-        # ADAM7, palette+Adam7 combined) have no closed-form byte
-        # size (entropy/deflate-coded), so both sides emit NULL;
-        # their width/height below still come from the actual decode
-        F.when(~F.col("format").isin("jpeg", "png", "gif"),
-               F.col("n_bytes"))
-        .alias("n_bytes"),
-        F.when(F.col("kind") == "image",
-               F.col("feature")[0].cast("int")).alias("width"),
-        F.when(F.col("kind") == "image",
-               F.col("feature")[1].cast("int")).alias("height"),
-        F.when(F.col("kind") == "audio",
-               F.round(F.col("feature")[0] * 1000).cast("int"))
-        .alias("duration_ms"))
-
-
 def q_link_host_counts(spark, sf_dir):
     cp = [compile_pattern("links", GOLDEN_PATTERNS["links"])]
     m = match_nodes(_nodes(spark, sf_dir), cp)
@@ -1685,7 +1648,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "match_term": q_match_term,
         "match_p_optional_id": q_match_p_optional_id,
         "match_li_bullet": q_match_li_bullet,
-        "media_features": q_media_features,
         "link_host_counts": q_link_host_counts,
         "tag_histogram": q_tag_histogram,
         "politeness_topk": q_politeness_topk,
@@ -1859,48 +1821,6 @@ def oracle_sql() -> dict[str, str]:
                         THEN '[:b {{}} "' || li_bold || '"]'
                         ELSE 'nil' END AS body
             FROM pages WHERE li_case IN (0, 2)
-        """,
-        "media_features": """
-            WITH m AS (
-              SELECT doc_id AS media_id,
-                     doc_id % 3 AS k,
-                     doc_id % 5 = 0 AS jp,
-                     doc_id % 5 = 2 AS pn,
-                     doc_id % 5 = 4 AS gf,
-                     CASE WHEN doc_id % 5 = 0
-                          THEN 24 + (doc_id % 7) * 5
-                          WHEN doc_id % 5 = 2
-                          THEN 18 + (doc_id % 6) * 7
-                          WHEN doc_id % 5 = 4
-                          THEN 22 + (doc_id % 7) * 4
-                          ELSE 16 + (doc_id % 5) * 8 END AS w,
-                     CASE WHEN doc_id % 5 = 0
-                          THEN 20 + (doc_id % 11) * 3
-                          WHEN doc_id % 5 = 2
-                          THEN 14 + (doc_id % 4) * 5
-                          WHEN doc_id % 5 = 4
-                          THEN 16 + (doc_id % 5) * 4
-                          ELSE 12 + (doc_id % 3) * 8 END AS h,
-                     50 + (doc_id * 37) % 200 AS dur
-              FROM documents WHERE doc_id < 150)
-            SELECT media_id,
-                   CASE k WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-                          ELSE 'video' END AS kind,
-                   CASE WHEN k = 0 AND jp THEN 'jpeg'
-                        WHEN k = 0 AND pn THEN 'png'
-                        WHEN k = 0 AND gf THEN 'gif'
-                        WHEN k = 0 THEN 'ppm'
-                        WHEN k = 1 THEN 'wav'
-                        ELSE 'fake' END AS format,
-                   CASE WHEN k = 0 AND (jp OR pn OR gf) THEN NULL
-                        WHEN k = 0 THEN 9 + length(w::VARCHAR)
-                               + length(h::VARCHAR) + 3 * w * h
-                        WHEN k = 1 THEN 44 + 16 * dur
-                        ELSE 42 END::BIGINT AS n_bytes,
-                   CASE WHEN k = 0 THEN w END::INT AS width,
-                   CASE WHEN k = 0 THEN h END::INT AS height,
-                   CASE WHEN k = 1 THEN dur END::INT AS duration_ms
-            FROM m
         """,
         "link_host_counts": f"""
             WITH pages AS ({_PAGES_CTE})

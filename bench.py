@@ -227,7 +227,7 @@ def main() -> None:
         scheduled / timings["crawl"], 1)
     crawl_timings = summary["timings"]
     # per-wave frontier/seen IO counters (round-3 verdict #7): lets
-    # the banded-read / pruned-seen IO claims be verified from the
+    # the banded-read IO claims be verified from the
     # bench artifact alone (each counter is oracle-pinned in tests)
     crawl_io = [{k: m[k] for k in
                  ("wave", "scheduled", "new_urls", "frontier_rows_read",

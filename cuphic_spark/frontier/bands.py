@@ -119,12 +119,18 @@ def manifest_path(frontier_dir: str) -> str:
     return os.path.join(frontier_dir, MANIFEST_NAME)
 
 
+def write_json_atomic(path: str, obj) -> None:
+    """Commit a JSON marker via tmp + ``os.replace``: a crash mid-write
+    leaves the previous file (or none), never a partial one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh, indent=1)
+    os.replace(tmp, path)
+
+
 def write_manifest(frontier_dir: str, manifest: dict) -> None:
     os.makedirs(frontier_dir, exist_ok=True)
-    tmp = manifest_path(frontier_dir) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, indent=1)
-    os.replace(tmp, manifest_path(frontier_dir))  # atomic commit
+    write_json_atomic(manifest_path(frontier_dir), manifest)
 
 
 def load_manifest(frontier_dir: str) -> dict:

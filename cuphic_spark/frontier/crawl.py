@@ -129,12 +129,10 @@ class CrawlConfig:
     # waves (0 = off; offline compaction via snapshots.compact_seen)
     page_weight: int = 30         # filler paragraphs per synthetic
     # page (~4 KB default; Common-Crawl-style bodies = 100-700)
-    seen_check: str = "auto"      # 'shuffle' | 'broadcast' | 'pruned' |
-    # 'auto': broadcast = two-phase semi/anti where the seen table only
+    seen_check: str = "auto"      # 'shuffle' | 'broadcast' | 'auto':
+    # broadcast = two-phase semi/anti where the seen table only
     # STREAMS (never shuffles) — the steady-state choice once seen
-    # dwarfs a wave's candidates; pruned = read ONLY the seen files
-    # whose part range intersects the candidates' partition ids (see
-    # seen.prune_seen_paths); auto switches at broadcast_seen_min
+    # dwarfs a wave's candidates; auto switches at broadcast_seen_min
     broadcast_seen_min: int = 5_000_000
     broadcast_max_candidates: int = 2_000_000  # hard candidate ceiling
     # for the broadcast strategy: a wave whose PREVIOUS links_distinct
@@ -156,12 +154,6 @@ class CrawlConfig:
     link_extract: str = "streaming"  # 'streaming' (tree-free expat
     # twin of the fixed link pattern, default) | 'kernel' (general
     # engine scan); results pinned identical by tests
-    pruned_seen_byte_frac: float = 0.5  # auto routing: take the
-    # footer-pruned seen read only when the kept files' byte footprint
-    # is at most this fraction of the full seen footprint (the cost
-    # signal comes from the same footer walk the pruned read needs
-    # anyway — round-3 verdict item 5 replaced the old partition-count
-    # ratio, which ignored how bytes actually cluster across files)
     robots_ttl_waves: int = 0     # robots-cache TTL in waves: epoch =
     # wave // ttl selects the rules version (0 = static spec, the
     # deterministic default); oracle models the same schedule
@@ -483,7 +475,6 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
              cuckoo_shards: DataFrame | None = None,
              bloom: bytes | None = None,
              prev_links_hint: int | None = None,
-             seen_paths: list[str] | None = None,
              bloom_m: int | None = None,
              bloom_shards: DataFrame | None = None,
              pool=None):
@@ -795,10 +786,6 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         # the configured ceiling (advisor round-2 finding).
         over_candidate_cap = (prev_links_hint is not None
                               and prev_links_hint > cfg.broadcast_max_candidates)
-        parts_hit = None  # auto's probe is reused by the pruned branch —
-        # candidate_parts is a Spark job on the candidate chain; computing
-        # it twice per wave was a redundant action (advisor round-3, low)
-        kept_files = None  # ditto for the footer walk
         if cfg.seen_check == "auto":
             big_seen = (n_seen_hint is not None
                         and n_seen_hint >= cfg.broadcast_seen_min)
@@ -816,27 +803,6 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
                              <= cfg.broadcast_max_candidates)
             if big_seen and can_broadcast:
                 seen_strategy = "broadcast"
-            elif big_seen and seen_paths is not None:
-                # candidates too big to broadcast against a huge seen
-                # table: if they cluster in few host partitions, a
-                # footer-pruned read of just those partitions beats
-                # shuffling the whole seen side. The parts probe is a
-                # <= cfg.partitions-row collect off the cached candidate
-                # chain; the cost model compares BYTES the pruned read
-                # would open vs the full seen footprint, from the same
-                # footer walk the pruned read needs anyway — the decision
-                # depends only on DATA (file sizes are deterministic
-                # functions of the partitioned writes: deterministic at
-                # any parallelism).
-                from .seen import candidate_parts, select_seen_files
-
-                parts_hit = candidate_parts(distinct_links, cfg.partitions)
-                kept_files, kept_b, total_b = select_seen_files(
-                    seen_paths, parts_hit, with_stats=True)
-                seen_strategy = (
-                    "pruned"
-                    if kept_b <= cfg.pruned_seen_byte_frac * total_b
-                    else "shuffle")
             else:
                 seen_strategy = "shuffle"
         else:
@@ -851,28 +817,6 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
                     "'shuffle' for this wave (broadcasting an unbounded "
                     "candidate set can exceed driver memory)")
                 seen_strategy = "shuffle"
-
-        # the pruned strategy replaces the seen side with a footer-pruned
-        # read of ONLY the files intersecting the candidates' partition
-        # ids (see seen.prune_seen_paths); the partition-id collect is at
-        # most cfg.partitions rows and rides the cached distinct_links —
-        # candidate parts are computed from the full candidate set, a
-        # superset of the post-cuckoo to_check set (supersets only keep
-        # MORE files: always safe).
-        seen_for_check = seen
-        if seen_strategy == "pruned":
-            if seen_paths is None:
-                raise ValueError(
-                    "seen_check='pruned' needs the seen PATHS (run_wave "
-                    "seen_paths=...); a bare DataFrame cannot be file-"
-                    "pruned")
-            from .seen import candidate_parts, prune_seen_paths
-
-            if parts_hit is None:  # explicit seen_check='pruned' (auto
-                # already computed the probe while routing)
-                parts_hit = candidate_parts(distinct_links, cfg.partitions)
-            seen_for_check = prune_seen_paths(spark, seen_paths, parts_hit,
-                                              kept=kept_files)
 
         candidates = distinct_links
         use_cuckoo = (cfg.use_cuckoo and cuckoo_shards is not None
@@ -897,10 +841,10 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
                      .drop("maybe_seen_cuckoo", "partition"))
             to_check = (flagged.where(F.col("maybe_seen_cuckoo"))
                         .drop("maybe_seen_cuckoo", "partition"))
-            confirmed = _seen_filter(to_check, seen_for_check)
+            confirmed = _seen_filter(to_check, seen)
             new_urls = fresh.unionByName(confirmed)
         else:
-            new_urls = _seen_filter(candidates, seen_for_check)
+            new_urls = _seen_filter(candidates, seen)
         # no frontier anti-join needed: every frontier url is already in
         # seen (seeds via seen_seed, discoveries via their wave's delta),
         # so surviving the seen anti-join implies not-pending either —
@@ -1233,9 +1177,9 @@ def _partition_layout(df: DataFrame, cfg: CrawlConfig,
         df = df.withColumn(
             "host_salt",
             F.pmod(F.xxhash64("url"), F.lit(cfg.salt_buckets)).cast("int"))
-    # seen writes (no score) sort by (part, url): part-first keeps
-    # row-group part ranges tight, which is what lets the pruned seen
-    # strategy skip row groups via footer stats (seen.prune_seen_paths)
+    # seen writes (no score) sort by (part, url): a deterministic
+    # within-file order, so a seen delta's bytes do not depend on task
+    # scheduling, with each file's row groups clustered by partition
     sort_keys = ([F.desc("score"), F.asc("url")]
                  if "score" in df.columns
                  else [F.asc("part"), F.asc("url")])
@@ -1438,7 +1382,6 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
         f_seed.result()
         seen = _read_seen(spark, cfg, -1)
         n_seen = cfg.n_seeds
-        seen_paths = _seen_delta_paths(cfg, -1)
     else:
         prev = _wave_dir(cfg, start - 1)
         # cuckoo shards bake the partition id they were built for;
@@ -1471,7 +1414,6 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
                 "layout — resume with the recorded value")
         seen = _read_seen(spark, cfg, start - 1)
         n_seen = seen.count()  # parquet footer count — cheap
-        seen_paths = _seen_delta_paths(cfg, start - 1)
         prev_links = prev_lineage.get("metrics", {}).get("links_distinct")
 
     cuckoo_shards = None
@@ -1545,8 +1487,8 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
         metrics = p["finish"]()
         metrics.update(p["extra_metrics"])
         lineage = {**p["lineage_base"], "metrics": metrics}
-        with open(os.path.join(p["dir"], "_lineage.json"), "w") as fh:
-            json.dump(lineage, fh, indent=1)
+        bands_mod.write_json_atomic(
+            os.path.join(p["dir"], "_lineage.json"), lineage)
         for c in p["caches"]:
             c.unpersist()
         all_timings.append({"wave": p["wave"], **p["tt"]})
@@ -1624,7 +1566,7 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
          plan, seen_strategy, delta_counts, seen_delta_out) = run_wave(
             spark, cfg, wave, manifest, seen, n_seen_hint=n_seen,
             cuckoo_shards=cuckoo_shards, bloom=bloom,
-            prev_links_hint=prev_links, seen_paths=seen_paths,
+            prev_links_hint=prev_links,
             bloom_m=bloom_m, bloom_shards=bloom_shards, pool=pool)
         # the residual half of the frontier delta's score histogram
         # reads only schedule-phase caches — count it on the pool NOW
@@ -1843,7 +1785,6 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
         }
         manifest = new_manifest
         seen = _read_seen(spark, cfg, wave)
-        seen_paths = _seen_delta_paths(cfg, wave)
         prev_links = finish.n_links_distinct()
         if cfg.compact_every and (wave + 1) % cfg.compact_every == 0:
             # compaction must see a fully-committed wave (and resume
@@ -1856,7 +1797,6 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
 
             compact_seen(spark, cfg, upto_wave=wave)
             seen = _read_seen(spark, cfg, wave)  # re-root on the compact
-            seen_paths = _seen_delta_paths(cfg, wave)
     if pending is not None:
         _finalize(pending)
     return {"start_wave": start, "metrics": all_metrics,
@@ -1888,7 +1828,7 @@ def _main() -> None:
     ap.add_argument("--compact-every", type=int, default=0,
                     help="auto-compact seen deltas every N waves")
     ap.add_argument("--seen-check", default="auto",
-                    choices=["auto", "shuffle", "broadcast", "pruned"])
+                    choices=["auto", "shuffle", "broadcast"])
     args = ap.parse_args()
 
     spark = get_spark(app_name="cuphic-crawl", cores=args.cores)

@@ -166,7 +166,7 @@ def bloom_maybe_seen(candidates: DataFrame, bloom: bytes,
 
 def _anti_seen(candidates: DataFrame, seen: DataFrame,
                strategy: str) -> DataFrame:
-    """The exact membership check, three physical strategies:
+    """The exact membership check, two physical strategies:
 
     * ``shuffle`` — plain left_anti: BOTH sides shuffle on url. Right
       when seen and candidates are comparable in size.
@@ -179,12 +179,6 @@ def _anti_seen(candidates: DataFrame, seen: DataFrame,
       pruning keeps small — the crawl enforces a hard candidate
       ceiling (CrawlConfig.broadcast_max_candidates) via the previous
       wave's links_distinct and falls back to shuffle above it.
-    * ``pruned`` — the caller already replaced ``seen`` with a
-      partition-pruned read (``prune_seen_paths``: only the seen
-      files whose part range intersects the candidates' partition
-      ids); the join itself is a plain left_anti over that shrunken
-      side, which AQE is free to broadcast. Right when dupes dominate
-      candidates AND candidates cluster in few host partitions.
     Results are identical; the crawl pins this at test scale.
     """
     if strategy == "broadcast":
@@ -192,109 +186,6 @@ def _anti_seen(candidates: DataFrame, seen: DataFrame,
             F.broadcast(candidates.select("url")), "url", "left_semi")
         return candidates.join(F.broadcast(hits), "url", "left_anti")
     return candidates.join(seen.select("url"), "url", "left_anti")
-
-
-SEEN_FILE_SCHEMA = "url string, added_wave int, host string, part int"
-
-
-def candidate_parts(candidates: DataFrame, n_partitions: int) -> list[int]:
-    """Distinct seen-partition ids hit by a candidate url set — at
-    most ``n_partitions`` rows through the driver (the partition id is
-    a pure function of host, identical to the one baked into seen
-    writes by crawl._partitioned_write)."""
-    rows = (candidates
-            .select(_partition_of(F.col("url"), n_partitions).alias("p"))
-            .distinct().collect())
-    return sorted(int(r.p) for r in rows)
-
-
-def select_seen_files(seen_paths: list[str], parts: list[int],
-                      with_stats: bool = False):
-    """File-level pruning via parquet FOOTER stats (pyarrow, metadata-
-    only — no row IO): keep a file iff at least one of its row groups
-    has a ``part`` min/max range intersecting ``parts``. Files without
-    stats (or without the column) are conservatively kept — pruning
-    may only ever widen, never lose rows.
-
-    ``with_stats=True`` additionally returns the kept and total byte
-    footprints ``(kept, kept_bytes, total_bytes)`` — the cost signal
-    the crawl's auto routing uses (one footer walk serves both the
-    decision and the read; file sizes are deterministic functions of
-    the partitioned write, so the decision is parallelism-independent).
-    """
-    import os
-
-    import pyarrow.parquet as pq
-
-    wanted = set(int(p) for p in parts)
-    kept: list[str] = []
-    kept_bytes = 0
-    total_bytes = 0
-    for root in seen_paths:
-        for name in sorted(os.listdir(root)):
-            if not name.endswith(".parquet"):
-                continue
-            fpath = os.path.join(root, name)
-            fsize = os.path.getsize(fpath) if with_stats else 0
-            total_bytes += fsize
-            md = pq.ParquetFile(fpath).metadata
-            col_idx = {md.schema.column(i).name: i
-                       for i in range(md.num_columns)}
-            if "part" not in col_idx:
-                kept.append(fpath)  # legacy file without part: keep
-                kept_bytes += fsize
-                continue
-            ci = col_idx["part"]
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(ci).statistics
-                if st is None or st.min is None:
-                    kept.append(fpath)
-                    kept_bytes += fsize
-                    break
-                if any(st.min <= p <= st.max for p in wanted):
-                    kept.append(fpath)
-                    kept_bytes += fsize
-                    break
-    if with_stats:
-        return kept, kept_bytes, total_bytes
-    return kept
-
-
-def prune_seen_paths(spark, seen_paths: list[str],
-                     parts: list[int],
-                     kept: list[str] | None = None) -> "DataFrame":
-    """Partition-pruned seen read: ``select_seen_files`` picks the
-    files whose footer stats intersect the candidates' partition ids;
-    kept files are read with an explicit schema plus a pushed
-    ``part IN (...)`` filter so the parquet reader also skips
-    non-matching ROW GROUPS inside kept files (seen writes sort by
-    (part, url) within tasks, keeping row-group part ranges tight).
-
-    This is manifest-style pruning done with footer stats — exactly
-    what an Iceberg table partitioned by ``part`` would give via its
-    manifests; at 10^10-url scale the footer listing is replaced by
-    the catalog's manifest files, same plan shape. The file list is
-    computed driver-side, so tests can assert untouched partitions
-    are literally never opened for row IO. A caller that already ran
-    ``select_seen_files`` (the auto router) passes ``kept`` to skip
-    the second footer walk.
-    """
-    if kept is None:
-        kept = select_seen_files(seen_paths, parts)
-    if not kept:
-        return (spark.createDataFrame([], SEEN_FILE_SCHEMA)
-                .select("url", "added_wave"))
-    # part IS NULL must pass the filter: a kept file WITHOUT a part
-    # column (select_seen_files keeps it conservatively) comes back
-    # with part=NULL under the pinned schema, and a bare isin() treats
-    # NULL as false — silently dropping every row of the kept file
-    # from the seen side (seen urls re-emitted as new: duplicate
-    # fetches, violating "pruning may only ever widen, never lose
-    # rows"). Advisor round-3 (medium).
-    return (spark.read.schema(SEEN_FILE_SCHEMA).parquet(*kept)
-            .where(F.col("part").isNull()
-                   | F.col("part").isin([int(p) for p in parts]))
-            .select("url", "added_wave"))
 
 
 def filter_new_urls(candidates: DataFrame, seen: DataFrame,

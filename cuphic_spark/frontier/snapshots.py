@@ -2,9 +2,7 @@
 
 Wave checkpoints are immutable snapshot dirs with explicit lineage
 (`_lineage.json`) — the same snapshot/rollback semantics Iceberg
-provides via its catalog, kept catalog-free here (no Iceberg jars in
-the sandbox; swap `.write.parquet` for `.writeTo(...).append()` when
-one exists).
+provides via its catalog, kept catalog-free here.
 
 Rollback = delete wave dirs above the target; the crawl then resumes
 from the target wave deterministically (pinned: resumed ordering ==
@@ -16,6 +14,7 @@ import json
 import os
 import shutil
 
+from . import bands
 from .crawl import CrawlConfig, _wave_dir, last_complete_wave
 
 COMPACT_DIRNAME = "seen_compact"
@@ -66,10 +65,7 @@ def compact_seen(spark, cfg: CrawlConfig, upto_wave: int | None = None) -> str:
         out_dir, cfg, dir_partitioned=False)
     marker = {"upto_wave": upto_wave, "path": out_dir,
               "partitions": cfg.partitions}
-    tmp = _compact_marker(cfg) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(marker, fh, indent=1)
-    os.replace(tmp, _compact_marker(cfg))  # atomic commit
+    bands.write_json_atomic(_compact_marker(cfg), marker)
     # prune superseded compacts (marker no longer references them)
     root = os.path.join(cfg.checkpoint_dir, COMPACT_DIRNAME)
     for name in os.listdir(root):
@@ -116,8 +112,6 @@ def rescore_frontier(spark, cfg: CrawlConfig, new_score_col,
     import shutil as _shutil
 
     from pyspark.sql import functions as F
-
-    from . import bands
 
     last = last_complete_wave(cfg)
     if last >= 0:
@@ -192,33 +186,11 @@ def read_frontier_asof(spark, cfg: CrawlConfig, wave: int):
     just that wave's delta."""
     import os as _os
 
-    from . import bands
-
     if wave < 0:
         fdir = _os.path.join(cfg.checkpoint_dir, "frontier_seed")
     else:
         fdir = _os.path.join(_wave_dir(cfg, wave), "frontier")
     return bands.read_full_frontier(spark, bands.load_manifest(fdir))
-
-
-def read_seen_asof(spark, cfg: CrawlConfig, wave: int):
-    """The seen set AS OF the end of ``wave`` (``-1`` = seeds only):
-    compact snapshot (if its horizon allows) + deltas through
-    ``wave``."""
-    from .crawl import _read_seen
-
-    return _read_seen(spark, cfg, wave)
-
-
-def read_fetch_log_asof(spark, cfg: CrawlConfig, wave: int):
-    """Fetch log restricted to waves <= ``wave``."""
-    import os as _os
-
-    paths = [_os.path.join(_wave_dir(cfg, w), "fetch_log")
-             for w in range(0, wave + 1)
-             if _os.path.isdir(_os.path.join(_wave_dir(cfg, w),
-                                             "fetch_log"))]
-    return spark.read.parquet(*paths)
 
 
 def list_snapshots(cfg: CrawlConfig) -> list[dict]:

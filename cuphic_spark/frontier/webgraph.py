@@ -125,13 +125,6 @@ def gen_html(url: str, universe: int, weight: int = 30,
     return "".join(parts)
 
 
-def expected_canonical_links(i: int, universe: int,
-                             n_hosts: int = N_HOSTS) -> list[str]:
-    """Canonical outlink urls of page i (with duplicates, link order)."""
-    return [url_of(link_target(i, k, universe), n_hosts)
-            for k in range(n_links(i))]
-
-
 def is_redirector(i: int, redirect_mod: int) -> bool:
     """Deterministic redirect spec: with ``redirect_mod`` R > 0,
     every url id with ``i % R == 0`` answers 301 instead of a page."""
@@ -147,12 +140,3 @@ def redirect_target_url(i: int, universe: int,
     target re-enters the frontier like any discovered link) and
     loops terminate via the seen set."""
     return url_of((i + 1) % universe, n_hosts)
-
-
-def robots_denied(url: str) -> bool:
-    """True if the graph's robots rules deny this url."""
-    m = re.match(r"https://host(\d+)\.example(/.*)$", url)
-    if not m:
-        return False
-    h, path = int(m.group(1)), m.group(2)
-    return h % 7 == 0 and path.startswith(DENY_PREFIX)

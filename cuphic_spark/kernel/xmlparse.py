@@ -17,7 +17,10 @@ Reimplements /root/reference/src/dk/cst/cuphic/xml.cljc with
 * Comments -> dropped — xml.cljc:127-128;
 * processing instructions / doctypes -> dropped (the reference would
   pass the raw DOM object through, xml.cljc:130 — never exercised by
-  its corpus; we drop instead of leaking parser objects).
+  its corpus; we drop instead of leaking parser objects);
+* a dropped comment or PI still ENDS a text node: ``normalize()``
+  merges only adjacent Text nodes, so ``a<!--c-->b`` keeps ``"a"``
+  and ``"b"`` apart, each kept or dropped on its own.
 
 Also provides ``extract_text``: the in-order concatenation of kept
 text nodes — the byte-identity target column of the pipeline.
@@ -131,10 +134,11 @@ def _node_to_hiccup(node):
 
 class _ExpatBuilder:
     """Streaming expat -> Hiccup builder. Same keep/drop contract as
-    the DOM path (comments/PIs dropped, blank-only merged text
-    dropped, text verbatim, qualified names preserved) at a fraction
-    of minidom's allocation cost — the parse stage is the pipeline's
-    hot loop, and minidom roughly triples its memory traffic."""
+    the DOM path (comments/PIs dropped but splitting text, blank-only
+    merged text dropped, text verbatim, qualified names preserved) at
+    a fraction of minidom's allocation cost — the parse stage is the
+    pipeline's hot loop, and minidom roughly triples its memory
+    traffic."""
 
     __slots__ = ("root", "stack", "buf")
 
@@ -167,14 +171,19 @@ class _ExpatBuilder:
     def chars(self, data):
         self.buf.append(data)
 
+    def boundary(self, *_):
+        self._flush_text()
 
-def parse(xml) -> list:
-    """Parse XML bytes/string into Hiccup — xml.cljc:132-135.
 
-    expat with namespace processing OFF (qualified names verbatim,
-    exactly the non-namespace-aware JAXP default the reference uses);
-    buffer_text merges adjacent character data (the .normalize
-    contract, xml.cljc:109)."""
+def _run_expat(xml, handler) -> None:
+    """Feed ``xml`` (bytes, str or a readable) through expat into
+    ``handler``'s start/end/chars/boundary callbacks.
+
+    Namespace processing is OFF (qualified names verbatim, exactly the
+    non-namespace-aware JAXP default the reference uses);
+    buffer_text merges adjacent character data and CDATA (the
+    .normalize contract, xml.cljc:109); comments and PIs reach only
+    ``boundary``, which ends the current text run."""
     from xml.parsers import expat
 
     if isinstance(xml, str):
@@ -183,15 +192,20 @@ def parse(xml) -> list:
         xml = xml.read()
         if isinstance(xml, str):
             xml = xml.encode("utf-8")
-
-    builder = _ExpatBuilder()
     p = expat.ParserCreate()  # no namespace separator: names verbatim
     p.buffer_text = True
-    p.StartElementHandler = builder.start
-    p.EndElementHandler = builder.end
-    p.CharacterDataHandler = builder.chars
-    # comments / PIs: no handler registered -> dropped
+    p.StartElementHandler = handler.start
+    p.EndElementHandler = handler.end
+    p.CharacterDataHandler = handler.chars
+    p.CommentHandler = handler.boundary
+    p.ProcessingInstructionHandler = handler.boundary
     p.Parse(bytes(xml), True)
+
+
+def parse(xml) -> list:
+    """Parse XML bytes/string into Hiccup — xml.cljc:132-135."""
+    builder = _ExpatBuilder()
+    _run_expat(xml, builder)
     return builder.root
 
 
@@ -199,10 +213,9 @@ class _TextExtractor:
     """Streaming expat handler that accumulates kept text WITHOUT
     building the Hiccup tree — the extraction fast path. Merge/drop
     contract identical to _ExpatBuilder: character data buffered and
-    flushed at element boundaries (the .normalize() merge), blank-only
-    merged runs dropped, kept text verbatim; comments/PIs have no
-    handler. Differentially pinned against parse+extract_text by
-    tests (byte identity on the TEI corpus + property trees)."""
+    flushed at element, comment and PI boundaries (the .normalize()
+    merge), blank-only merged runs dropped, kept text verbatim.
+    Differentially pinned against the DOM reference by tests."""
 
     __slots__ = ("parts", "buf")
 
@@ -226,28 +239,17 @@ class _TextExtractor:
     def chars(self, data):
         self.buf.append(data)
 
+    def boundary(self, *_):
+        self._flush()
+
 
 def extract_text_streaming(xml) -> str:
     """extract_text(parse(xml)) without materializing the tree —
     ~2-3x less allocation per page, the hot path of the byte-identity
     extraction operator. Raises on malformed input exactly like
     ``parse`` (same expat), so it slots into the lenient ladder."""
-    from xml.parsers import expat
-
-    if isinstance(xml, str):
-        xml = xml.encode("utf-8")
-    elif not isinstance(xml, (bytes, bytearray, memoryview)):
-        xml = xml.read()
-        if isinstance(xml, str):
-            xml = xml.encode("utf-8")
-
     ex = _TextExtractor()
-    p = expat.ParserCreate()
-    p.buffer_text = True
-    p.StartElementHandler = ex.start
-    p.EndElementHandler = ex.end
-    p.CharacterDataHandler = ex.chars
-    p.Parse(bytes(xml), True)
+    _run_expat(xml, ex)
     ex._flush()  # trailing text outside the root is structurally
     # impossible in well-formed XML, but mirror the builder exactly
     return "".join(ex.parts)
@@ -299,22 +301,8 @@ def extract_content_streaming(xml, drop_tags=BOILERPLATE_TAGS) -> str:
     ``drop_tags`` — the boilerplate-strip fast path (raises on
     malformed input like ``parse``, so it slots into the lenient
     ladder via ``functools.partial``)."""
-    from xml.parsers import expat
-
-    if isinstance(xml, str):
-        xml = xml.encode("utf-8")
-    elif not isinstance(xml, (bytes, bytearray, memoryview)):
-        xml = xml.read()
-        if isinstance(xml, str):
-            xml = xml.encode("utf-8")
-
     ex = _ContentExtractor(drop_tags)
-    p = expat.ParserCreate()
-    p.buffer_text = True
-    p.StartElementHandler = ex.start
-    p.EndElementHandler = ex.end
-    p.CharacterDataHandler = ex.chars
-    p.Parse(bytes(xml), True)
+    _run_expat(xml, ex)
     ex._flush()
     return "".join(ex.parts)
 

@@ -12,51 +12,6 @@ import os
 from pyspark.sql import SparkSession
 
 
-def iceberg_available() -> tuple[bool, str]:
-    """Probe for an Apache Iceberg runtime in this environment.
-
-    The frontier checkpoints hand-roll Iceberg's semantics —
-    manifest-over-immutable-files (frontier/bands.py), snapshot
-    rollback + time travel (frontier/snapshots.py documents the
-    exact mapping), footer-stat file pruning (frontier/seen.py) —
-    because the sandbox ships no Iceberg jars and no catalog. This
-    probe makes that absence explicit and machine-checkable: it
-    looks for an ``iceberg-spark-runtime`` jar on the Spark jars
-    path (the artifact the SparkCatalog needs) without starting a
-    JVM. When it reports True, ``get_spark`` wires a Hadoop-type
-    Iceberg catalog behind the ``CUPHIC_ICEBERG=1`` env flag and the
-    checkpoint writers can be pointed at ``.writeTo(...).append()``
-    per the snapshots.py mapping.
-    """
-    import glob
-
-    try:
-        import pyspark
-
-        jars = os.path.join(os.path.dirname(pyspark.__file__), "jars")
-    except Exception as e:  # pragma: no cover - pyspark is baked in
-        return False, f"pyspark not importable: {e}"
-    # the explicit override WINS over any bundled jar (the user may
-    # need a specific runtime version to match their catalog) — and a
-    # set-but-missing override reports failure instead of silently
-    # falling back to a bundled jar of the wrong version
-    extra = os.environ.get("CUPHIC_ICEBERG_JAR")
-    if extra:
-        if os.path.exists(extra):
-            return True, extra
-        return False, (f"CUPHIC_ICEBERG_JAR={extra} does not exist — "
-                       "refusing to silently fall back to a bundled "
-                       "runtime; fix the path or unset the variable")
-    hits = glob.glob(os.path.join(jars, "iceberg-spark-runtime*.jar"))
-    if hits:
-        return True, hits[0]
-    return False, (f"no iceberg-spark-runtime jar under {jars} "
-                   "(and CUPHIC_ICEBERG_JAR unset) — catalog-backed "
-                   "tables unavailable; the hand-rolled manifest/"
-                   "snapshot layer in cuphic_spark.frontier is the "
-                   "documented stand-in")
-
-
 def get_spark(app_name: str = "cuphic-spark",
               cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -94,51 +49,6 @@ def get_spark(app_name: str = "cuphic-spark",
         .config("spark.sql.warehouse.dir",
                 os.environ.get("CUPHIC_WAREHOUSE", "/tmp/cuphic-warehouse"))
     )
-    # Iceberg swap-in (flagged; see iceberg_available): only when a
-    # runtime jar actually exists AND the caller opts in — absence is
-    # the documented state of this sandbox, not a silent downgrade.
-    if os.environ.get("CUPHIC_ICEBERG") == "1":
-        ok, detail = iceberg_available()
-        if not ok:
-            raise RuntimeError(f"CUPHIC_ICEBERG=1 but {detail}")
-        # getOrCreate() silently IGNORES jar/extension/catalog configs
-        # when a SparkSession already exists in the JVM — exactly the
-        # silent downgrade iceberg_available() exists to prevent.
-        # Fail loudly instead of "succeeding" with no catalog wired.
-        # getActiveSession() is THREAD-scoped — a session created on
-        # another thread (or registered only as the default) returns
-        # None here yet getOrCreate() would still silently reuse it,
-        # the exact downgrade this guard targets. Fall back to the
-        # process-wide instantiated session (PySpark keeps it in
-        # _instantiatedSession; there is no public getDefaultSession
-        # on the Python side).
-        active = (SparkSession.getActiveSession()
-                  or SparkSession._instantiatedSession)
-        if active is not None:
-            have = active.conf.get("spark.sql.catalog.cuphic", None)
-            if have is None:
-                raise RuntimeError(
-                    "CUPHIC_ICEBERG=1 but a SparkSession already "
-                    "exists WITHOUT the cuphic Iceberg catalog — "
-                    "getOrCreate() would silently ignore the jar/"
-                    "extension/catalog configs. Stop the existing "
-                    "session first (spark.stop()) or set the flag "
-                    "before the first get_spark() call")
-        # append to, never clobber, any pre-set spark.jars
-        prior = SparkConf().get("spark.jars", None)
-        jars = f"{prior},{detail}" if prior else detail
-        builder = (
-            builder
-            .config("spark.jars", jars)
-            .config("spark.sql.extensions",
-                    "org.apache.iceberg.spark.extensions."
-                    "IcebergSparkSessionExtensions")
-            .config("spark.sql.catalog.cuphic",
-                    "org.apache.iceberg.spark.SparkCatalog")
-            .config("spark.sql.catalog.cuphic.type", "hadoop")
-            .config("spark.sql.catalog.cuphic.warehouse",
-                    os.environ.get("CUPHIC_ICEBERG_WAREHOUSE",
-                                   "/tmp/cuphic-iceberg")))
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -694,58 +694,6 @@ def test_broadcast_seen_check_same_result(spark, tmp_path, oracle_state):
     assert "SortMergeJoin" not in plan
 
 
-def test_pruned_seen_check_same_result(spark, tmp_path, oracle_state):
-    """seen_check='pruned' (footer-stat file pruning of the seen side)
-    must produce identical results — pruning is IO-only."""
-    d = str(tmp_path / "pruned_crawl")
-    cfg = CrawlConfig(checkpoint_dir=d, seen_check="pruned", **CFG)
-    summary = crawl(spark, cfg)
-    assert summary["metrics"] == oracle_state.metrics
-    log = read_fetch_log(spark, cfg).orderBy("wave", "rank_in_wave").collect()
-    assert [(r.wave, r.rank_in_wave, r.url) for r in log] == \
-        [(e["wave"], e["rank_in_wave"], e["url"])
-         for e in oracle_state.fetch_log]
-    shutil.rmtree(d, ignore_errors=True)
-
-
-def test_prune_seen_files_skips_untouched_parts(spark, tmp_path):
-    """The pruned strategy's file selection must keep EXACTLY the
-    files whose part stats intersect the candidates' partition ids —
-    untouched partitions are never opened for row IO — and the pruned
-    read must return the same rows as a full read + filter."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from cuphic_spark.frontier.seen import (
-        prune_seen_paths,
-        select_seen_files,
-    )
-
-    root = tmp_path / "seen_flat"
-    os.makedirs(root)
-    for p in range(4):  # one part per file: exact pruning expected
-        tbl = pa.table({
-            "url": [f"https://h{p}.x/{i}" for i in range(10)],
-            "added_wave": pa.array([0] * 10, type=pa.int32()),
-            "host": [f"h{p}.x"] * 10,
-            "part": pa.array([p] * 10, type=pa.int32()),
-        })
-        pq.write_table(tbl, root / f"part-{p:05d}.parquet")
-
-    kept = select_seen_files([str(root)], [2])
-    assert kept == [str(root / "part-00002.parquet")]
-    kept = select_seen_files([str(root)], [1, 3])
-    assert kept == [str(root / f"part-{p:05d}.parquet") for p in (1, 3)]
-
-    got = {r.url for r in
-           prune_seen_paths(spark, [str(root)], [1, 3]).collect()}
-    assert got == {f"https://h{p}.x/{i}" for p in (1, 3) for i in range(10)}
-    # empty selection: explicit-schema empty DF, not a read error
-    assert prune_seen_paths(spark, [str(root)], []).count() == 0
-
-
 def test_score_histogram_guard_raises(spark, tmp_path, monkeypatch):
     """A fine-grained score_expr must fail LOUDLY (the distributed
     top-W collects one row per distinct score; silence here would be
@@ -1073,8 +1021,9 @@ def test_band_width_invariance_vs_oracle(spark, tmp_path, oracle_state, bw):
     ordering is byte-identical to the default-width crawl (laziness
     may delay robots-denied discovery, but can never change what
     schedules). bw=3 splits the score jitter across bands (forces
-    multi-band reads + the extension loop); bw=20000 collapses all
-    scores into one band (full-scan degenerate case)."""
+    multi-band reads); bw=20000 collapses all scores into one band
+    (full-scan degenerate case). The extension loop is pinned by
+    test_extension_rounds_match_oracle."""
     d = str(tmp_path / f"bw_{bw}")
     cfg = CrawlConfig(checkpoint_dir=d, band_width=bw, **CFG)
     summary = crawl(spark, cfg)
@@ -1084,6 +1033,46 @@ def test_band_width_invariance_vs_oracle(spark, tmp_path, oracle_state, bw):
     assert [(r.wave, r.rank_in_wave, r.url) for r in log] == \
         [(e["wave"], e["rank_in_wave"], e["url"])
          for e in oracle_state.fetch_log]  # width-INDEPENDENT ordering
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def test_extension_rounds_match_oracle(spark, tmp_path, monkeypatch):
+    """With one slot per host, politeness leaves most of a wave's
+    first read set unschedulable, so waves re-plan a larger read
+    (bands.plan_read called again in the same wave) over narrow
+    bands. Every extension round must still fetch exactly what the
+    oracle fetches, in the same order."""
+    import collections
+
+    from cuphic_spark.frontier import bands
+    from cuphic_spark.frontier import crawl as crawl_mod
+
+    kw = {**CFG, "budget_per_host": 1, "band_width": 3}
+    calls: collections.Counter = collections.Counter()
+    current = [None]
+    real_run_wave, real_plan_read = crawl_mod.run_wave, bands.plan_read
+
+    def run_wave(spark_, cfg_, wave, *args, **kwargs):
+        current[0] = wave
+        return real_run_wave(spark_, cfg_, wave, *args, **kwargs)
+
+    def plan_read(*args, **kwargs):
+        calls[current[0]] += 1
+        return real_plan_read(*args, **kwargs)
+
+    monkeypatch.setattr(crawl_mod, "run_wave", run_wave)
+    monkeypatch.setattr(bands, "plan_read", plan_read)
+    d = str(tmp_path / "extension")
+    cfg = CrawlConfig(checkpoint_dir=d, **kw)
+    summary = crawl(spark, cfg)
+    assert set(calls) == set(range(kw["n_waves"]))
+    assert max(calls.values()) > 1, calls  # some wave extended
+
+    oracle = crawl_oracle.run(**kw)
+    assert summary["metrics"] == oracle.metrics
+    log = read_fetch_log(spark, cfg).orderBy("wave", "rank_in_wave").collect()
+    assert [(r.wave, r.rank_in_wave, r.url) for r in log] == \
+        [(e["wave"], e["rank_in_wave"], e["url"]) for e in oracle.fetch_log]
     shutil.rmtree(d, ignore_errors=True)
 
 
@@ -1119,73 +1108,38 @@ def test_crash_mid_wave_resume_identical(spark, tmp_path, oracle_state):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_auto_seen_strategy_picks_pruned_when_local(spark, tmp_path,
-                                                    oracle_state):
-    """auto seen_check: candidates over the broadcast ceiling whose
-    pruned-read byte footprint passes the threshold route to the
-    footer-pruned read (data-dependent, parallelism-independent
-    decision); results stay oracle-exact. broadcast_seen_min=0 +
-    broadcast_max_candidates=1 force the over-cap branch from wave 1
-    on; the permissive byte threshold admits the pruned read even
-    though this toy universe's candidates span every seen host (see
-    test_auto_seen_routing_covers_all_strategies for the threshold
-    behavior itself)."""
-    d = str(tmp_path / "auto_pruned")
-    cfg = CrawlConfig(checkpoint_dir=d, seen_check="auto",
-                      broadcast_seen_min=0, broadcast_max_candidates=1,
-                      partitions=64, pruned_seen_byte_frac=1.0, **CFG)
+def test_failed_lineage_write_resumes_that_wave(spark, tmp_path,
+                                                oracle_state, monkeypatch):
+    """A failure in the middle of writing wave 1's ``_lineage.json``
+    must not leave a marker that counts as committed: the resume
+    re-runs wave 1 and the crawl ends identical to the oracle."""
+    import json
+
+    real_dump = json.dump
+
+    def failing_dump(obj, fh, *args, **kwargs):
+        if isinstance(obj, dict) and obj.get("wave") == 1 \
+                and "seen_strategy" in obj:
+            fh.write(json.dumps(obj)[:40])  # a torn write ...
+            raise OSError("injected: disk full")  # ... then the fault
+        return real_dump(obj, fh, *args, **kwargs)
+
+    d = str(tmp_path / "torn_lineage")
+    cfg = CrawlConfig(checkpoint_dir=d, **CFG)
+    monkeypatch.setattr(json, "dump", failing_dump)
+    with pytest.raises(OSError, match="injected"):
+        crawl(spark, cfg)
+    monkeypatch.undo()
+    assert last_complete_wave(cfg) == 0
+
     summary = crawl(spark, cfg)
-    assert summary["metrics"] == oracle_state.metrics
+    assert summary["start_wave"] == 1
+    assert summary["metrics"] == oracle_state.metrics[1:]
     log = read_fetch_log(spark, cfg).orderBy("wave", "rank_in_wave").collect()
     assert [(r.wave, r.rank_in_wave, r.url) for r in log] == \
         [(e["wave"], e["rank_in_wave"], e["url"])
          for e in oracle_state.fetch_log]
     shutil.rmtree(d, ignore_errors=True)
-
-
-def test_prune_seen_paths_keeps_partless_file_rows(spark, tmp_path):
-    """Advisor round-3 (medium): a kept file WITHOUT a part column
-    (select_seen_files keeps it conservatively) reads back with
-    part=NULL under the pinned schema — the pruned read must KEEP
-    those rows (a bare isin() evaluates NULL as false and would
-    silently drop every row of the kept file, re-emitting seen urls
-    as new)."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from cuphic_spark.frontier.seen import (
-        prune_seen_paths,
-        select_seen_files,
-    )
-
-    root = tmp_path / "seen_mixed"
-    os.makedirs(root)
-    # two modern files with part stats + one legacy file without part
-    for p in (0, 1):
-        pq.write_table(pa.table({
-            "url": [f"https://h{p}.x/{i}" for i in range(5)],
-            "added_wave": pa.array([0] * 5, type=pa.int32()),
-            "host": [f"h{p}.x"] * 5,
-            "part": pa.array([p] * 5, type=pa.int32()),
-        }), root / f"part-{p:05d}.parquet")
-    pq.write_table(pa.table({
-        "url": [f"https://legacy.x/{i}" for i in range(5)],
-        "added_wave": pa.array([0] * 5, type=pa.int32()),
-        "host": ["legacy.x"] * 5,
-    }), root / "legacy.parquet")
-
-    # selection keeps part=1 and (conservatively) the legacy file
-    kept = select_seen_files([str(root)], [1])
-    assert str(root / "legacy.parquet") in kept
-    assert str(root / "part-00001.parquet") in kept
-    assert str(root / "part-00000.parquet") not in kept
-
-    got = {r.url for r in
-           prune_seen_paths(spark, [str(root)], [1]).collect()}
-    assert got == ({f"https://h1.x/{i}" for i in range(5)}
-                   | {f"https://legacy.x/{i}" for i in range(5)})
 
 
 def test_subband_prefix_read_is_o_cap(spark, tmp_path):
@@ -1272,8 +1226,7 @@ def test_band_split_invariance_vs_oracle(spark, tmp_path, oracle_state,
 
 def test_auto_seen_routing_covers_all_strategies(spark, tmp_path,
                                                  oracle_state):
-    """Round-3 verdict item 5 — the bytes-based auto cost model: on
-    constructed inputs auto must route to each of the three seen
+    """On constructed inputs auto must route to each of the two seen
     strategies (visible in lineage), and every route produces
     oracle-identical results."""
     import json as _json
@@ -1300,107 +1253,17 @@ def test_auto_seen_routing_covers_all_strategies(spark, tmp_path,
     assert s1[0] != "broadcast"
     assert set(s1[1:]) == {"broadcast"}
 
-    # 2. over the candidate ceiling with the byte threshold at 1.0:
-    # the pruned read is always admissible -> pruned (including
-    # wave 0: the hint-less wave routes through the same byte
-    # probe). The permissive threshold is needed because this toy
-    # universe's candidates span EVERY seen host, so pruning saves
-    # ~0 bytes — which the byte model detects (case 3); the old
-    # partition-count rule wrongly chose pruned.
-    d2 = str(tmp_path / "route_pruned")
+    # 2. over the candidate ceiling: broadcast is inadmissible on
+    # every wave -> shuffle
+    d2 = str(tmp_path / "route_shuffle")
     cfg = CrawlConfig(checkpoint_dir=d2, seen_check="auto",
                       broadcast_seen_min=0, broadcast_max_candidates=1,
-                      partitions=64, pruned_seen_byte_frac=1.0, **CFG)
+                      **CFG)
     assert crawl(spark, cfg)["metrics"] == oracle_state.metrics
-    s2 = strategies(d2)
-    assert "broadcast" not in s2 and "pruned" in s2
+    assert set(strategies(d2)) == {"shuffle"}
 
-    # 3. same ceiling at the DEFAULT threshold: candidates hit every
-    # seen host's partition, kept bytes ~= total bytes, the pruned
-    # read saves nothing -> shuffle
-    d3 = str(tmp_path / "route_shuffle")
-    cfg = CrawlConfig(checkpoint_dir=d3, seen_check="auto",
-                      broadcast_seen_min=0, broadcast_max_candidates=1,
-                      partitions=64, **CFG)
-    assert crawl(spark, cfg)["metrics"] == oracle_state.metrics
-    s3 = strategies(d3)
-    assert "broadcast" not in s3 and "shuffle" in s3
-    assert "pruned" not in s3
-
-    for d in (d1, d2, d3):
+    for d in (d1, d2):
         shutil.rmtree(d, ignore_errors=True)
-
-
-def test_select_seen_files_byte_stats(tmp_path):
-    """The auto router's cost signal: select_seen_files(with_stats=
-    True) reports the kept and total byte footprints from the same
-    footer walk that picks the files."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from cuphic_spark.frontier.seen import select_seen_files
-
-    root = tmp_path / "seen_bytes"
-    os.makedirs(root)
-    sizes = {}
-    for p in range(4):
-        n = 10 * (p + 1)  # different sizes per part
-        pq.write_table(pa.table({
-            "url": [f"https://h{p}.x/{i}" for i in range(n)],
-            "added_wave": pa.array([0] * n, type=pa.int32()),
-            "host": [f"h{p}.x"] * n,
-            "part": pa.array([p] * n, type=pa.int32()),
-        }), root / f"part-{p:05d}.parquet")
-        sizes[p] = os.path.getsize(root / f"part-{p:05d}.parquet")
-
-    kept, kb, tb = select_seen_files([str(root)], [1, 3],
-                                     with_stats=True)
-    assert kept == [str(root / f"part-{p:05d}.parquet") for p in (1, 3)]
-    assert kb == sizes[1] + sizes[3]
-    assert tb == sum(sizes.values())
-    # plain call keeps its original signature
-    assert select_seen_files([str(root)], [1, 3]) == kept
-
-
-def test_iceberg_probe_documents_absence(monkeypatch):
-    """Round-3 verdict item 8: the Iceberg swap-in is gated on an
-    explicit runtime probe. In this sandbox the probe must report
-    absence with an actionable reason, and CUPHIC_ICEBERG=1 must fail
-    loudly instead of silently running without a catalog."""
-    from cuphic_spark.session import get_spark, iceberg_available
-
-    ok, detail = iceberg_available()
-    assert not ok
-    assert "iceberg-spark-runtime" in detail
-
-    monkeypatch.setenv("CUPHIC_ICEBERG", "1")
-    with pytest.raises(RuntimeError, match="CUPHIC_ICEBERG=1 but"):
-        get_spark()
-
-    # a set-but-missing explicit jar must NOT silently fall back
-    monkeypatch.setenv("CUPHIC_ICEBERG_JAR", "/no/such/iceberg.jar")
-    ok2, detail2 = iceberg_available()
-    assert not ok2 and "/no/such/iceberg.jar" in detail2
-
-
-def test_iceberg_flag_refuses_stale_active_session(spark, monkeypatch,
-                                                   tmp_path):
-    """Advisory pin: with CUPHIC_ICEBERG=1 and a jar present,
-    builder.getOrCreate() would silently REUSE an existing
-    SparkSession, ignoring the jar/extension/catalog configs — the
-    exact silent downgrade the probe exists to prevent. get_spark
-    must fail loudly when the live session lacks the catalog."""
-    from cuphic_spark.session import get_spark
-
-    jar = tmp_path / "iceberg-spark-runtime-9.9.9.jar"
-    jar.write_bytes(b"PK\x03\x04")
-    monkeypatch.setenv("CUPHIC_ICEBERG", "1")
-    monkeypatch.setenv("CUPHIC_ICEBERG_JAR", str(jar))
-    # `spark` fixture = a live session with no cuphic catalog wired
-    with pytest.raises(RuntimeError, match="already exists WITHOUT"):
-        get_spark()
 
 
 def test_plan_read_properties_and_oracle_mirror():
