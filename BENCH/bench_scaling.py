@@ -271,7 +271,6 @@ if isinstance(after, list):
                "job_sec_sum": round(sum(e - s for s, e in ivs), 3)}}
 
 sched = sum(m["scheduled"] for m in s["metrics"])
-jobs = [t.get("spark_jobs") for t in s["timings"]]
 print(json.dumps({{"cpus": {cpus}, "wave_cap": {wave_cap},
                    "page_weight": {page_weight},
                    "timed_resume": {timed_resume},
@@ -279,7 +278,6 @@ print(json.dumps({{"cpus": {cpus}, "wave_cap": {wave_cap},
                    "partitions": {part_expr},
                    "sec": round(dt, 3), "scheduled": sched,
                    "urls_per_sec": round(sched / dt, 1),
-                   "jobs_per_wave": jobs,
                    "job_gap_decomp": decomp,
                    "wave_timings": s["timings"]}}))
 shutil.rmtree(d, ignore_errors=True)
@@ -395,7 +393,6 @@ def crawl_scaling(cases=((200_000, 0), (200_000, 30),
                "urls_per_sec_8": r8["urls_per_sec"],
                "urls_per_sec_32": r32["urls_per_sec"],
                "raw_urls_per_sec": raw,
-               "jobs_per_wave_32": r32.get("jobs_per_wave"),
                "gap_decomp_8": r8.get("job_gap_decomp"),
                "gap_decomp_32": r32.get("job_gap_decomp"),
                "speedup": round(speedup, 2),

@@ -827,11 +827,11 @@ def q_winnow_fingerprint(spark, sf_dir):
 def q_dedup_clusters(spark, sf_dir):
     """Full near-dup RESOLUTION chain (iterative!): MinHash LSH
     candidates -> exact Jaccard verify -> connected components
-    (min-label propagation to fixpoint). The corpus plants CHAINED
-    near-dup triples (base, +' tail', +' tail tail' for doc_id%10==0)
-    so transitive clustering actually exercises multi-hop label
-    propagation. The DuckDB oracle replicates the whole chain,
-    closing the components with a recursive CTE."""
+    (large-star/small-star contraction to fixpoint). The corpus plants
+    CHAINED near-dup triples (base, +' tail', +' tail tail' for
+    doc_id%10==0) so transitive clustering actually exercises
+    multi-hop components. The DuckDB oracle replicates the whole
+    chain, closing the components with a recursive CTE."""
     from cuphic_spark.operators.dedup import dedup_clusters
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
@@ -844,26 +844,6 @@ def q_dedup_clusters(spark, sf_dir):
                   (F.col("doc_id") + 20000).alias("doc_id"),
                   F.concat("text", F.lit(" tail tail")).alias("text"))))
     return dedup_clusters(corpus)
-
-
-def q_dedup_clusters_star(spark, sf_dir):
-    """Same resolution chain, components via alternating large-star/
-    small-star contraction (O(log n) rounds — the deep-component
-    scale path; see operators/dedup.connected_components_star).
-    Identical clusters by definition, so it shares dedup_clusters'
-    recursive-CTE oracle."""
-    from cuphic_spark.operators.dedup import dedup_clusters
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    planted = docs.where(F.col("doc_id") % 10 == 0)
-    corpus = (docs
-              .unionByName(planted.select(
-                  (F.col("doc_id") + 10000).alias("doc_id"),
-                  F.concat("text", F.lit(" tail")).alias("text")))
-              .unionByName(planted.select(
-                  (F.col("doc_id") + 20000).alias("doc_id"),
-                  F.concat("text", F.lit(" tail tail")).alias("text"))))
-    return dedup_clusters(corpus, method="star")
 
 
 def q_event_sessions(spark, sf_dir):
@@ -970,8 +950,8 @@ def q_crawl_fetch_log(spark, sf_dir):
 def _wildcard_robots_body(h: int) -> str:
     """Deterministic FULL-RFC robots.txt for host h: wildcards, ``$``
     anchors, and Allow rules no prefix dim can express, so the wave
-    loop must take the rules_dim/denied_by_rules path (robots_mode
-    auto -> full). An ``otherbot`` group and a deny-everything ``*``
+    loop must take the rules_dim/denied_by_rules path (robots.crawl_dim
+    picks full). An ``otherbot`` group and a deny-everything ``*``
     group must both be ignored for cuphicbot. Rule shapes: even
     hosts deny /private/ but Allow the LONGER /private/doc/1* back
     (longest-match); h%3==0 hosts add the anchored wildcard
@@ -1688,7 +1668,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fingerprint": q_fingerprint,
         "ngram_jaccard_adjacent": q_ngram_jaccard_adjacent,
         "dedup_clusters": q_dedup_clusters,
-        "dedup_clusters_star": q_dedup_clusters_star,
         "simhash_pairs": q_simhash_pairs,
         "winnow_fingerprint": q_winnow_fingerprint,
         "event_sessions": q_event_sessions,
@@ -2059,59 +2038,6 @@ def oracle_sql() -> dict[str, str]:
             FROM cand WHERE bit_count(xor(ua, ub)) <= 3
         """,
         "dedup_clusters": """
-            WITH RECURSIVE
-            corpus AS (
-              SELECT doc_id, text FROM documents
-              UNION ALL
-              SELECT doc_id + 10000, text || ' tail' FROM documents
-              WHERE doc_id % 10 = 0
-              UNION ALL
-              SELECT doc_id + 20000, text || ' tail tail' FROM documents
-              WHERE doc_id % 10 = 0),
-            sh AS (
-              SELECT doc_id,
-                     list_transform(range(len(w) - 2),
-                       i -> array_to_string(w[(i+1):(i+3)], ' ')) AS s
-              FROM (SELECT doc_id, string_split(text, ' ') AS w
-                    FROM corpus) WHERE len(w) >= 3),
-            sig AS (
-              SELECT doc_id,
-                     [list_aggregate(list_transform(s,
-                        x -> substr(md5(((2*b) // 4) || ':' || x),
-                                    ((2*b) % 4) * 8 + 1, 8)),
-                        'min') || '|' ||
-                      list_aggregate(list_transform(s,
-                        x -> substr(md5(((2*b+1) // 4) || ':' || x),
-                                    ((2*b+1) % 4) * 8 + 1, 8)),
-                        'min')
-                      FOR b IN [0, 1, 2, 3]] AS bands
-              FROM sh),
-            bandrows AS (
-              SELECT doc_id, b AS band, bands[b + 1] AS band_val
-              FROM sig, UNNEST(range(4)) AS t(b)),
-            cand AS (
-              SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
-              FROM bandrows l JOIN bandrows r
-                ON l.band = r.band AND l.band_val = r.band_val
-               AND l.doc_id < r.doc_id),
-            shd AS (SELECT doc_id, list_distinct(s) AS s FROM sh),
-            edges AS (
-              SELECT doc_a AS u, doc_b AS v FROM cand c
-              JOIN shd a ON a.doc_id = c.doc_a
-              JOIN shd b ON b.doc_id = c.doc_b
-              WHERE (len(list_intersect(a.s, b.s)) * 1000)
-                    // len(list_distinct(list_concat(a.s, b.s))) >= 800),
-            sym AS (SELECT u, v FROM edges
-                    UNION SELECT v, u FROM edges),
-            reach(node, label) AS (
-              SELECT u, u FROM sym
-              UNION
-              SELECT s.v, r.label FROM reach r
-              JOIN sym s ON s.u = r.node)
-            SELECT node AS doc_id, min(label)::BIGINT AS component
-            FROM reach GROUP BY node
-        """,
-"dedup_clusters_star": """
             WITH RECURSIVE
             corpus AS (
               SELECT doc_id, text FROM documents

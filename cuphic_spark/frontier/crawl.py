@@ -51,6 +51,7 @@ from __future__ import annotations
 import json
 import os
 import threading
+import warnings
 from dataclasses import dataclass, field
 from xml.parsers import expat as _expat
 
@@ -129,11 +130,10 @@ class CrawlConfig:
     # waves (0 = off; offline compaction via snapshots.compact_seen)
     page_weight: int = 30         # filler paragraphs per synthetic
     # page (~4 KB default; Common-Crawl-style bodies = 100-700)
-    seen_check: str = "auto"      # 'shuffle' | 'broadcast' | 'auto':
-    # broadcast = two-phase semi/anti where the seen table only
-    # STREAMS (never shuffles) — the steady-state choice once seen
-    # dwarfs a wave's candidates; auto switches at broadcast_seen_min
-    broadcast_seen_min: int = 5_000_000
+    broadcast_seen_min: int = 5_000_000  # the seen check's router
+    # picks broadcast (two-phase semi/anti where the seen table only
+    # STREAMS, never shuffles — the steady-state choice once seen
+    # dwarfs a wave's candidates) from this seen size on, else shuffle
     broadcast_max_candidates: int = 2_000_000  # hard candidate ceiling
     # for the broadcast strategy: a wave whose PREVIOUS links_distinct
     # exceeded this falls back to shuffle (advisor: forcing
@@ -151,9 +151,6 @@ class CrawlConfig:
     # split per band into score-sorted runs of ~this many rows, so a
     # band far larger than the wave cap is read as a run PREFIX, not
     # whole (round-3 verdict item 2). 0 = auto (the wave cap)
-    link_extract: str = "streaming"  # 'streaming' (tree-free expat
-    # twin of the fixed link pattern, default) | 'kernel' (general
-    # engine scan); results pinned identical by tests
     robots_ttl_waves: int = 0     # robots-cache TTL in waves: epoch =
     # wave // ttl selects the rules version (0 = static spec, the
     # deterministic default); oracle models the same schedule
@@ -166,26 +163,6 @@ class CrawlConfig:
     # the status and the wave metrics count redirects. A custom
     # fetch_fn reports real statuses via the (status, location,
     # body) return shape.
-    aqe: str = "off"              # crawl-session AQE profile: 'off'
-    # (default) disables spark.sql.adaptive for the duration of the
-    # crawl (restoring the caller's setting on exit), 'inherit'
-    # leaves the session untouched. The crawl pre-partitions and
-    # host-salts explicitly, so AQE's runtime re-planning buys
-    # nothing inside a wave while its per-stage materialization
-    # barriers cost ~15 extra Spark jobs per wave (measured: 25
-    # jobs/wave AQE-on vs 10 off; steady-wave 8->32 speedup 1.94x vs
-    # 2.12x — BENCH/crawl_steady_r5.json aqe_off_experiment).
-    # Results are byte-identical either way (the determinism
-    # contract holds at any parallelism/plan): this knob is purely a
-    # scheduling-overhead profile.
-    broadcast_timeout: int = 3600  # spark.sql.broadcastTimeout for
-    # the crawl session (restored on exit; <= 0 leaves it untouched).
-    # The seen-check broadcast side's lineage embeds the wave's whole
-    # fetch+parse chain — its BUILD time grows with wave_cap, so the
-    # 300 s Spark default is a latent production failure (measured:
-    # a 4M-url bootstrap wave on 8 cores exceeded it). The router
-    # additionally never broadcasts without an affirmative volume
-    # hint; this timeout covers the legitimately-broadcast waves.
     extra: dict = field(default_factory=dict)
 
 
@@ -300,14 +277,15 @@ def _hrefs_streaming(xml) -> list[str]:
 
 def _fetch_extract(scheduled: DataFrame, universe: int,
                    page_weight: int = 30, dropped_acc=None,
-                   link_extract: str = "streaming",
                    n_hosts: int = webgraph.N_HOSTS,
                    fetch_fn=None, redirect_mod: int = 0) -> DataFrame:
     """Simulated fetch FUSED with link extraction: ONE Arrow stage
-    generates the page body, parses it through the lenient ladder,
-    and runs the cuphic kernel scan for ``[:a {:href href} ???]`` —
-    the raw html never crosses the executor boundary. Two rejected
-    shapes, both measured at Common-Crawl page weights (~40 KB):
+    generates the page body and runs the tree-free expat twin of the
+    link pattern ``[:a {:href href} ???]`` (``_hrefs_streaming``, the
+    fixed-pattern specialization of the kernel scan — no Hiccup tree
+    per page) through the lenient ladder — the raw html never crosses
+    the executor boundary. Two rejected shapes, both measured at
+    Common-Crawl page weights (~40 KB):
 
     * fetch stage emitting html + relational match over the nodes
       table — materializes ~300 nested-struct rows per page through
@@ -321,12 +299,6 @@ def _fetch_extract(scheduled: DataFrame, universe: int,
     page); a production variant that persists raw pages would write
     them from this same stage. Unsalvageable pages are counted via
     ``dropped_acc`` (surfaced as the pages_dropped metric).
-
-    ``link_extract='streaming'`` (default) runs the tree-free expat
-    twin of the link pattern through the same lenient ladder — the
-    fixed-pattern specialization of the fused scan (no Hiccup tree
-    per page). ``'kernel'`` keeps the general engine scan; both are
-    pinned identical by tests.
 
     ``fetch_fn(url) -> bytes | (status, location, bytes)`` is the
     pluggable FETCHER (default: the deterministic webgraph simulator
@@ -363,31 +335,6 @@ def _fetch_extract(scheduled: DataFrame, universe: int,
                                      n_hosts).encode()
 
     def gen(batches):
-        if link_extract == "streaming":
-            def page_hrefs(data):
-                hrefs, _mode = parse_html_lenient(
-                    data, parser=_hrefs_streaming)
-                return hrefs
-        else:
-            from ..kernel import reader
-            from ..kernel.match import Matcher
-            from ..kernel.scan import scan as kernel_scan
-
-            matcher = Matcher(reader.parse("[:a {:href href} ???]"))
-
-            def page_hrefs(data):
-                tree, _mode = parse_html_lenient(data)
-                if tree is None:
-                    return None
-                hrefs: list[str] = []
-                for _nid, _node, results in kernel_scan(tree, matcher):
-                    b = results[0]
-                    if b is not None:
-                        for sym, val in b.items():
-                            if getattr(sym, "name", None) == "href":
-                                hrefs.append(val)
-                return hrefs
-
         import pyarrow as pa
 
         # mapInArrow (round 8): scheduling columns ride through the
@@ -409,7 +356,8 @@ def _fetch_extract(scheduled: DataFrame, universe: int,
                 if 300 <= status < 400 and location:
                     hrefs = [location]
                 else:
-                    hrefs = page_hrefs(data)
+                    hrefs, _mode = parse_html_lenient(
+                        data, parser=_hrefs_streaming)
                     if hrefs is None:
                         if dropped_acc is not None:
                             dropped_acc.add(1)
@@ -469,17 +417,106 @@ def _memo_cols(key, build):
     return val
 
 
+@dataclass
+class Wave:
+    """One scheduled wave: run_wave's write-ready plans, routing
+    decisions and observed metrics, carried through the wave's commit
+    by the crawl loop (which fills in the commit fields below).
+
+    ``frontier_delta`` carries the band/part/salt layout columns
+    (write_wave_frontier prepped=True); ``seen_delta_out`` is the
+    write-ready seen-delta layout; ``seen_delta`` itself stays the
+    plain projection the bloom/cuckoo maintenance reads straight off
+    the new_rows cache (the layouts' repartition would cost those
+    folds an extra shuffle). ``caches`` are the DataFrames to
+    unpersist once the wave is committed. ``observed`` maps each
+    metric group to (Observation, the cached DataFrame it observes,
+    its aggregates): ``fetch`` rides the fetch_log write, ``links``
+    and ``new`` the seen-delta write."""
+    wave: int
+    plan: object                  # bands.ReadPlan
+    frontier_delta: DataFrame
+    seen_delta: DataFrame
+    seen_delta_out: DataFrame
+    fetch_log: DataFrame
+    delta_counts: dict
+    caches: list
+    seen_strategy: str            # routing decisions -> lineage
+    cuckoo_probed: bool
+    n_denied: int
+    dropped: object               # pages_dropped accumulator
+    observed: dict
+    new_score_base: int | None    # None under overridden scoring
+    dir: str = ""
+    f_log: object = None          # the fetch_log write's future
+    extra_metrics: dict = field(default_factory=dict)
+    timings: dict = field(default_factory=dict)
+    lineage: dict = field(default_factory=dict)
+
+    def get(self, name: str) -> dict:
+        """Observed metrics, with a fallback for degenerate waves: a
+        provably-empty branch can be optimizer-folded to an empty
+        LocalRelation, dropping the CollectMetrics row (seen at
+        frontier exhaustion). The fallback aggregates the CACHED
+        DataFrame — trivial work in exactly the case it triggers.
+        The except is surfaced as a warning (advisor round-2: a
+        GENUINE failure — misattached observation, JVM error — must
+        not be silently absorbed into a recomputation); the intended
+        folded-empty-plan trigger yields all-zero fallback metrics,
+        so any non-degenerate warning in logs is a real bug signal."""
+        obs, source, aggs = self.observed[name]
+        try:
+            return obs.get
+        except Exception as e:
+            warnings.warn(
+                f"observation {getattr(obs, '_name', '?')} unavailable "
+                f"({type(e).__name__}: {str(e)[:120]}); recomputing from "
+                "the cached DataFrame — expected only at frontier "
+                "exhaustion (folded-empty plans drop CollectMetrics)")
+            return source.agg(*aggs).collect()[0].asDict()
+
+    def new_score_counts(self):
+        """Per-score counts of the wave's new rows, read from the new
+        observation (rides the seen-delta write) — None when
+        non-default scoring made the conditional sums unavailable
+        (caller then runs the data-derived counts job)."""
+        if self.new_score_base is None:
+            return None
+        m = self.get("new")
+        return [(self.new_score_base + r, int(m[f"c{r}"]))
+                for r in range(7) if int(m[f"c{r}"])]
+
+    def metrics(self) -> dict:
+        """The wave's metrics row — valid only after the checkpoint
+        writes ran (each observation rides on a write)."""
+        fetch_m, links_m, new_m = (self.get(k)
+                                   for k in ("fetch", "links", "new"))
+        return {
+            "wave": self.wave,
+            "scheduled": int(fetch_m["n"]),
+            "fetched": int(fetch_m["n"]),
+            "denied": int(self.n_denied),
+            "links_total": int(links_m["t"]),
+            "links_distinct": int(links_m["d"]),
+            "new_urls": int(new_m["n"]),
+            "dupes": int(links_m["d"]) - int(new_m["n"]),
+            "bytes": int(fetch_m["b"]),
+            "pages_dropped": int(self.dropped.value),
+            "redirects": int(fetch_m["r"]),
+        }
+
+
 def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
-             manifest: dict, seen: DataFrame,
+             manifest: dict, seen: DataFrame, pool,
              n_seen_hint: int | None = None,
              cuckoo_shards: DataFrame | None = None,
              bloom: bytes | None = None,
              prev_links_hint: int | None = None,
              bloom_m: int | None = None,
-             bloom_shards: DataFrame | None = None,
-             pool=None):
-    """Returns (frontier_delta_prepped, seen_delta, fetch_log, finish,
-    caches, plan, seen_strategy, delta_counts, seen_delta_out).
+             bloom_shards: DataFrame | None = None) -> Wave:
+    """Schedules one wave and builds its lazy commit chain; returns
+    the Wave. ``pool`` (the crawl's thread pool) runs the stats job
+    and the layout build while the rest of the chain is constructed.
 
     The wave never touches the whole frontier: ``manifest`` (see
     frontier/bands.py) describes the frontier as score-band files
@@ -505,9 +542,8 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
       metric (scheduled, bytes, links, new urls) rides on those
       writes via ``observe()``: zero additional actions.
 
-    ``finish()`` must be called AFTER the checkpoint writes ran; it
-    reads the observations and returns the metrics row. ``caches``
-    are the DataFrames to unpersist once the wave is committed.
+    ``Wave.metrics()`` must be called AFTER the checkpoint writes ran;
+    it reads the observations and returns the metrics row.
     """
     from . import bands as bands_mod
 
@@ -517,41 +553,15 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
     robots_full = False
     if robots_txt_fn is not None:
         # production robots source: (host, robots_txt) bodies ->
-        # RFC 9309 parse -> a broadcast dim in one of two shapes:
-        # the prefix fast path (host, deny_prefixes) when every rule
-        # is a plain Disallow prefix, else the FULL RFC dim (host,
-        # robots_rules) whose longest-match/Allow-wins verdict is
-        # evaluated row-local by denied_by_rules — same broadcast
-        # join, zero extra shuffles or jobs either way. Mode
-        # ``auto`` (default) decides with one bounded limit(1) probe
-        # (the same job prefix_rules spends on validation); the spec
-        # path below stays the oracle-pinned default
-        from .robots import (
-            _non_prefix_probe,
-            _prefix_dim,
-            _select_group,
-            parse_robots,
-            prefix_rules,
-            rules_dim,
-        )
+        # RFC 9309 parse -> a broadcast dim whose shape
+        # robots.crawl_dim picks per corpus; the spec path below
+        # stays the oracle-pinned default
+        from .robots import crawl_dim, parse_robots
 
-        agent = cfg.extra.get("robots_agent", "cuphicbot")
-        mode = cfg.extra.get("robots_mode", "auto")
-        if mode not in ("auto", "prefix", "full"):
-            raise ValueError(f"robots_mode must be auto|prefix|full, "
-                             f"got {mode!r}")
-        parsed = parse_robots(robots_txt_fn(spark, robots_version,
-                                            cfg.n_hosts))
-        if mode == "auto":
-            rules = _select_group(parsed, "rule", agent)
-            mode = "full" if _non_prefix_probe(rules) else "prefix"
-            robots = (rules_dim(parsed, agent=agent) if mode == "full"
-                      else _prefix_dim(rules))
-        elif mode == "full":
-            robots = rules_dim(parsed, agent=agent)
-        else:  # explicit prefix: keep the loud refusal on wildcards
-            robots = prefix_rules(parsed, agent=agent)
-        robots_full = mode == "full"
+        robots, robots_full = crawl_dim(
+            parse_robots(robots_txt_fn(spark, robots_version,
+                                       cfg.n_hosts)),
+            agent=cfg.extra.get("robots_agent", "cuphicbot"))
     else:
         robots = robots_rules(spark, version=robots_version,
                               n_hosts=cfg.n_hosts)
@@ -575,8 +585,10 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         F.desc("score"), F.asc("url"))
     w_score = Window.partitionBy("score").orderBy(F.asc("url"))
     # cumulative offset of each score group = rows in strictly higher
-    # score groups (see the top-W comment below)
-    w_off = (Window.orderBy(F.desc("score"))
+    # score groups (see the top-W comment below); partitioned by the
+    # stats agg's other key, so the den=false offsets are exactly the
+    # unpartitioned ones without a single-partition window
+    w_off = (Window.partitionBy("den").orderBy(F.desc("score"))
              .rowsBetween(Window.unboundedPreceding, -1))
     import uuid
     frontier = ranked = None
@@ -651,8 +663,7 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         # round the optimistically built chain is discarded unrun
         # (fresh Observations/accumulator per iteration, caches
         # unpersisted) and rebuilt over the extended read set.
-        f_stats = (pool.submit(stats_q.collect)
-                   if pool is not None else None)
+        f_stats = pool.submit(stats_q.collect)
 
         # consumed rows BELOW the cut: physically read (their runs
         # span the cut) but semantically unread — pass through to the
@@ -671,7 +682,7 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         # windows ordered by url (distributed across score groups) ->
         # global rank = offset + in-group rank. Identical total order
         # (score desc, url asc), no driver merge. The offsets are
-        # computed IN-PLAN (tiny agg + single-partition window over
+        # computed IN-PLAN (tiny agg + per-den window over
         # <= max_score_histogram rows + broadcast join) rather than
         # collected to the driver: a score group is rankable iff the
         # rows above it don't already cover the cap (off < cap),
@@ -681,11 +692,11 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         # the budgeted per-score counts ARE the stats agg's !den rows —
         # read them from the cached stats_q (warm once the stats job
         # ran) rather than re-aggregating the budgeted rows
-        offs = (stats_q.where(~F.col("den")).select("score", "cnt")
+        offs = (stats_q
                 .withColumn("off",
                             F.coalesce(F.sum("cnt").over(w_off),
                                        F.lit(0)))
-                .where(F.col("off") < cfg.wave_cap)
+                .where(~F.col("den") & (F.col("off") < cfg.wave_cap))
                 .select("score", "off"))
         with_rank = (budgeted
                      .join(F.broadcast(offs), "score", "left")
@@ -729,7 +740,6 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         fetched = (_fetch_extract(scheduled, cfg.universe,
                                   cfg.page_weight,
                                   dropped_acc=dropped_acc,
-                                  link_extract=cfg.link_extract,
                                   n_hosts=cfg.n_hosts,
                                   fetch_fn=cfg.extra.get("fetch_fn"),
                                   redirect_mod=cfg.redirect_mod)
@@ -742,12 +752,12 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
             lambda: canonicalize_cols(F.col("href"),
                                       F.col("base_url")).alias("url")))
         obs_links = Observation(f"links_w{wave}_{tag}")
+        links_aggs = _memo_cols("links_aggs", lambda: [
+            F.count(F.lit(1)).alias("d"),
+            F.coalesce(F.sum("n_refs"), F.lit(0)).alias("t")])
         distinct_links = (canon.groupBy("url")
                           .agg(F.count("*").alias("n_refs"))
-                          .observe(obs_links,
-                                   F.count(F.lit(1)).alias("d"),
-                                   F.coalesce(F.sum("n_refs"),
-                                              F.lit(0)).alias("t"))
+                          .observe(obs_links, *links_aggs)
                           .cache())
 
         use_bloom = (bloom is not None or bloom_shards is not None) \
@@ -780,43 +790,25 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
 
         # the broadcast strategy forces F.broadcast(candidates): its
         # correctness is unconditional but its MEMORY is bounded only by
-        # the candidate set, so both auto and explicit 'broadcast' fall
-        # back to shuffle when the previous wave's distinct-link volume
-        # (the best available predictor of this wave's candidates) exceeds
-        # the configured ceiling (advisor round-2 finding).
-        over_candidate_cap = (prev_links_hint is not None
-                              and prev_links_hint > cfg.broadcast_max_candidates)
-        if cfg.seen_check == "auto":
-            big_seen = (n_seen_hint is not None
-                        and n_seen_hint >= cfg.broadcast_seen_min)
-            # auto broadcasts only on an AFFIRMATIVE volume prediction: a
-            # MISSING hint (wave 0, or a resume without lineage metrics)
-            # must route conservatively — a first wave at production
-            # scale has unbounded candidates, and broadcasting them both
-            # risks driver memory (the cap exists for exactly this) and
-            # races spark.sql.broadcastTimeout, because the broadcast
-            # side's lineage embeds the whole fetch+parse chain (measured:
-            # the 4M-wave bootstrap blew the 300 s default on 8 cores —
-            # BENCH/crawl_steady_r7.json note)
-            can_broadcast = (prev_links_hint is not None
-                             and prev_links_hint
-                             <= cfg.broadcast_max_candidates)
-            if big_seen and can_broadcast:
-                seen_strategy = "broadcast"
-            else:
-                seen_strategy = "shuffle"
-        else:
-            seen_strategy = cfg.seen_check
-            if seen_strategy == "broadcast" and over_candidate_cap:
-                import warnings
-
-                warnings.warn(
-                    f"seen_check='broadcast' with prev links_distinct="
-                    f"{prev_links_hint} > broadcast_max_candidates="
-                    f"{cfg.broadcast_max_candidates}; falling back to "
-                    "'shuffle' for this wave (broadcasting an unbounded "
-                    "candidate set can exceed driver memory)")
-                seen_strategy = "shuffle"
+        # the candidate set, so it is admissible only while the previous
+        # wave's distinct-link volume (the best available predictor of
+        # this wave's candidates) is under the configured ceiling
+        # (advisor round-2 finding). The router broadcasts only on that
+        # AFFIRMATIVE volume prediction: a MISSING hint (wave 0, or a
+        # resume without lineage metrics) must route conservatively — a
+        # first wave at production scale has unbounded candidates, and
+        # broadcasting them both risks driver memory (the cap exists for
+        # exactly this) and races spark.sql.broadcastTimeout, because
+        # the broadcast side's lineage embeds the whole fetch+parse chain
+        # (measured: the 4M-wave bootstrap blew the 300 s default on 8
+        # cores — BENCH/crawl_steady_r7.json note)
+        seen_strategy = (
+            "broadcast" if (n_seen_hint is not None
+                            and n_seen_hint >= cfg.broadcast_seen_min
+                            and prev_links_hint is not None
+                            and prev_links_hint
+                            <= cfg.broadcast_max_candidates)
+            else "shuffle")
 
         candidates = distinct_links
         use_cuckoo = (cfg.use_cuckoo and cuckoo_shards is not None
@@ -933,23 +925,22 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
             late = new_rows.select("score")
             return seen_out, prepped, early, late
 
-        f_layouts = (pool.submit(_build_layouts)
-                     if pool is not None else None)
+        f_layouts = pool.submit(_build_layouts)
 
+        fetch_aggs = _memo_cols("fetch_aggs", lambda: [
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.sum("bytes"), F.lit(0)).alias("b"),
+            F.coalesce(F.sum(((F.col("status") >= 300)
+                              & (F.col("status") < 400))
+                             .cast("long")), F.lit(0)).alias("r")])
         fetch_log = (fetched.select(
             F.lit(wave).alias("wave"), "rank_in_wave", "url",
             "host", "depth", "score", "status", "bytes")
-            .observe(obs_fetch,
-                     F.count(F.lit(1)).alias("n"),
-                     F.coalesce(F.sum("bytes"), F.lit(0)).alias("b"),
-                     F.coalesce(F.sum(((F.col("status") >= 300)
-                                       & (F.col("status") < 400))
-                                      .cast("long")), F.lit(0)).alias("r")))
+            .observe(obs_fetch, *fetch_aggs))
         # ---- join the stats job: the extension decision (and the
         # coarse-score guard) needs the collected histogram; under no
         # extension the chain built above is the wave's final plan ----
-        stats = (f_stats.result() if f_stats is not None
-                 else stats_q.collect())
+        stats = f_stats.result()
         if len(stats) > cfg.max_score_histogram:
             raise ValueError(
                 f"score histogram has {len(stats)} distinct (den, score) "
@@ -962,9 +953,7 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         n_budgeted = sum(r.cnt for r in stats if not r.den)
         if n_budgeted >= cfg.wave_cap or plan.exhausted:
             (seen_delta_out, frontier_delta_prepped,
-             early_counts_df, late_counts_df) = (
-                f_layouts.result() if f_layouts is not None
-                else _build_layouts())
+             early_counts_df, late_counts_df) = f_layouts.result()
             break
         # deterministic extension: re-plan with a larger coverage
         # target (plan_read is monotone in need — the new read set is
@@ -977,11 +966,9 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         # if it has not started, else wait it out (its closure reads
         # this iteration's variables, which the re-plan rebinds) and
         # surface a failure instead of dropping it with the future
-        if f_layouts is not None and not f_layouts.cancel():
+        if not f_layouts.cancel():
             exc = f_layouts.exception()
             if exc is not None:
-                import warnings
-
                 warnings.warn(
                     f"wave {wave}: discarded layout build failed "
                     f"({type(exc).__name__}: {str(exc)[:120]}); the "
@@ -1005,98 +992,6 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
             break
         offsets[s] = cum
         cum += c
-
-    def _obs_get(obs, fallback):
-        """Observed metrics, with a fallback for degenerate waves: a
-        provably-empty branch can be optimizer-folded to an empty
-        LocalRelation, dropping the CollectMetrics row (seen at
-        frontier exhaustion). The fallback aggregates the CACHED
-        DataFrame — trivial work in exactly the case it triggers.
-        The except is surfaced as a warning (advisor round-2: a
-        GENUINE failure — misattached observation, JVM error — must
-        not be silently absorbed into a recomputation); the intended
-        folded-empty-plan trigger yields all-zero fallback metrics,
-        so any non-degenerate warning in logs is a real bug signal."""
-        try:
-            return obs.get
-        except Exception as e:
-            import warnings
-
-            warnings.warn(
-                f"observation {getattr(obs, '_name', '?')} unavailable "
-                f"({type(e).__name__}: {str(e)[:120]}); recomputing from "
-                "the cached DataFrame — expected only at frontier "
-                "exhaustion (folded-empty plans drop CollectMetrics)")
-            return fallback()
-
-    def finish() -> dict:
-        """Read the wave's observed metrics — valid only after the
-        checkpoint writes ran (each observation rides on a write)."""
-        fetch_m = _obs_get(obs_fetch, lambda: fetched.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("bytes"), F.lit(0)).alias("b"),
-            F.coalesce(F.sum(((F.col("status") >= 300)
-                              & (F.col("status") < 400))
-                             .cast("long")), F.lit(0)).alias("r"))
-            .collect()[0].asDict())
-        links_m = _obs_get(obs_links, lambda: distinct_links.agg(
-            F.count(F.lit(1)).alias("d"),
-            F.coalesce(F.sum("n_refs"), F.lit(0)).alias("t"))
-            .collect()[0].asDict())
-        new_m = _obs_get(obs_new, lambda: new_rows.agg(
-            F.count(F.lit(1)).alias("n")).collect()[0].asDict())
-        return {
-            "wave": wave,
-            "scheduled": int(fetch_m["n"]),
-            "fetched": int(fetch_m["n"]),
-            "denied": int(n_denied),
-            "links_total": int(links_m["t"]),
-            "links_distinct": int(links_m["d"]),
-            "new_urls": int(new_m["n"]),
-            "dupes": int(links_m["d"]) - int(new_m["n"]),
-            "bytes": int(fetch_m["b"]),
-            "pages_dropped": int(dropped_acc.value),
-            "redirects": int(fetch_m["r"]),
-        }
-
-    def n_new() -> int:
-        """The wave's new-url count alone — available as soon as the
-        seen-delta write (which obs_new rides) has committed, without
-        blocking on the fetch_log write's observation the way
-        finish() does; crawl() uses it to decide cuckoo activation
-        while the fetch_log write may still be running."""
-        return int(_obs_get(obs_new, lambda: new_rows.agg(
-            F.count(F.lit(1)).alias("n")).collect()[0].asDict())["n"])
-
-    def n_links_distinct() -> int:
-        """This wave's distinct-candidate count (rides the seen-delta
-        write like obs_new) — the predictor for next wave's cuckoo
-        probe routing."""
-        return int(_obs_get(obs_links, lambda: distinct_links.agg(
-            F.count(F.lit(1)).alias("d"),
-            F.coalesce(F.sum("n_refs"), F.lit(0)).alias("t"))
-            .collect()[0].asDict())["d"])
-
-    def new_score_counts():
-        """Per-score counts of the wave's new rows, read from obs_new
-        (rides the seen-delta write) — None when non-default scoring
-        made the conditional sums unavailable (caller then runs the
-        data-derived counts job)."""
-        if not default_scoring:
-            return None
-        m = _obs_get(obs_new, lambda: new_rows.agg(
-            F.count(F.lit(1)).alias("n"),
-            *[F.coalesce(
-                F.sum((F.col("score") == F.lit(new_score_base + r))
-                      .cast("long")), F.lit(0)).alias(f"c{r}")
-              for r in range(7)]).collect()[0].asDict())
-        return [(new_score_base + r, int(m[f"c{r}"]))
-                for r in range(7) if int(m[f"c{r}"])]
-
-    finish.n_new = n_new
-    finish.n_links_distinct = n_links_distinct
-    finish.new_score_counts = new_score_counts
-    finish.cuckoo_probed = use_cuckoo  # routing decision -> lineage
 
     caches = [*frontier_caches, ranked, stats_q, fetched,
               distinct_links, new_rows, with_rank]
@@ -1124,14 +1019,16 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         "late": late_counts_df,
         "driver": unsched_counts,
     }
-    # frontier_delta_prepped carries the band/part/salt layout columns
-    # (write_wave_frontier prepped=True); seen_delta_out is the
-    # write-ready seen-delta layout; seen_delta itself stays the plain
-    # projection the bloom/cuckoo maintenance reads straight off the
-    # new_rows cache (the layouts' repartition would cost those folds
-    # an extra shuffle)
-    return (frontier_delta_prepped, seen_delta, fetch_log, finish,
-            caches, plan, seen_strategy, delta_counts, seen_delta_out)
+    return Wave(
+        wave=wave, plan=plan, frontier_delta=frontier_delta_prepped,
+        seen_delta=seen_delta, seen_delta_out=seen_delta_out,
+        fetch_log=fetch_log, delta_counts=delta_counts, caches=caches,
+        seen_strategy=seen_strategy, cuckoo_probed=use_cuckoo,
+        n_denied=n_denied, dropped=dropped_acc,
+        observed={"fetch": (obs_fetch, fetched, fetch_aggs),
+                  "links": (obs_links, distinct_links, links_aggs),
+                  "new": (obs_new, new_rows, new_aggs)},
+        new_score_base=new_score_base if default_scoring else None)
 
 
 def _wave_dir(cfg: CrawlConfig, wave: int) -> str:
@@ -1163,48 +1060,34 @@ def _seed_score_counts(cfg: CrawlConfig) -> list[tuple[int, int]]:
     return sorted(counts.items())
 
 
-def _partition_layout(df: DataFrame, cfg: CrawlConfig,
-                      salt: bool = False) -> DataFrame:
-    """The host-salted, sorted physical layout every seen write uses
-    (see _partitioned_write) as a pure TRANSFORMATION — factored out
-    (round 8) so the crawl wave can build it inside its overlapped
+def _partition_layout(df: DataFrame, cfg: CrawlConfig) -> DataFrame:
+    """The host-partitioned, sorted physical layout every seen write
+    uses (see _partitioned_write) as a pure TRANSFORMATION — factored
+    out (round 8) so the crawl wave can build it inside its overlapped
     plan-construction window: each transformation over the wave's
     deep delta tree pays a full eager re-analysis, which used to land
     at write time on the wave tail's critical path."""
     part = F.pmod(F.xxhash64("host"), F.lit(cfg.partitions)).cast("int")
-    df = df.withColumn("part", part)
-    if salt:
-        df = df.withColumn(
-            "host_salt",
-            F.pmod(F.xxhash64("url"), F.lit(cfg.salt_buckets)).cast("int"))
-    # seen writes (no score) sort by (part, url): a deterministic
-    # within-file order, so a seen delta's bytes do not depend on task
-    # scheduling, with each file's row groups clustered by partition
-    sort_keys = ([F.desc("score"), F.asc("url")]
-                 if "score" in df.columns
-                 else [F.asc("part"), F.asc("url")])
-    return (df.repartition(cfg.partitions, "part")
-            .sortWithinPartitions(*sort_keys))
+    # seen writes sort by (part, url): a deterministic within-file
+    # order, so a seen delta's bytes do not depend on task scheduling,
+    # with each file's row groups clustered by partition
+    return (df.withColumn("part", part)
+            .repartition(cfg.partitions, "part")
+            .sortWithinPartitions(F.asc("part"), F.asc("url")))
 
 
-def _partitioned_write(df: DataFrame, path: str, cfg: CrawlConfig,
-                       salt: bool = False, dir_partitioned: bool = True):
+def _partitioned_write(df: DataFrame, path: str, cfg: CrawlConfig):
     """Seen snapshots/deltas (frontier writes go through
-    bands.write_wave_frontier, which applies the same layout INSIDE
-    each score band): partitioned by pmod(xxhash64(host),P)
-    (+ optional intra-host salt for skewed hosts), score-sorted within
-    partitions — the 'priority queue as host-salted, score-sorted
-    partitions' of the north rule.
+    bands.write_wave_frontier, which applies the same host partitioning
+    INSIDE each score band, host-salted and score-sorted — the
+    'priority queue as host-salted, score-sorted partitions' of the
+    north rule): partitioned by pmod(xxhash64(host),P).
 
-    dir_partitioned=False keeps `part` as a data column (flat layout)
-    — required for the seen DELTA dirs, which are read as a multi-root
-    union (partition-directory inference would see conflicting
-    structures across roots)."""
-    out = _partition_layout(df, cfg, salt=salt)
-    writer = out.write.mode("overwrite")
-    if dir_partitioned:
-        writer = writer.partitionBy("part")
-    writer.parquet(path)
+    `part` stays a data column (flat layout) — required for the seen
+    DELTA dirs, which are read as a multi-root union (partition-
+    directory inference would see conflicting structures across
+    roots)."""
+    _partition_layout(df, cfg).write.mode("overwrite").parquet(path)
 
 
 #: 2^27 bits = 16 MiB — the broadcast-comfort ceiling shared by first
@@ -1219,16 +1102,6 @@ def bloom_auto_bits(n_seen: int) -> int:
     — the crawl oracle computes the identical value."""
     bits = max(8, (16 * max(n_seen, 1) - 1).bit_length())
     return min(1 << bits, BLOOM_MAX_BITS)
-
-
-def _max_job_id(spark) -> int:
-    """Highest Spark job id submitted without a job group (the crawl
-    sets none): per-wave deltas give the jobs-per-wave count recorded
-    in timings — the fixed-cost budget the pipelined writes exist to
-    shrink. Informational (not oracle-pinned): concurrent foreign
-    jobs in the same session would inflate it."""
-    ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
-    return max(ids) if ids else -1
 
 
 def last_complete_wave(cfg: CrawlConfig) -> int:
@@ -1252,20 +1125,15 @@ def _seen_delta_paths(cfg: CrawlConfig, upto_wave: int,
     When a compacted snapshot exists (snapshots.compact_seen — the
     offline maintenance job), reads use it as the base and union only
     the deltas past its horizon, keeping the root count bounded."""
+    paths, first = [os.path.join(cfg.checkpoint_dir, "seen_seed")], 0
     if use_compact:
         from .snapshots import read_compact_marker
 
         marker = read_compact_marker(cfg)
         if (marker is not None and marker["upto_wave"] <= upto_wave
                 and os.path.isdir(marker["path"])):
-            paths = [marker["path"]]
-            for w in range(marker["upto_wave"] + 1, upto_wave + 1):
-                p = os.path.join(_wave_dir(cfg, w), "seen_delta")
-                if os.path.isdir(p):
-                    paths.append(p)
-            return paths
-    paths = [os.path.join(cfg.checkpoint_dir, "seen_seed")]
-    for w in range(0, upto_wave + 1):
+            paths, first = [marker["path"]], marker["upto_wave"] + 1
+    for w in range(first, upto_wave + 1):
         p = os.path.join(_wave_dir(cfg, w), "seen_delta")
         if os.path.isdir(p):
             paths.append(p)
@@ -1282,42 +1150,50 @@ def _read_seen(spark: SparkSession, cfg: CrawlConfig,
             .parquet(*_seen_delta_paths(cfg, upto_wave)))
 
 
+#: Session confs the crawl sets for its duration, restored on exit.
+#: Each changes only the plan shape (Spark-job count, join algorithm),
+#: never any output: the determinism contract holds at any plan.
+_SESSION_CONFS = (
+    # AQE off: the crawl pre-partitions and host-salts explicitly, so
+    # AQE's runtime re-planning buys nothing inside a wave while its
+    # per-stage materialization barriers cost ~15 extra Spark jobs per
+    # wave (measured: 25 jobs/wave AQE-on vs 10 off; steady-wave 8->32
+    # speedup 1.94x vs 2.12x — BENCH/crawl_steady_r5.json
+    # aqe_off_experiment)
+    ("spark.sql.adaptive.enabled", "false"),
+    # the seen-check broadcast side's lineage embeds the wave's whole
+    # fetch+parse chain — its BUILD time grows with wave_cap, so the
+    # 300 s Spark default is a latent production failure (measured: a
+    # 4M-url bootstrap wave on 8 cores exceeded it). The router
+    # additionally never broadcasts without an affirmative volume
+    # hint; this timeout covers the legitimately-broadcast waves.
+    ("spark.sql.broadcastTimeout", "3600"),
+    # the run-map / probe collects are `limit(N).collect()` with a
+    # TINY true row count (coarse-score contract); the default
+    # incremental take (1, 4, 16, ... parts) turns each into 3-5
+    # sequential mini-jobs of pure scheduling latency per wave — one
+    # job over all partitions is strictly better here at ANY scale,
+    # because the bound is on the row count, not the partition count.
+    ("spark.sql.limit.initialNumPartitions", str(1 << 20)),
+    # lets the planner use shuffled-hash for the seen anti-join (guide
+    # §3.1) — skips sorting both sides; Spark's own build-side size
+    # conditions still gate it, so oversized partitions fall back to
+    # sort-merge.
+    ("spark.sql.join.preferSortMergeJoin", "false"),
+)
+
+
 def crawl(spark: SparkSession, cfg: CrawlConfig) -> dict:
     """Run (or resume) the crawl up to cfg.n_waves. Returns summary.
 
-    Applies the crawl-session AQE profile (see CrawlConfig.aqe) around
-    the wave loop and restores the caller's setting on exit — the
-    profile changes Spark-job count per wave, never any output."""
+    Sets the crawl-session confs (_SESSION_CONFS) around the wave loop
+    and restores the caller's values on exit — they change the Spark-
+    job count per wave, never any output."""
     from concurrent.futures import ThreadPoolExecutor
 
-    prior = None
-    if cfg.aqe == "off":
-        prior = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    prior_bt = None
-    if cfg.broadcast_timeout > 0:
-        prior_bt = spark.conf.get("spark.sql.broadcastTimeout", "300")
-        spark.conf.set("spark.sql.broadcastTimeout",
-                       str(cfg.broadcast_timeout))
-    # two more crawl-session profile knobs (restored on exit; both are
-    # plan-shape only — results are identical at any setting):
-    # * limit.initialNumPartitions: the run-map / probe collects are
-    #   `limit(N).collect()` with a TINY true row count (coarse-score
-    #   contract); the default incremental take (1, 4, 16, ... parts)
-    #   turns each into 3-5 sequential mini-jobs of pure scheduling
-    #   latency per wave — one job over all partitions is strictly
-    #   better here at ANY scale, because the bound is on the row
-    #   count, not the partition count.
-    # * preferSortMergeJoin=false: lets the planner use shuffled-hash
-    #   for the seen anti-join (guide §3.1) — skips sorting both
-    #   sides; Spark's own build-side size conditions still gate it,
-    #   so oversized partitions fall back to sort-merge.
-    prior_take = spark.conf.get("spark.sql.limit.initialNumPartitions",
-                                None)
-    spark.conf.set("spark.sql.limit.initialNumPartitions", str(1 << 20))
-    prior_smj = spark.conf.get("spark.sql.join.preferSortMergeJoin",
-                               None)
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
+    prior = {key: spark.conf.get(key, None) for key, _ in _SESSION_CONFS}
+    for key, val in _SESSION_CONFS:
+        spark.conf.set(key, val)
     # the pool that runs the pipelined checkpoint writes is owned HERE
     # so any exception inside the loop still joins in-flight writes
     # (a write racing session teardown is worse than a leaked cache)
@@ -1335,14 +1211,7 @@ def crawl(spark: SparkSession, cfg: CrawlConfig) -> dict:
         return _crawl_loop(spark, cfg, pool)
     finally:
         pool.shutdown(wait=True)
-        if prior is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", prior)
-        if prior_bt is not None:
-            spark.conf.set("spark.sql.broadcastTimeout", prior_bt)
-        for key, val in (("spark.sql.limit.initialNumPartitions",
-                          prior_take),
-                         ("spark.sql.join.preferSortMergeJoin",
-                          prior_smj)):
+        for key, val in prior.items():
             if val is None:
                 spark.conf.unset(key)
             else:
@@ -1367,8 +1236,7 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
         f_seed = pool.submit(
             _partitioned_write,
             seeds.select("url", F.lit(0).alias("added_wave"),
-                         F.col("host")), seed_path, cfg,
-            dir_partitioned=False)
+                         F.col("host")), seed_path, cfg)
         # seed frontier = the wave -1 manifest (band-partitioned like
         # every later wave; nothing was read, so nothing is carried)
         default_scoring = (score_expr is _SCORE_EXPR_DEFAULT
@@ -1432,18 +1300,20 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
     bloom_shards = None           # sharded mode: (partition, bitmap) DF
     shard_m = cfg.bloom_bits      # per-shard bit count
     if cfg.use_bloom and start > 0:
+        # a pending saturation rebuild is re-derived from the last
+        # wave's recorded est-fp so a resumed run reproduces the
+        # uninterrupted one exactly (a wave records it only when it
+        # had a bitmap or shards, which the branches below reload)
+        prev_fp = prev_lineage.get("metrics", {}).get("bloom_est_fp")
+        bloom_rebuild = (prev_fp is not None
+                         and prev_fp > cfg.bloom_fp_rebuild)
         prev_bloom = os.path.join(_wave_dir(cfg, start - 1), "bloom.bin")
         if cfg.bloom_mode != "sharded" and os.path.exists(prev_bloom):
             with open(prev_bloom, "rb") as fh:
                 bloom = fh.read()
             # the effective bit count is persisted via the bitmap
-            # length (nbytes = m//8 + 1); a pending saturation rebuild
-            # is re-derived from the last wave's recorded est-fp so a
-            # resumed run reproduces the uninterrupted one exactly
+            # length (nbytes = m//8 + 1)
             bloom_m = (len(bloom) - 1) * 8
-            prev_fp = prev_lineage.get("metrics", {}).get("bloom_est_fp")
-            bloom_rebuild = (prev_fp is not None
-                             and prev_fp > cfg.bloom_fp_rebuild)
         prev_shards = os.path.join(_wave_dir(cfg, start - 1),
                                    "bloom_shards")
         if cfg.bloom_mode == "sharded" and os.path.isdir(prev_shards):
@@ -1453,17 +1323,14 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
             one = bloom_shards.select("bitmap").limit(1).collect()
             if one:  # shard_m persisted via bitmap length, like bloom.bin
                 shard_m = bloom_shard_bits(bytes(one[0].bitmap))
-            prev_fp = prev_lineage.get("metrics", {}).get("bloom_est_fp")
-            bloom_rebuild = (prev_fp is not None
-                             and prev_fp > cfg.bloom_fp_rebuild)
 
     import time as _time
 
     all_metrics = []
     all_timings = []
-    pending = None  # deferred tail of the previous wave (see _finalize)
+    pending: Wave | None = None  # deferred tail of the previous wave
 
-    def _finalize(p):
+    def _finalize(w: Wave):
         """Drain the pending wave's fetch_log write, assemble its
         metrics + lineage, release its caches.
 
@@ -1482,16 +1349,16 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
         deferral — observations accumulate on their writes no matter
         when .get is read; the oracle pins them exactly."""
         t0 = _time.perf_counter()
-        p["f_log"].result()
-        p["tt"]["fetch_log_drain"] = round(_time.perf_counter() - t0, 3)
-        metrics = p["finish"]()
-        metrics.update(p["extra_metrics"])
-        lineage = {**p["lineage_base"], "metrics": metrics}
+        w.f_log.result()
+        w.timings["fetch_log_drain"] = round(_time.perf_counter() - t0, 3)
+        metrics = w.metrics()
+        metrics.update(w.extra_metrics)
+        lineage = {**w.lineage, "metrics": metrics}
         bands_mod.write_json_atomic(
-            os.path.join(p["dir"], "_lineage.json"), lineage)
-        for c in p["caches"]:
+            os.path.join(w.dir, "_lineage.json"), lineage)
+        for c in w.caches:
             c.unpersist()
-        all_timings.append({"wave": p["wave"], **p["tt"]})
+        all_timings.append({"wave": w.wave, **w.timings})
         all_metrics.append(metrics)
 
     for wave in range(start, cfg.n_waves):
@@ -1502,7 +1369,6 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
             tt[name] = round(_time.perf_counter() - t0, 3)
             t0 = _time.perf_counter()
 
-        jobs_before = _max_job_id(spark)
         # the previous wave's finalize (fetch_log drain + metrics +
         # lineage + cache release) runs on the POOL, overlapping this
         # wave's schedule phase; it is joined below, before this
@@ -1562,18 +1428,18 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
                 bloom = pool.submit(build_bloom, seen, bloom_m)
         bloom_rebuild = False
         _mark("bloom_build")
-        (frontier_delta, seen_delta, fetch_log, finish, caches,
-         plan, seen_strategy, delta_counts, seen_delta_out) = run_wave(
-            spark, cfg, wave, manifest, seen, n_seen_hint=n_seen,
+        w = run_wave(
+            spark, cfg, wave, manifest, seen, pool, n_seen_hint=n_seen,
             cuckoo_shards=cuckoo_shards, bloom=bloom,
             prev_links_hint=prev_links,
-            bloom_m=bloom_m, bloom_shards=bloom_shards, pool=pool)
+            bloom_m=bloom_m, bloom_shards=bloom_shards)
         # the residual half of the frontier delta's score histogram
         # reads only schedule-phase caches — count it on the pool NOW
         # so the collect overlaps the seen-delta write below; the
         # other half (unscheduled/new) is counted after that write
         # commits, inside write_frontier (see run_wave delta_counts)
-        f_early_counts = pool.submit(_score_counts, delta_counts["early"])
+        f_early_counts = pool.submit(_score_counts,
+                                     w.delta_counts["early"])
         if hasattr(bloom, "result"):
             # activation/rebuild future: resolved inside run_wave's
             # seen-filter plan build (overlapping the stats job);
@@ -1589,7 +1455,7 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
             f_fin.result()
             pending = None
         _mark("prev_wave_drain")
-        d = _wave_dir(cfg, wave)
+        w.dir = d = _wave_dir(cfg, wave)
 
         # The checkpoint writes ARE the wave's remaining Spark jobs;
         # per-wave metrics ride on them via observe(), and bloom
@@ -1616,15 +1482,11 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
         # keeps the overlap (fetch_log serialization shares the
         # cluster with the frontier write + next wave's planning)
         # without the blocked-slot tax.
-        def write_fetch_log():
-            fetch_log.write.mode("overwrite").parquet(
-                os.path.join(d, "fetch_log"))
-
         def write_seen_delta():
-            # layout prebuilt by run_wave (seen_delta_out) inside the
+            # layout prebuilt by run_wave (w.seen_delta_out) inside the
             # overlapped construction window — only the write command
             # itself is planned here
-            seen_delta_out.write.mode("overwrite").parquet(
+            w.seen_delta_out.write.mode("overwrite").parquet(
                 os.path.join(d, "seen_delta"))
 
         def write_frontier():
@@ -1633,19 +1495,20 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
             # the seen-delta write under default scoring, else one
             # small job over the new-rows cache); the frontier write
             # then skips its run-map aggregation pass
-            merged: dict[int, int] = dict(delta_counts["driver"])
-            new_counts = finish.new_score_counts()
+            merged: dict[int, int] = dict(w.delta_counts["driver"])
+            new_counts = w.new_score_counts()
             if new_counts is None:
                 new_counts = [(int(r["score"]), int(r["cnt"]))
-                              for r in _score_counts(delta_counts["late"])]
+                              for r in _score_counts(
+                                  w.delta_counts["late"])]
             for s, c in new_counts:
                 merged[s] = merged.get(s, 0) + c
             for r in f_early_counts.result():
                 s = int(r["score"])
                 merged[s] = merged.get(s, 0) + int(r["cnt"])
             return bands_mod.write_wave_frontier(
-                spark, frontier_delta, os.path.join(d, "frontier"),
-                cfg, manifest, plan,
+                spark, w.frontier_delta, os.path.join(d, "frontier"),
+                cfg, manifest, w.plan,
                 score_counts=sorted(merged.items()), prepped=True)
 
         def maintain_cuckoo(n_seen_after, probe_next):
@@ -1665,7 +1528,7 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
             from .seen import maintain_cuckoo_shards
 
             return maintain_cuckoo_shards(
-                cuckoo_shards, seen_delta.select("url"),
+                cuckoo_shards, w.seen_delta.select("url"),
                 _read_seen(spark, cfg, wave), cfg.partitions,
                 path=os.path.join(d, "cuckoo"))
 
@@ -1679,15 +1542,15 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
             from .seen import bloom_shards_stats, merge_bloom_shards
 
             p = os.path.join(d, "bloom_shards")
-            merge_bloom_shards(bloom_shards, seen_delta.select("url"),
+            merge_bloom_shards(bloom_shards, w.seen_delta.select("url"),
                                cfg.partitions, shard_m) \
                 .write.mode("overwrite").parquet(p)
             new_df = spark.read.parquet(p)
             return (new_df,) + bloom_shards_stats(new_df)
 
-        f_seen = pool.submit(write_seen_delta)
-        f_seen.result()
-        f_log = pool.submit(write_fetch_log)
+        pool.submit(write_seen_delta).result()
+        w.f_log = pool.submit(w.fetch_log.write.mode("overwrite").parquet,
+                              os.path.join(d, "fetch_log"))
         f_frontier = pool.submit(write_frontier)
         f_bshards = pool.submit(maintain_bloom_shards)
         # bloom maintenance: fold the committed delta (cached
@@ -1697,27 +1560,28 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
         # positions), overlapping the fetch_log/frontier writes
         # instead of taxing the seen-delta write with a pandas pass
         f_bloom = (pool.submit(bloom_merge_urls,
-                               seen_delta.select("url"), bloom_m, bloom,
+                               w.seen_delta.select("url"), bloom_m, bloom,
                                16)
                    if (cfg.use_bloom and bloom is not None) else None)
         # obs_new/obs_links rode the just-committed seen write —
         # the cuckoo maintenance decision needs the post-wave
         # seen count and candidate volume without blocking on the
         # fetch_log write's observation
-        n_seen_after = n_seen + finish.n_new()
+        n_seen_after = n_seen + int(w.get("new")["n"])
         probe_next = (
             cfg.use_cuckoo
             and n_seen_after >= cfg.cuckoo_min_seen
             and (cfg.cuckoo_probe_min_ratio == 0
                  or n_seen_after >= cfg.cuckoo_probe_min_ratio
-                 * max(finish.n_links_distinct(), 1)))
+                 * max(int(w.get("links")["d"]), 1)))
         f_cuckoo = pool.submit(maintain_cuckoo, n_seen_after,
                                probe_next)
         # metrics that do NOT ride the fetch_log write are assembled
         # now (bloom fold needs only the committed seen delta — the
         # accumulator rode that write); the obs_fetch-backed ones are
         # read in _finalize, after the deferred f_log drain
-        extra_metrics = {"frontier_rows_read": plan.rows_read}
+        extra_metrics = w.extra_metrics = {
+            "frontier_rows_read": w.plan.rows_read}
         n_seen = n_seen_after
         if f_bloom is not None:
             # join the pool-side fold, persist + saturation signal
@@ -1750,42 +1614,34 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
         extra_metrics["frontier_size"] = bands_mod.manifest_total(
             new_manifest)
         _mark("seen_frontier_cuckoo")
-        # informational: with the wave overlap, the previous wave's
-        # fetch_log job id may land inside this wave's delta — the
-        # counter bounds per-wave job submissions, it does not
-        # attribute them exactly
-        tt["spark_jobs"] = _max_job_id(spark) - jobs_before
+        w.timings = tt
 
         # this wave's fetch_log drain + metrics/lineage/caches are
         # DEFERRED past the next wave's schedule phase (see _finalize)
-        pending = {
-            "wave": wave, "dir": d, "f_log": f_log, "finish": finish,
-            "caches": caches, "extra_metrics": extra_metrics, "tt": tt,
-            "lineage_base": {
-                "wave": wave,
-                "input_wave_dir": (_wave_dir(cfg, wave - 1) if wave
-                                   else "seeds"),
-                "partitions": cfg.partitions,
-                "seen_deltas": _seen_delta_paths(cfg, wave),
-                "frontier_manifest": bands_mod.manifest_path(
-                    os.path.join(d, "frontier")),
-                "frontier_bands_read": plan.read_bands,
-                "frontier_segments_read": sorted(plan.consumed_keys()),
-                "frontier_score_cut": plan.s_cut,
-                "seen_strategy": seen_strategy,
-                "cuckoo_probe": finish.cuckoo_probed,
-                "config": {"universe": cfg.universe,
-                           "n_seeds": cfg.n_seeds,
-                           "budget_per_host": cfg.budget_per_host,
-                           "wave_cap": cfg.wave_cap,
-                           "band_width": cfg.band_width,
-                           "band_split_rows":
-                               bands_mod.split_rows_of(cfg)},
-            },
+        w.lineage = {
+            "wave": wave,
+            "input_wave_dir": (_wave_dir(cfg, wave - 1) if wave
+                               else "seeds"),
+            "partitions": cfg.partitions,
+            "seen_deltas": _seen_delta_paths(cfg, wave),
+            "frontier_manifest": bands_mod.manifest_path(
+                os.path.join(d, "frontier")),
+            "frontier_bands_read": w.plan.read_bands,
+            "frontier_segments_read": sorted(w.plan.consumed_keys()),
+            "frontier_score_cut": w.plan.s_cut,
+            "seen_strategy": w.seen_strategy,
+            "cuckoo_probe": w.cuckoo_probed,
+            "config": {"universe": cfg.universe,
+                       "n_seeds": cfg.n_seeds,
+                       "budget_per_host": cfg.budget_per_host,
+                       "wave_cap": cfg.wave_cap,
+                       "band_width": cfg.band_width,
+                       "band_split_rows": bands_mod.split_rows_of(cfg)},
         }
+        pending = w
         manifest = new_manifest
         seen = _read_seen(spark, cfg, wave)
-        prev_links = finish.n_links_distinct()
+        prev_links = int(w.get("links")["d"])
         if cfg.compact_every and (wave + 1) % cfg.compact_every == 0:
             # compaction must see a fully-committed wave (and resume
             # correctness must never find a compacted snapshot ahead
@@ -1827,8 +1683,6 @@ def _main() -> None:
     ap.add_argument("--cores", type=int, default=8)
     ap.add_argument("--compact-every", type=int, default=0,
                     help="auto-compact seen deltas every N waves")
-    ap.add_argument("--seen-check", default="auto",
-                    choices=["auto", "shuffle", "broadcast"])
     args = ap.parse_args()
 
     spark = get_spark(app_name="cuphic-crawl", cores=args.cores)
@@ -1837,8 +1691,7 @@ def _main() -> None:
                       n_waves=args.waves,
                       checkpoint_dir=args.checkpoint_dir,
                       partitions=args.partitions,
-                      compact_every=args.compact_every,
-                      seen_check=args.seen_check)
+                      compact_every=args.compact_every)
     summary = crawl(spark, cfg)
     print(json.dumps(summary, indent=1))
 

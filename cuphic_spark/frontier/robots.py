@@ -256,8 +256,8 @@ def prefix_rules(parsed: DataFrame, agent: str) -> DataFrame:
 
 def _prefix_dim(rules: DataFrame) -> DataFrame:
     """(host, deny_prefixes) agg over ALREADY-VALIDATED prefix-only
-    rules — lets the wave loop's auto mode reuse its one probe job
-    instead of probing twice."""
+    rules — lets ``crawl_dim`` reuse its one probe job instead of
+    probing twice."""
     return (rules.groupBy("host")
             .agg(F.collect_list("pattern").alias("deny_prefixes")))
 
@@ -275,6 +275,20 @@ def rules_dim(parsed: DataFrame, agent: str) -> DataFrame:
             .agg(F.collect_list(F.struct(
                 F.col("regex"), F.col("pattern_len"),
                 F.col("allow"))).alias("robots_rules")))
+
+
+def crawl_dim(parsed: DataFrame, agent: str) -> tuple[DataFrame, bool]:
+    """The wave loop's robots dim and whether it is the full-RFC one:
+    ``(prefix dim, False)`` when every applicable rule is a plain
+    Disallow prefix, else ``(rules_dim, True)``, whose longest-match /
+    Allow-wins verdict ``denied_by_rules`` evaluates row-local — same
+    broadcast join, zero extra shuffles or jobs either way. The choice
+    costs one bounded limit(1) probe (the same job prefix_rules spends
+    on validation)."""
+    rules = _select_group(parsed, "rule", agent)
+    if _non_prefix_probe(rules):
+        return rules_dim(parsed, agent=agent), True
+    return _prefix_dim(rules), False
 
 
 def denied_by_rules(path, rules):

@@ -62,7 +62,7 @@ def compact_seen(spark, cfg: CrawlConfig, upto_wave: int | None = None) -> str:
     _partitioned_write(
         seen.withColumn("host", host_col(F.col("url")))
         .select("url", "added_wave", "host"),
-        out_dir, cfg, dir_partitioned=False)
+        out_dir, cfg)
     marker = {"upto_wave": upto_wave, "path": out_dir,
               "partitions": cfg.partitions}
     bands.write_json_atomic(_compact_marker(cfg), marker)

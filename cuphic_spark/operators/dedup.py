@@ -376,105 +376,17 @@ def _free_rdd_ids(spark_df_or_session, ids: set) -> None:
             rdd.unpersist(False)
 
 
-def connected_components(edges: DataFrame, a: str = "doc_a",
-                         b: str = "doc_b",
-                         max_iter: int = 25) -> DataFrame:
-    """Undirected connected components — the dedup pipeline's final
-    step (LSH candidates -> Jaccard-verified edges -> duplicate
-    CLUSTERS; pairs alone under-merge transitive near-dups A~B~C).
-
-    Iterative min-label propagation: label(v) <- min(label(v),
-    min label over v's neighbors), to fixpoint. Deterministic:
-    component id = min node id in the component. Returns
-    (node, component) for every node incident to an edge.
-
-    Scale shape: each round is one join (labels ⋈ edges) + one
-    min-aggregation — two key-shuffles over O(|E|) rows; convergence
-    in O(max component diameter) rounds. Dedup clusters are
-    shallow (near-clique neighborhoods from OR-of-bands LSH), so
-    diameter is small in practice; for adversarial long-chain graphs
-    the same two primitives compose into large-star/small-star
-    (O(log n) rounds). The convergence check rides a cheap
-    changed-count per round (driver action on cached labels).
-
-    Non-convergence RAISES (advisor round-3): min-label propagation
-    needs rounds proportional to propagation distance, so a chain
-    longer than ``max_iter`` would otherwise silently return split
-    clusters — the loud-failure contract the rest of the repo keeps.
-    Raise ``max_iter`` (or pre-collapse chains) for deep graphs."""
-    sym = edges.select(F.col(a).alias("u"), F.col(b).alias("v"))
-    sym = (sym.unionByName(sym.select(F.col("v").alias("u"),
-                                      F.col("u").alias("v")))
-           .distinct().cache())
-    # materialize sym's cache BEFORE the first tracked checkpoint: the
-    # checkpoint tracks block-manager ids by before/after diff, and a
-    # lazily-cached sym would materialize inside that first job, get
-    # attributed to the labels checkpoint, and be unpersisted after
-    # round 1 — silently recomputing the edge distinct every later
-    # round (review finding)
-    sym.count()
-    # localCheckpoint (not cache) is load-bearing: each round's labels
-    # must TRUNCATE lineage, or the logical plan doubles per round —
-    # by ~9 rounds the plan string alone exceeds the JVM's 2 GB limit
-    # and at scale the driver dies in analysis long before that
-    # (found by the chain-graph test). On a cluster with executor
-    # loss, swap for checkpoint() on reliable storage.
-    labels, label_ids = _tracked_local_checkpoint(
-        sym.select(F.col("u").alias("node")).distinct()
-        .withColumn("label", F.col("node")))
-    changed = None
-    for _ in range(max_iter):
-        msgs = (sym.join(labels, sym["u"] == labels["node"])
-                .select(F.col("v").alias("node"), "label"))
-        new_labels, new_ids = _tracked_local_checkpoint(
-            labels.unionByName(msgs)
-            .groupBy("node")
-            .agg(F.min("label").alias("label")))
-        changed = (new_labels
-                   .join(labels.withColumnRenamed("label", "old"), "node")
-                   .where(F.col("label") != F.col("old"))
-                   .limit(1).count())
-        # the changed-count was the last reader of the previous
-        # round's checkpoint — free its blocks (the final round's
-        # labels stay persisted: they ARE the result)
-        _free_rdd_ids(labels, label_ids)
-        labels, label_ids = new_labels, new_ids
-        if changed == 0:
-            break
-    if changed != 0:
-        sym.unpersist()
-        # free the last round's checkpoint blocks too — the raise
-        # path has no reader left, and leaking them here accumulates
-        # block-manager storage across retries (advisory pin)
-        _free_rdd_ids(labels, label_ids)
-        raise ValueError(
-            f"connected_components did not converge in max_iter="
-            f"{max_iter} rounds: labels were still changing, so the "
-            "returned components would be silently UNDER-MERGED "
-            "(min-label propagation covers one hop per round; a "
-            "component whose diameter exceeds max_iter needs more "
-            "rounds). Raise max_iter to at least the expected "
-            "component diameter.")
-    out = labels.select("node", F.col("label").alias("component"))
-    sym.unpersist()
-    # The result DERIVES from the final round's localCheckpoint, whose
-    # blocks df.unpersist() on `out` cannot release (and releasing
-    # them makes the result unrecoverable — lineage is truncated).
-    # Long sessions running many component jobs should call this once
-    # they have consumed/persisted the labels elsewhere:
-    out.free_components = lambda: _free_rdd_ids(out, label_ids)
-    return out
-
-
 def connected_components_star(edges: DataFrame, a: str = "doc_a",
                               b: str = "doc_b",
                               max_iter: int = 50) -> DataFrame:
-    """Undirected connected components by alternating large-star /
-    small-star contraction — the O(log n)-round formulation (Kiveris
-    et al., "Connected Components in MapReduce and Beyond"), for
-    graphs whose component DIAMETER is too deep for min-label
-    propagation (``connected_components`` needs one round per hop; a
-    million-link chain needs a million rounds, this needs ~20).
+    """Undirected connected components — the dedup pipeline's final
+    step (LSH candidates -> Jaccard-verified edges -> duplicate
+    CLUSTERS; pairs alone under-merge transitive near-dups A~B~C) —
+    by alternating large-star / small-star contraction, the
+    O(log n)-round formulation (Kiveris et al., "Connected Components
+    in MapReduce and Beyond"): min-label propagation needs one round
+    per hop (a million-link chain needs a million rounds, this needs
+    ~20).
 
     Per round (edges kept canonical as (hi, lo)):
 
@@ -485,12 +397,20 @@ def connected_components_star(edges: DataFrame, a: str = "doc_a",
 
     Both preserve connectivity; the unique fixpoint per component is
     a star centered at its minimum node. Each half-round is one
-    aggregation + one join over O(|E|) rows; lineage is truncated per
-    round (localCheckpoint) like the min-label loop. Deterministic:
+    aggregation + one join over O(|E|) rows. Deterministic:
     component id = min node id. Returns (node, component) for every
-    node incident to an input edge. Raises on non-convergence (same
-    loud-failure contract as ``connected_components``)."""
+    node incident to an input edge.
+
+    Non-convergence RAISES (advisor round-3): returning early would
+    silently emit split clusters — the loud-failure contract the rest
+    of the repo keeps."""
     raw = edges.select(F.col(a).alias("u"), F.col(b).alias("v"))
+    # localCheckpoint (not cache) is load-bearing: each round's edges
+    # must TRUNCATE lineage, or the logical plan doubles per round —
+    # by ~9 rounds the plan string alone exceeds the JVM's 2 GB limit
+    # and at scale the driver dies in analysis long before that
+    # (found by the chain-graph test). On a cluster with executor
+    # loss, swap for checkpoint() on reliable storage.
     nodes = (raw.select(F.col("u").alias("node"))
              .unionByName(raw.select(F.col("v").alias("node")))
              .distinct())
@@ -544,34 +464,30 @@ def connected_components_star(edges: DataFrame, a: str = "doc_a",
     roots = (nodes.join(non_roots, "node", "left_anti")
              .select("node", F.col("node").alias("component")))
     out = non_roots.unionByName(roots)
-    # same contract as connected_components: the final checkpoint's
-    # blocks outlive any unpersist() on the returned labels — callers
-    # done reading the result free them explicitly
+    # The result DERIVES from the final round's localCheckpoint, whose
+    # blocks df.unpersist() on `out` cannot release (and releasing
+    # them makes the result unrecoverable — lineage is truncated).
+    # Long sessions running many component jobs should call this once
+    # they have consumed/persisted the labels elsewhere:
     out.free_components = lambda: _free_rdd_ids(out, e_ids)
     return out
 
 
 def dedup_clusters(docs: DataFrame, k: int = 3, n_hashes: int = 8,
                    band_size: int = 2,
-                   jaccard_milli_min: int = 800,
-                   method: str = "label") -> DataFrame:
+                   jaccard_milli_min: int = 800) -> DataFrame:
     """The full near-dup resolution chain: MinHash LSH candidates ->
-    exact n-gram Jaccard verification -> connected components.
-    Returns (doc_id, component) for every doc in a verified cluster
-    (component = min doc_id of the cluster).
-
-    ``method``: 'label' (min-label propagation — right for the
-    shallow near-clique neighborhoods LSH emits) or 'star'
-    (large-star/small-star — O(log n) rounds, right when verified
-    edges can chain into deep components). Identical results."""
+    exact n-gram Jaccard verification -> connected components
+    (large-star/small-star: O(log n) rounds, so verified edges that
+    chain into deep components converge too). Returns (doc_id,
+    component) for every doc in a verified cluster (component = min
+    doc_id of the cluster)."""
     cand = minhash_lsh_pairs(docs, k=k, n_hashes=n_hashes,
                              band_size=band_size)
     verified = (ngram_jaccard_pairs(docs, cand)
                 .where(F.col("jaccard_milli") >= jaccard_milli_min)
                 .select("doc_a", "doc_b"))
-    cc = (connected_components_star if method == "star"
-          else connected_components)
-    return (cc(verified)
+    return (connected_components_star(verified)
             .select(F.col("node").alias("doc_id"), "component"))
 
 

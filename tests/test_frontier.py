@@ -662,20 +662,12 @@ def test_auto_compaction_same_results(spark, tmp_path, oracle_state):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_broadcast_seen_check_same_result(spark, tmp_path, oracle_state):
-    """seen_check='broadcast' (two-phase semi/anti where the seen
-    table only streams) must produce identical results; the plan must
-    actually broadcast (no sort-merge join on the seen side)."""
-    d = str(tmp_path / "bcast_crawl")
-    cfg = CrawlConfig(checkpoint_dir=d, seen_check="broadcast", **CFG)
-    summary = crawl(spark, cfg)
-    assert summary["metrics"] == oracle_state.metrics
-    log = read_fetch_log(spark, cfg).orderBy("wave", "rank_in_wave").collect()
-    assert [(r.wave, r.rank_in_wave, r.url) for r in log] == \
-        [(e["wave"], e["rank_in_wave"], e["url"])
-         for e in oracle_state.fetch_log]
-    shutil.rmtree(d, ignore_errors=True)
-
+def test_broadcast_anti_seen_same_result(spark):
+    """The broadcast seen check (two-phase semi/anti where the seen
+    table only streams) must return exactly the unseen candidates, and
+    its plan must actually broadcast (no sort-merge join on the seen
+    side). The broadcast-routed crawl == oracle is pinned by
+    test_auto_seen_routing_covers_all_strategies."""
     from cuphic_spark.frontier.seen import _anti_seen
 
     cands = spark.createDataFrame(
@@ -708,20 +700,6 @@ def test_score_histogram_guard_raises(spark, tmp_path, monkeypatch):
                       max_score_histogram=8, **CFG)
     with pytest.raises(ValueError, match="max_score_histogram"):
         crawl(spark, cfg)
-
-
-def test_broadcast_candidate_cap_falls_back(spark, tmp_path, oracle_state):
-    """Explicit seen_check='broadcast' with a candidate volume above
-    broadcast_max_candidates must warn and fall back to shuffle —
-    results unchanged (advisor round-2: unbounded F.broadcast of the
-    candidate set can exceed driver memory)."""
-    d = str(tmp_path / "bcap_crawl")
-    cfg = CrawlConfig(checkpoint_dir=d, seen_check="broadcast",
-                      broadcast_max_candidates=1, **CFG)
-    with pytest.warns(UserWarning, match="broadcast_max_candidates"):
-        summary = crawl(spark, cfg)
-    assert summary["metrics"] == oracle_state.metrics
-    shutil.rmtree(d, ignore_errors=True)
 
 
 def test_frontier_exhaustion(spark, tmp_path):
@@ -900,12 +878,10 @@ def test_lazy_band_reads_in_wave_metrics(spark, tmp_path):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_streaming_link_extraction_equals_kernel(spark, tmp_path,
-                                                 oracle_state):
-    """The tree-free streaming link extractor must emit EXACTLY the
-    kernel scan's hrefs — per page, in order — on webgraph pages and
-    tag soup, and a kernel-path crawl must equal the (default)
-    streaming crawl wave-for-wave."""
+def test_streaming_hrefs_equal_kernel_scan():
+    """The tree-free streaming link extractor (the crawl's only one)
+    must emit EXACTLY the kernel scan's hrefs — per page, in order —
+    on webgraph pages and tag soup."""
     from cuphic_spark.frontier.crawl import _hrefs_streaming
     from cuphic_spark.frontier import webgraph
     from cuphic_spark.kernel import reader
@@ -942,13 +918,6 @@ def test_streaming_link_extraction_equals_kernel(spark, tmp_path,
     for data in pages:
         got, _m = parse_html_lenient(data, parser=_hrefs_streaming)
         assert got == kernel_hrefs(data), data
-
-    # end-to-end: kernel-path crawl == oracle (same as streaming)
-    d = str(tmp_path / "kernel_link_crawl")
-    cfg = CrawlConfig(checkpoint_dir=d, link_extract="kernel", **CFG)
-    summary = crawl(spark, cfg)
-    assert summary["metrics"] == oracle_state.metrics
-    shutil.rmtree(d, ignore_errors=True)
 
 
 def test_robots_ttl_refresh_matches_oracle(spark, tmp_path):
@@ -1246,8 +1215,7 @@ def test_auto_seen_routing_covers_all_strategies(spark, tmp_path,
     # production wave's candidates are unbounded — the round-7 4M
     # bootstrap blew the 300 s broadcast-build timeout exactly here)
     d1 = str(tmp_path / "route_bcast")
-    cfg = CrawlConfig(checkpoint_dir=d1, seen_check="auto",
-                      broadcast_seen_min=0, **CFG)
+    cfg = CrawlConfig(checkpoint_dir=d1, broadcast_seen_min=0, **CFG)
     assert crawl(spark, cfg)["metrics"] == oracle_state.metrics
     s1 = strategies(d1)
     assert s1[0] != "broadcast"
@@ -1256,14 +1224,76 @@ def test_auto_seen_routing_covers_all_strategies(spark, tmp_path,
     # 2. over the candidate ceiling: broadcast is inadmissible on
     # every wave -> shuffle
     d2 = str(tmp_path / "route_shuffle")
-    cfg = CrawlConfig(checkpoint_dir=d2, seen_check="auto",
-                      broadcast_seen_min=0, broadcast_max_candidates=1,
-                      **CFG)
+    cfg = CrawlConfig(checkpoint_dir=d2, broadcast_seen_min=0,
+                      broadcast_max_candidates=1, **CFG)
     assert crawl(spark, cfg)["metrics"] == oracle_state.metrics
     assert set(strategies(d2)) == {"shuffle"}
 
     for d in (d1, d2):
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_crawl_restores_session_confs(spark, tmp_path):
+    """crawl() sets its session confs only for its own duration: after
+    a normal return AND after a raise (a resume with mismatched
+    partitions), every conf is back to the caller's value — the
+    explicitly set ones to their sentinel, the unset ones to the
+    default."""
+    from cuphic_spark.frontier.crawl import _SESSION_CONFS
+
+    keys = [k for k, _ in _SESSION_CONFS]
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    sentinels = {"spark.sql.adaptive.enabled": "true",
+                 "spark.sql.broadcastTimeout": "123"}
+    kw = dict(universe=500, n_seeds=4, budget_per_host=4, wave_cap=8)
+    d = str(tmp_path / "confs")
+    try:
+        for k in keys:
+            spark.conf.unset(k)
+        want = {k: spark.conf.get(k, None) for k in keys}
+        for k, v in sentinels.items():
+            spark.conf.set(k, v)
+        want.update(sentinels)
+        # every conf the crawl sets differs from the caller's value
+        assert all(want[k] != v for k, v in _SESSION_CONFS)
+
+        crawl(spark, CrawlConfig(checkpoint_dir=d, partitions=4,
+                                 n_waves=1, **kw))
+        assert {k: spark.conf.get(k, None) for k in keys} == want
+        with pytest.raises(ValueError, match="partitions mismatch"):
+            crawl(spark, CrawlConfig(checkpoint_dir=d, partitions=8,
+                                     n_waves=2, **kw))
+        assert {k: spark.conf.get(k, None) for k in keys} == want
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_crawl_cli_runs_no_single_partition_window(tmp_path):
+    """Every window in a wave is partitioned: a crawl CLI run (Spark
+    logs at WARN) prints no "No Partition Defined" WindowExec warning,
+    which Spark emits once per unpartitioned window it plans."""
+    import json as _json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-m", "cuphic_spark.frontier.crawl",
+         "--universe", "500", "--seeds", "8", "--wave-cap", "16",
+         "--waves", "2", "--partitions", "4", "--cores", "2",
+         "--checkpoint-dir", str(tmp_path / "cli")],
+        cwd=root, capture_output=True, text=True, timeout=600,
+        env={**os.environ, "CUPHIC_DRIVER_MEM": "1g"})
+    assert out.returncode == 0, out.stderr[-3000:]
+    summary = _json.loads(out.stdout[out.stdout.index("{"):])
+    assert [m["scheduled"] > 0 for m in summary["metrics"]] == [True] * 2
+    assert "No Partition Defined" not in out.stderr
 
 
 def test_plan_read_properties_and_oracle_mirror():

@@ -209,7 +209,7 @@ def test_dedup_clusters_transitive_chains(spark, docs):
     base ~ base+' tail' ~ base+' tail tail' is ONE cluster labeled by
     the min doc_id, even if LSH misses some individual pair."""
     from cuphic_spark.operators.dedup import (
-        connected_components,
+        connected_components_star,
         dedup_clusters,
     )
 
@@ -235,7 +235,7 @@ def test_dedup_clusters_transitive_chains(spark, docs):
     path = spark.createDataFrame([(i, i + 1) for i in range(5)],
                                  "doc_a long, doc_b long")
     cc = {r.node: r.component
-          for r in connected_components(path).collect()}
+          for r in connected_components_star(path).collect()}
     assert set(cc.values()) == {0} and len(cc) == 6
 
 
@@ -553,11 +553,12 @@ def test_simhash_pairs_hot_chunk_star_capped(spark):
 
 
 def test_connected_components_nonconvergence_raises(spark):
-    """Advisor round-3: a component whose diameter exceeds max_iter
-    must fail LOUDLY instead of silently returning split clusters."""
+    """Advisor round-3: components that have not reached their star
+    fixpoint within max_iter must fail LOUDLY instead of silently
+    returning split clusters."""
     import pytest as _pytest
 
-    from cuphic_spark.operators.dedup import connected_components
+    from cuphic_spark.operators.dedup import connected_components_star
 
     chain = spark.createDataFrame([(i, i + 1) for i in range(9)],
                                   "doc_a long, doc_b long")
@@ -568,26 +569,25 @@ def test_connected_components_nonconvergence_raises(spark):
                 jsc.getPersistentRDDs().keySet().toArray()}
 
     before = persistent_ids()
+    # one round contracts the chain but cannot also confirm the
+    # fixpoint (that takes a round with no change)
     with _pytest.raises(ValueError, match="did not converge"):
-        connected_components(chain, max_iter=3)
+        connected_components_star(chain, max_iter=1)
     # advisory pin: the raise path must free the last round's
     # localCheckpoint blocks, not leak them into the block manager
     assert persistent_ids() == before
     # enough rounds: one component labeled by the min node
     cc = {r.node: r.component
-          for r in connected_components(chain, max_iter=15).collect()}
+          for r in connected_components_star(chain).collect()}
     assert set(cc.values()) == {0} and len(cc) == 10
 
 
 def test_connected_components_free_callback_releases_blocks(spark):
     """Advisory pin: the result derives from the final round's
-    localCheckpoint, which df.unpersist() cannot release — both
-    component algorithms expose free_components() for callers done
-    with the labels, and calling it empties the leaked set."""
-    from cuphic_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    localCheckpoint, which df.unpersist() cannot release — the
+    components expose free_components() for callers done with the
+    labels, and calling it empties the leaked set."""
+    from cuphic_spark.operators.dedup import connected_components_star
 
     def persistent_ids():
         jsc = spark.sparkContext._jsc
@@ -596,14 +596,13 @@ def test_connected_components_free_callback_releases_blocks(spark):
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long")
-    for algo in (connected_components, connected_components_star):
-        before = persistent_ids()
-        out = algo(edges)
-        got = {r.node: r.component for r in out.collect()}
-        assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-        assert persistent_ids() - before  # checkpoint blocks live
-        out.free_components()
-        assert persistent_ids() == before  # and released on demand
+    before = persistent_ids()
+    out = connected_components_star(edges)
+    got = {r.node: r.component for r in out.collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+    assert persistent_ids() - before  # checkpoint blocks live
+    out.free_components()
+    assert persistent_ids() == before  # and released on demand
 
     # star raise path frees its checkpoint too (max_iter=0 can never
     # converge, so it must raise without leaking the initial edges)
@@ -709,37 +708,23 @@ def test_ivf_indexed_probe_cap_falls_back(spark, emb, tmp_path):
 def test_connected_components_star_deep_chain(spark):
     """Large-star/small-star must resolve a 300-hop chain in O(log n)
     alternating rounds — the graph shape where min-label propagation
-    (one hop per round) would need 299 rounds and loudly refuses."""
-    from cuphic_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    (one hop per round) would need 299 rounds."""
+    from cuphic_spark.operators.dedup import connected_components_star
 
     chain = spark.createDataFrame([(i, i + 1) for i in range(299)],
                                   "doc_a long, doc_b long")
     got = {r.node: r.component
            for r in connected_components_star(chain).collect()}
     assert set(got.values()) == {0} and len(got) == 300
-    with _pytest_raises_nonconverge():
-        connected_components(chain, max_iter=5)
-
-
-def _pytest_raises_nonconverge():
-    import pytest as _pytest
-
-    return _pytest.raises(ValueError, match="did not converge")
 
 
 def test_connected_components_star_matches_label(spark):
-    """Star contraction and min-label propagation are the same
-    operator: identical (node, component) output on a random graph
-    with multiple components, self-loops, and isolated pairs."""
+    """Star contraction equals a pure-Python union-find (components
+    labeled by their min node) on a random graph with multiple
+    components, self-loops, and isolated pairs."""
     import random
 
-    from cuphic_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from cuphic_spark.operators.dedup import connected_components_star
 
     rng = random.Random(11)
     edges = {(rng.randrange(200), rng.randrange(200))
@@ -748,9 +733,19 @@ def test_connected_components_star_matches_label(spark):
     df = spark.createDataFrame(sorted(edges), "doc_a long, doc_b long")
     star = {(r.node, r.component)
             for r in connected_components_star(df).collect()}
-    label = {(r.node, r.component)
-             for r in connected_components(df, max_iter=100).collect()}
-    assert star == label
+
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # root = min node
+    assert star == {(x, find(x)) for x in parent}
 
 
 def test_line_dedup_winner_semantics(spark):

@@ -362,36 +362,6 @@ class TestFullRfcRobotsInCrawl:
              for e in oracle.fetch_log]
         shutil.rmtree(d, ignore_errors=True)
 
-    def test_explicit_prefix_mode_still_refuses(self, spark,
-                                                tmp_path):
-        """robots_mode='prefix' keeps the loud refusal on wildcard
-        corpora (no silent approximation), and an unknown mode is
-        rejected."""
-        import pytest as _pytest
-
-        from cuphic_spark.frontier.crawl import CrawlConfig, crawl
-
-        import __spark_entry__ as entry
-
-        def bodies_fn(spark_, version, nh):
-            return spark_.createDataFrame(
-                [(f"host{h}.example",
-                  entry._wildcard_robots_body(h)) for h in range(nh)],
-                "host string, robots_txt string")
-
-        kw = dict(universe=500, n_seeds=4, budget_per_host=4,
-                  wave_cap=8, n_waves=1)
-        cfg = CrawlConfig(checkpoint_dir=str(tmp_path / "px"), **kw,
-                          extra={"robots_txt_fn": bodies_fn,
-                                 "robots_mode": "prefix"})
-        with _pytest.raises(ValueError, match="prefix fast path"):
-            crawl(spark, cfg)
-        cfg2 = CrawlConfig(checkpoint_dir=str(tmp_path / "bad"), **kw,
-                           extra={"robots_txt_fn": bodies_fn,
-                                  "robots_mode": "fancy"})
-        with _pytest.raises(ValueError, match="robots_mode"):
-            crawl(spark, cfg2)
-
 
 class TestCrawlDelayBudgets:
     def test_budgets_from_delays(self, spark):
