@@ -37,7 +37,8 @@ score-sorted runs — see frontier/bands.py) and seen_w:
 5. fetch scheduled (simulated: webgraph.gen_html)
 6. extract hrefs with the cuphic engine ([:a {:href href} ???]),
    canonicalize (column expressions), distinct
-7. new = links - seen_w  (bloom prune + exact anti-join)
+7. new = links - seen_w  (one pre-filter, cuckoo or bloom, + exact
+   anti-join)
 8. frontier_{w+1} = manifest{unread bands carried BY REFERENCE}
    + written delta{(eligible - scheduled) ∪ new(depth=w+1, scored)}
    — checkpoint write volume is O(rows_read + new), never O(|frontier|)
@@ -60,13 +61,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import webgraph
-from .seen import (
-    bloom_est_fp,
-    bloom_merge_urls,
-    bloom_popcount,
-    build_bloom,
-    filter_new_urls,
-)
+from .seen import SeenFilters, filter_new_urls
 from .urlnorm import canonicalize_cols, host_col, path_col
 
 FRONTIER_SCHEMA = "url string, host string, depth int, score long, discovered_wave int"
@@ -93,16 +88,15 @@ class CrawlConfig:
     # rate (from the bitmap popcount, emitted per wave as
     # bloom_est_fp) crosses bloom_fp_rebuild; a fixed-size bloom
     # saturates silently at ~m/10 keys and quietly becomes a no-op
-    use_bloom: bool = True
-    bloom_mode: str = "global"    # 'global' (broadcast bitmap,
-    # accumulator-maintained on the seen write — right up to ~10^8
+    bloom_mode: str = "global"    # 'global' (broadcast bitmap, each
+    # wave's delta folded in on the crawl pool — right up to ~10^8
     # seen urls) | 'sharded' (one bitmap per seen partition, probed
     # and maintained via partition-local cogroups — the 10^10 design
     # point where a single 16-bits/key bitmap is ~20 GB and cannot
     # broadcast; executor memory is ONE shard, m_shard/8 bytes).
     # Blooms only prune, so scheduling is byte-identical between the
-    # modes (invariance-pinned); only bloom_m/popcount metrics and
-    # the memory shape differ.
+    # modes (invariance-pinned); only the bloom_* metrics and the
+    # memory shape differ.
     bloom_min_seen: int = 50_000  # skip bloom build below this (the
     # prefilter only pays once the seen table dwarfs the candidates)
     bloom_fp_rebuild: float = 0.2  # est-fp threshold that schedules a
@@ -110,8 +104,7 @@ class CrawlConfig:
     # wave boundary; filters only prune, so scheduling is byte-
     # identical across any resize history (pinned by the forced-
     # saturation test)
-    use_cuckoo: bool = True       # partition-local cuckoo shard prune
-    cuckoo_min_seen: int = 50_000
+    cuckoo_min_seen: int = 50_000  # partition-local cuckoo shard prune
     cuckoo_probe_min_ratio: float = 8.0  # probe the cuckoo shards
     # only when the seen set is at least this many times the previous
     # wave's distinct-link count: the probe Arrow-ships EVERY
@@ -120,8 +113,8 @@ class CrawlConfig:
     # (steady-state crawl over a 10^10 frontier). In the expansion
     # phase (candidates comparable to seen) it is pure overhead —
     # measured -17% wall on a production-shaped 10^6-url wave. Shard
-    # MAINTENANCE follows the same prediction (see maintain_cuckoo in
-    # the wave loop): skipped waves DROP the shards — never leave
+    # MAINTENANCE follows the same prediction (seen.cuckoo_probes,
+    # SeenFilters.maintain): skipped waves DROP the shards — never leave
     # them stale — and the ratio crossing triggers a full rebuild
     # from the seen table. 0 forces probe + maintenance whenever
     # shards can exist.
@@ -508,15 +501,14 @@ class Wave:
 
 def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
              manifest: dict, seen: DataFrame, pool,
-             n_seen_hint: int | None = None,
-             cuckoo_shards: DataFrame | None = None,
-             bloom: bytes | None = None,
-             prev_links_hint: int | None = None,
-             bloom_m: int | None = None,
-             bloom_shards: DataFrame | None = None) -> Wave:
+             filters: SeenFilters, n_seen: int,
+             prev_links: int | None) -> Wave:
     """Schedules one wave and builds its lazy commit chain; returns
     the Wave. ``pool`` (the crawl's thread pool) runs the stats job
     and the layout build while the rest of the chain is constructed.
+    ``filters`` supplies the seen check's pre-filter; ``n_seen`` is
+    the seen count, ``prev_links`` the previous wave's distinct links
+    (None when none was observed).
 
     The wave never touches the whole frontier: ``manifest`` (see
     frontier/bands.py) describes the frontier as score-band files
@@ -760,34 +752,6 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
                           .observe(obs_links, *links_aggs)
                           .cache())
 
-        use_bloom = (bloom is not None or bloom_shards is not None) \
-            and cfg.use_bloom and (
-                n_seen_hint is None or n_seen_hint >= cfg.bloom_min_seen)
-        if not use_bloom:
-            bloom = None
-            bloom_shards = None
-
-        def _seen_filter(cand, seen_side):
-            """Bloom prune (global broadcast bitmap OR partition-local
-            shards — identical pruning semantics) + exact anti-join."""
-            nonlocal bloom
-            if bloom_shards is not None:
-                from .seen import filter_new_urls_sharded
-
-                return filter_new_urls_sharded(
-                    cand, seen_side, bloom_shards, cfg.partitions,
-                    strategy=seen_strategy)
-            if hasattr(bloom, "result"):
-                # activation/rebuild build submitted as a pool future
-                # by _crawl_loop — joined HERE, the first point the
-                # bitmap bytes are needed, so the build job overlapped
-                # the schedule phase's stats job instead of preceding
-                # it
-                bloom = bloom.result()
-            return filter_new_urls(cand, seen_side, bloom,
-                                   bloom_m or cfg.bloom_bits,
-                                   strategy=seen_strategy)
-
         # the broadcast strategy forces F.broadcast(candidates): its
         # correctness is unconditional but its MEMORY is bounded only by
         # the candidate set, so it is admissible only while the previous
@@ -803,40 +767,15 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         # (measured: the 4M-wave bootstrap blew the 300 s default on 8
         # cores — BENCH/crawl_steady_r7.json note)
         seen_strategy = (
-            "broadcast" if (n_seen_hint is not None
-                            and n_seen_hint >= cfg.broadcast_seen_min
-                            and prev_links_hint is not None
-                            and prev_links_hint
-                            <= cfg.broadcast_max_candidates)
+            "broadcast" if (n_seen >= cfg.broadcast_seen_min
+                            and prev_links is not None
+                            and prev_links <= cfg.broadcast_max_candidates)
             else "shuffle")
-
-        candidates = distinct_links
-        use_cuckoo = (cfg.use_cuckoo and cuckoo_shards is not None
-                      and (n_seen_hint is None
-                           or n_seen_hint >= cfg.cuckoo_min_seen))
-        if (use_cuckoo and n_seen_hint is not None
-                and prev_links_hint is not None
-                and n_seen_hint < cfg.cuckoo_probe_min_ratio
-                * prev_links_hint):
-            # expansion-phase routing: candidates are comparable to the
-            # seen set, so the per-candidate probe cogroup costs more
-            # than the anti-join rows it saves (see CrawlConfig
-            # docstring) — route straight to bloom + anti-join
-            use_cuckoo = False
-        if use_cuckoo:
-            # partition-local prune: candidates flagged definitely-new by
-            # their host partition's cuckoo shard skip the anti-join
-            from .seen import cuckoo_prune
-
-            flagged = cuckoo_prune(candidates, cuckoo_shards, cfg.partitions)
-            fresh = (flagged.where(~F.col("maybe_seen_cuckoo"))
-                     .drop("maybe_seen_cuckoo", "partition"))
-            to_check = (flagged.where(F.col("maybe_seen_cuckoo"))
-                        .drop("maybe_seen_cuckoo", "partition"))
-            confirmed = _seen_filter(to_check, seen)
-            new_urls = fresh.unionByName(confirmed)
-        else:
-            new_urls = _seen_filter(candidates, seen)
+        # ONE pre-filter (cuckoo shards or bloom, SeenFilters.prefilter)
+        # lets definitely-new candidates skip the exact anti-join
+        prefilter, cuckoo_probed = filters.prefilter(n_seen, prev_links)
+        new_urls = filter_new_urls(distinct_links, seen, prefilter,
+                                   seen_strategy)
         # no frontier anti-join needed: every frontier url is already in
         # seen (seeds via seen_seed, discoveries via their wave's delta),
         # so surviving the seen anti-join implies not-pending either —
@@ -1023,7 +962,7 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         wave=wave, plan=plan, frontier_delta=frontier_delta_prepped,
         seen_delta=seen_delta, seen_delta_out=seen_delta_out,
         fetch_log=fetch_log, delta_counts=delta_counts, caches=caches,
-        seen_strategy=seen_strategy, cuckoo_probed=use_cuckoo,
+        seen_strategy=seen_strategy, cuckoo_probed=cuckoo_probed,
         n_denied=n_denied, dropped=dropped_acc,
         observed={"fetch": (obs_fetch, fetched, fetch_aggs),
                   "links": (obs_links, distinct_links, links_aggs),
@@ -1088,20 +1027,6 @@ def _partitioned_write(df: DataFrame, path: str, cfg: CrawlConfig):
     directory inference would see conflicting structures across
     roots)."""
     _partition_layout(df, cfg).write.mode("overwrite").parquet(path)
-
-
-#: 2^27 bits = 16 MiB — the broadcast-comfort ceiling shared by first
-#: activation (bloom_auto_bits) and the ×8 saturation rebuild path.
-BLOOM_MAX_BITS = 1 << 27
-
-
-def bloom_auto_bits(n_seen: int) -> int:
-    """Power-of-two bloom size giving ~16 bits per already-seen key
-    at first activation (k=3 -> est-fp ~0.5%), floored at 2^8 and
-    capped at BLOOM_MAX_BITS = 2^27 (16 MiB broadcast). Pure function
-    — the crawl oracle computes the identical value."""
-    bits = max(8, (16 * max(n_seen, 1) - 1).bit_length())
-    return min(1 << bits, BLOOM_MAX_BITS)
 
 
 def last_complete_wave(cfg: CrawlConfig) -> int:
@@ -1197,13 +1122,14 @@ def crawl(spark: SparkSession, cfg: CrawlConfig) -> dict:
     # the pool that runs the pipelined checkpoint writes is owned HERE
     # so any exception inside the loop still joins in-flight writes
     # (a write racing session teardown is worse than a leaked cache)
-    # 5 slots: fetch_log + frontier + cuckoo + sharded-bloom writes +
-    # the bloom bitmap fold can all be in flight once the seen delta
+    # 5 slots: the fetch_log, frontier, cuckoo and bloom (fold or
+    # shard merge) writes can all be in flight once the seen delta
     # commits. The driver-side overlap tasks (stats collect, layout
-    # build, the previous wave's finalize) queue behind them, which is
-    # safe only under one rule: NO POOL TASK EVER WAITS ON A FUTURE
-    # SUBMITTED AFTER ITSELF. Every wait on the pool's results happens
-    # on the main thread (or on an earlier-submitted future), so a full
+    # build, bloom activation build, the previous wave's finalize)
+    # queue behind them, which is safe only under one rule: NO POOL
+    # TASK EVER WAITS ON A FUTURE SUBMITTED AFTER ITSELF. Every wait on
+    # the pool's results happens on the main thread (or on an earlier-
+    # submitted future: the bloom fold on its activation build), so a full
     # pool only delays work and cannot deadlock; a task that blocks on
     # a later submission could wait forever behind itself.
     pool = ThreadPoolExecutor(max_workers=5)
@@ -1224,7 +1150,7 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
     start = last_complete_wave(cfg) + 1
     seed_path = os.path.join(cfg.checkpoint_dir, "seen_seed")
     seed_frontier_dir = os.path.join(cfg.checkpoint_dir, "frontier_seed")
-    prev_links = None
+    prev, prev_lineage, prev_links = None, {}, None
     if start == 0:
         seeds = seed_frontier(spark, cfg)
         # the two seed writes are independent (separate dirs, and the
@@ -1284,45 +1210,8 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
         n_seen = seen.count()  # parquet footer count — cheap
         prev_links = prev_lineage.get("metrics", {}).get("links_distinct")
 
-    cuckoo_shards = None
-    if cfg.use_cuckoo and start > 0:
-        prev_cuckoo = os.path.join(_wave_dir(cfg, start - 1), "cuckoo")
-        if os.path.isdir(prev_cuckoo):
-            cuckoo_shards = spark.read.parquet(prev_cuckoo)
-
-    # bloom bitmap: maintained INCREMENTALLY (seed once when the seen
-    # set crosses the threshold, then OR-in each wave's delta —
-    # per-wave bloom cost is O(new urls), never an O(|seen|) rescan)
-    # and persisted per wave for resume.
-    bloom = None
-    bloom_m = cfg.bloom_bits
-    bloom_rebuild = False
-    bloom_shards = None           # sharded mode: (partition, bitmap) DF
-    shard_m = cfg.bloom_bits      # per-shard bit count
-    if cfg.use_bloom and start > 0:
-        # a pending saturation rebuild is re-derived from the last
-        # wave's recorded est-fp so a resumed run reproduces the
-        # uninterrupted one exactly (a wave records it only when it
-        # had a bitmap or shards, which the branches below reload)
-        prev_fp = prev_lineage.get("metrics", {}).get("bloom_est_fp")
-        bloom_rebuild = (prev_fp is not None
-                         and prev_fp > cfg.bloom_fp_rebuild)
-        prev_bloom = os.path.join(_wave_dir(cfg, start - 1), "bloom.bin")
-        if cfg.bloom_mode != "sharded" and os.path.exists(prev_bloom):
-            with open(prev_bloom, "rb") as fh:
-                bloom = fh.read()
-            # the effective bit count is persisted via the bitmap
-            # length (nbytes = m//8 + 1)
-            bloom_m = (len(bloom) - 1) * 8
-        prev_shards = os.path.join(_wave_dir(cfg, start - 1),
-                                   "bloom_shards")
-        if cfg.bloom_mode == "sharded" and os.path.isdir(prev_shards):
-            from .seen import bloom_shard_bits
-
-            bloom_shards = spark.read.parquet(prev_shards)
-            one = bloom_shards.select("bitmap").limit(1).collect()
-            if one:  # shard_m persisted via bitmap length, like bloom.bin
-                shard_m = bloom_shard_bits(bytes(one[0].bitmap))
+    filters = SeenFilters.load(spark, cfg, prev,
+                               prev_lineage.get("metrics", {}))
 
     import time as _time
 
@@ -1378,61 +1267,10 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
         # serially between the schedule phase and the writes)
         f_fin = (pool.submit(_finalize, pending)
                  if pending is not None else None)
-        shards_cache = None  # activation/rebuild cache, freed post-merge
-        if (cfg.use_bloom and cfg.bloom_mode == "sharded"
-                and n_seen >= cfg.bloom_min_seen):
-            # sharded activation / saturation rebuild: per-shard auto
-            # size targets ~16 bits/key of the partition's share
-            # (uniform pmod split); ×8 rebuild capped per shard at
-            # the same BLOOM_MAX_BITS. The build is a distributed
-            # applyInPandas — no driver bitmap at any point.
-            if bloom_shards is None or (bloom_rebuild
-                                        and shard_m < BLOOM_MAX_BITS):
-                from .seen import build_bloom_shards
-
-                if bloom_shards is None:
-                    shard_m = bloom_auto_bits(
-                        max(1, n_seen // max(1, cfg.partitions)))
-                else:
-                    shard_m = min(shard_m * 8, BLOOM_MAX_BITS)
-                bloom_shards = build_bloom_shards(
-                    seen, cfg.partitions, shard_m).cache()
-                shards_cache = bloom_shards
-        elif cfg.use_bloom and n_seen >= cfg.bloom_min_seen:
-            if bloom is None:
-                # first activation: size from the KNOWN seen count
-                # (~16 bits/key -> est-fp ~0.5%) instead of starting
-                # saturated and paying x8 rebuilds wave after wave;
-                # cfg.bloom_bits stays the floor, 2^27 (16 MiB
-                # broadcast) the ceiling. Oracle mirrors the formula.
-                # Submitted to the pool as a FUTURE: run_wave only
-                # consumes the bitmap when it builds the seen-filter
-                # plan (after the schedule phase's stats job), so the
-                # build job overlaps scheduling instead of serializing
-                # ahead of it (round 8; bitmap bytes are identical —
-                # only the launch point moves).
-                bloom_m = max(bloom_m, bloom_auto_bits(n_seen))
-                bloom = pool.submit(build_bloom, seen, bloom_m)
-            elif bloom_rebuild and bloom_m < BLOOM_MAX_BITS:
-                # saturation rebuild at the wave boundary (the est-fp
-                # signal fired last wave): geometric ×8 growth,
-                # rebuilt from the seen table — the source of truth
-                # the bitmap only approximates. Amortized-rare by the
-                # geometric growth; filters only prune, so scheduling
-                # is identical across any resize history. Capped at
-                # the same 2^27 (16 MiB) broadcast ceiling as first
-                # activation — past the cap the bitmap stays saturated
-                # but still-correct (it only prunes; the anti-join is
-                # exact) and the cost router will stop consulting it.
-                bloom_m = min(bloom_m * 8, BLOOM_MAX_BITS)
-                bloom = pool.submit(build_bloom, seen, bloom_m)
-        bloom_rebuild = False
+        filters.activate(seen, n_seen, pool)
         _mark("bloom_build")
-        w = run_wave(
-            spark, cfg, wave, manifest, seen, pool, n_seen_hint=n_seen,
-            cuckoo_shards=cuckoo_shards, bloom=bloom,
-            prev_links_hint=prev_links,
-            bloom_m=bloom_m, bloom_shards=bloom_shards)
+        w = run_wave(spark, cfg, wave, manifest, seen, pool, filters,
+                     n_seen, prev_links)
         # the residual half of the frontier delta's score histogram
         # reads only schedule-phase caches — count it on the pool NOW
         # so the collect overlaps the seen-delta write below; the
@@ -1440,12 +1278,6 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
         # commits, inside write_frontier (see run_wave delta_counts)
         f_early_counts = pool.submit(_score_counts,
                                      w.delta_counts["early"])
-        if hasattr(bloom, "result"):
-            # activation/rebuild future: resolved inside run_wave's
-            # seen-filter plan build (overlapping the stats job);
-            # here it is already done — this just unwraps the bytes
-            # for the accumulator fold below
-            bloom = bloom.result()
         _mark("schedule")
         # the previous wave's fetch_log drain + finalize overlapped
         # the schedule phase above (pool future); it must complete
@@ -1511,101 +1343,25 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
                 cfg, manifest, w.plan,
                 score_counts=sorted(merged.items()), prepped=True)
 
-        def maintain_cuckoo(n_seen_after, probe_next):
-            # Maintain shards only when the NEXT wave is predicted to
-            # probe them (same seen/candidate ratio the probe router
-            # uses): in the expansion phase every wave's incremental
-            # fold is flat per-wave cost for a filter nobody reads.
-            # Skipping maintenance DROPS the shards (returns None and
-            # writes no cuckoo dir) — a stale shard would false-
-            # negative, which the definitely-new bypass turns into a
-            # correctness bug, so the only safe skip is drop-and-
-            # rebuild-from-seen when the ratio finally crosses
-            # (maintain_cuckoo_shards with shards=None does exactly
-            # that full rebuild; amortized-rare by the ratio check).
-            if not probe_next:
-                return None
-            from .seen import maintain_cuckoo_shards
-
-            return maintain_cuckoo_shards(
-                cuckoo_shards, w.seen_delta.select("url"),
-                _read_seen(spark, cfg, wave), cfg.partitions,
-                path=os.path.join(d, "cuckoo"))
-
-        def maintain_bloom_shards():
-            # sharded-mode maintenance: OR the wave's delta into each
-            # touched shard (cogroup, partition-local) and persist —
-            # the sharded twin of the accumulator fold, with zero
-            # driver-side bitmap; stats feed the same est-fp signal
-            if bloom_shards is None or cfg.bloom_mode != "sharded":
-                return None
-            from .seen import bloom_shards_stats, merge_bloom_shards
-
-            p = os.path.join(d, "bloom_shards")
-            merge_bloom_shards(bloom_shards, w.seen_delta.select("url"),
-                               cfg.partitions, shard_m) \
-                .write.mode("overwrite").parquet(p)
-            new_df = spark.read.parquet(p)
-            return (new_df,) + bloom_shards_stats(new_df)
-
         pool.submit(write_seen_delta).result()
         w.f_log = pool.submit(w.fetch_log.write.mode("overwrite").parquet,
                               os.path.join(d, "fetch_log"))
         f_frontier = pool.submit(write_frontier)
-        f_bshards = pool.submit(maintain_bloom_shards)
-        # bloom maintenance: fold the committed delta (cached
-        # new_rows — obs_new rode the seen write, so the cache is
-        # warm) into the bitmap on the pool; bit-identical to the
-        # old in-write accumulator (same xxhash64 -> _bit_indices
-        # positions), overlapping the fetch_log/frontier writes
-        # instead of taxing the seen-delta write with a pandas pass
-        f_bloom = (pool.submit(bloom_merge_urls,
-                               w.seen_delta.select("url"), bloom_m, bloom,
-                               16)
-                   if (cfg.use_bloom and bloom is not None) else None)
-        # obs_new/obs_links rode the just-committed seen write —
-        # the cuckoo maintenance decision needs the post-wave
-        # seen count and candidate volume without blocking on the
-        # fetch_log write's observation
-        n_seen_after = n_seen + int(w.get("new")["n"])
-        probe_next = (
-            cfg.use_cuckoo
-            and n_seen_after >= cfg.cuckoo_min_seen
-            and (cfg.cuckoo_probe_min_ratio == 0
-                 or n_seen_after >= cfg.cuckoo_probe_min_ratio
-                 * max(int(w.get("links")["d"]), 1)))
-        f_cuckoo = pool.submit(maintain_cuckoo, n_seen_after,
-                               probe_next)
+        # obs_new/obs_links rode the just-committed seen write — the
+        # filter maintenance needs the post-wave seen count and
+        # candidate volume without blocking on the fetch_log write's
+        # observation
+        n_seen += int(w.get("new")["n"])
+        seen = _read_seen(spark, cfg, wave)
         # metrics that do NOT ride the fetch_log write are assembled
-        # now (bloom fold needs only the committed seen delta — the
-        # accumulator rode that write); the obs_fetch-backed ones are
-        # read in _finalize, after the deferred f_log drain
+        # now (the filter maintenance needs only the committed seen
+        # delta); the obs_fetch-backed ones are read in _finalize,
+        # after the deferred f_log drain
         extra_metrics = w.extra_metrics = {
-            "frontier_rows_read": w.plan.rows_read}
-        n_seen = n_seen_after
-        if f_bloom is not None:
-            # join the pool-side fold, persist + saturation signal
-            bloom = f_bloom.result()
-            with open(os.path.join(d, "bloom.bin"), "wb") as fh:
-                fh.write(bloom)
-            pc = bloom_popcount(bloom)
-            extra_metrics["bloom_m"] = bloom_m
-            extra_metrics["bloom_popcount"] = pc
-            extra_metrics["bloom_est_fp"] = bloom_est_fp(pc, bloom_m)
-            bloom_rebuild = (extra_metrics["bloom_est_fp"]
-                             > cfg.bloom_fp_rebuild)
-        bs = f_bshards.result()
-        if bs is not None:
-            if shards_cache is not None:
-                shards_cache.unpersist()  # merged parquet replaces it
-            bloom_shards, m_total, pc = bs
-            extra_metrics["bloom_m"] = m_total
-            extra_metrics["bloom_popcount"] = pc
-            extra_metrics["bloom_est_fp"] = bloom_est_fp(pc, m_total)
-            bloom_rebuild = (extra_metrics["bloom_est_fp"]
-                             > cfg.bloom_fp_rebuild)
+            "frontier_rows_read": w.plan.rows_read,
+            **filters.maintain(pool, w.seen_delta.select("url"), seen, d,
+                               n_seen, int(w.get("links")["d"]))}
         new_manifest, rows_written = f_frontier.result()
-        cuckoo_shards = f_cuckoo.result()
         bands_mod.write_manifest(os.path.join(d, "frontier"),
                                  new_manifest)
         # manifest bookkeeping (footer counts recorded at write time):
@@ -1640,7 +1396,6 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
         }
         pending = w
         manifest = new_manifest
-        seen = _read_seen(spark, cfg, wave)
         prev_links = int(w.get("links")["d"])
         if cfg.compact_every and (wave + 1) % cfg.compact_every == 0:
             # compaction must see a fully-committed wave (and resume

@@ -1,8 +1,8 @@
-"""URL-seen set: broadcast bloom pre-filter + partitioned cuckoo
-filters + exact anti-join.
+"""URL-seen set: ONE pre-filter per wave (partitioned cuckoo shards
+or the bloom) + the exact anti-join.
 
-Correctness contract: the FILTERS only prune (false positives allowed,
-false negatives impossible); exactness always comes from the
+Correctness contract: the PRE-FILTER only prunes (false positives
+allowed, false negatives impossible); exactness always comes from the
 ``left_anti`` join against the seen table. That keeps results
 identical at any parallelism level — the crux of matching crawl
 ordering at local[8] vs local[32] (SURVEY §7.4).
@@ -14,20 +14,32 @@ Scale design (10^10 urls):
   plain shuffle anti-join, or a broadcast semi/anti two-phase where
   the seen table only STREAMS — the steady-state choice once seen
   dwarfs a wave's candidates;
-* the broadcast bloom is FIXED SIZE (default 2^22 bits = 512 KiB):
-  built distributedly as per-partition bitmaps (tree-merged, driver
-  cost bounded by 8·m/8 bytes) and maintained INCREMENTALLY by
-  OR-ing each wave's delta; at extreme scale it saturates toward
-  no-op pruning but never breaks correctness;
+* the broadcast bloom is AUTO-SIZED at first activation from the seen
+  count (~16 bits/key, ``bloom_auto_bits``) and rebuilt ×8 from the
+  seen table whenever its popcount-estimated false-positive rate
+  crosses ``bloom_fp_rebuild``, up to ``BLOOM_MAX_BITS`` = 2^27 bits
+  (16 MiB): built distributedly as per-partition bitmaps
+  (tree-merged, driver cost bounded by 8·m/8 bytes) and maintained
+  INCREMENTALLY by OR-ing each wave's delta; past the cap it
+  saturates toward no-op pruning but never breaks correctness;
 * cuckoo shards give per-partition ~8 bits/key membership with
   deletions (needed when a frontier partition is re-scored); bucket
   counts are powers of two so the xor-fold alternate bucket is an
   involution (a non-involutive fold silently loses evicted
   fingerprints — round-1 advisor finding); stored as parquet
-  alongside the seen snapshot.
+  alongside the seen snapshot;
+* a wave probes ONE of them (``SeenFilters.prefilter``): the cuckoo
+  shards when the probe routes on (``cuckoo_probes``), else the bloom
+  once active. The bloom stacked behind the cuckoo would only see the
+  cuckoo's positives — already-seen urls plus a ~1e-4 false-positive
+  share of the new ones — which it cannot prune. Both are still
+  maintained every wave (``SeenFilters.maintain``).
 """
 
 from __future__ import annotations
+
+import os
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -54,6 +66,17 @@ def _bit_indices(urls_hash: "pd.Series", m: int) -> np.ndarray:
 def _set_bits(arr: np.ndarray, h: "pd.Series", m: int) -> None:
     idx = _bit_indices(h, m).reshape(-1)
     np.bitwise_or.at(arr, idx // 8, (1 << (idx % 8)).astype(np.uint8))
+
+
+def _all_bits_set(arr: np.ndarray, h: "pd.Series", m: int) -> np.ndarray:
+    """The bloom probe: True where all k bits of a url hash are set in
+    the uint8 bitmap ``arr`` of m bits."""
+    idx = _bit_indices(h, m)
+    hit = np.ones(len(h), dtype=bool)
+    for k in range(_K_HASHES):
+        b = idx[:, k]
+        hit &= (arr[b // 8] >> (b % 8).astype(np.uint8) & 1).astype(bool)
+    return hit
 
 
 def bloom_merge_urls(urls: DataFrame, m: int = BLOOM_BITS_DEFAULT,
@@ -153,13 +176,8 @@ def bloom_maybe_seen(candidates: DataFrame, bloom: bytes,
 
     @F.pandas_udf(T.BooleanType())
     def probe(h: pd.Series) -> pd.Series:
-        arr = np.frombuffer(bc.value, dtype=np.uint8)
-        idx = _bit_indices(h, m)
-        hit = np.ones(len(h), dtype=bool)
-        for k in range(_K_HASHES):
-            b = idx[:, k]
-            hit &= (arr[b // 8] >> (b % 8).astype(np.uint8) & 1).astype(bool)
-        return pd.Series(hit)
+        return pd.Series(_all_bits_set(
+            np.frombuffer(bc.value, dtype=np.uint8), h, m))
 
     return candidates.withColumn("maybe_seen", probe(F.xxhash64("url")))
 
@@ -189,15 +207,16 @@ def _anti_seen(candidates: DataFrame, seen: DataFrame,
 
 
 def filter_new_urls(candidates: DataFrame, seen: DataFrame,
-                    bloom: bytes | None = None,
-                    m: int = BLOOM_BITS_DEFAULT,
-                    strategy: str = "shuffle") -> DataFrame:
-    """Exact new-url filter: bloom prune (optional) then the exact
-    membership check (see ``_anti_seen`` for the strategy choice).
-    Candidates with maybe_seen=False skip the join entirely."""
-    if bloom is None:
+                    prefilter=None, strategy: str = "shuffle") -> DataFrame:
+    """Exact new-url filter: the optional ``prefilter`` (candidates ->
+    candidates + boolean ``maybe_seen``: ``cuckoo_prune``,
+    ``bloom_maybe_seen`` or ``bloom_shards_prune``) flags each
+    candidate, and only maybe-seen ones pay the exact membership
+    check (see ``_anti_seen`` for the strategy choice); definitely-new
+    ones skip the join entirely."""
+    if prefilter is None:
         return _anti_seen(candidates, seen, strategy)
-    flagged = bloom_maybe_seen(candidates, bloom, m)
+    flagged = prefilter(candidates)
     definitely_new = flagged.where(~F.col("maybe_seen")).drop("maybe_seen")
     to_confirm = flagged.where(F.col("maybe_seen")).drop("maybe_seen")
     confirmed = _anti_seen(to_confirm, seen, strategy)
@@ -226,8 +245,8 @@ BLOOM_SHARD_SCHEMA = T.StructType([
 
 
 def bloom_shard_bits(bitmap: bytes) -> int:
-    """m_shard is persisted via the bitmap length (same nbytes = m//8
-    + 1 convention as the global bloom)."""
+    """A bitmap's m, persisted via its length (nbytes = m//8 + 1 —
+    every bitmap here, a shard's or the global bloom.bin)."""
     return (len(bitmap) - 1) * 8
 
 
@@ -317,15 +336,9 @@ def bloom_shards_prune(candidates: DataFrame, shards: DataFrame,
             cand_pdf["maybe_seen"] = False
             return cand_pdf
         bitmap = bytes(shard_pdf["bitmap"].iloc[0])
-        m = bloom_shard_bits(bitmap)
-        arr = np.frombuffer(bitmap, dtype=np.uint8)
-        idx = _bit_indices(cand_pdf["h"], m)
-        hit = np.ones(len(cand_pdf), dtype=bool)
-        for k in range(_K_HASHES):
-            b = idx[:, k]
-            hit &= (arr[b // 8] >> (b % 8).astype(np.uint8) & 1) \
-                .astype(bool)
-        cand_pdf["maybe_seen"] = hit
+        cand_pdf["maybe_seen"] = _all_bits_set(
+            np.frombuffer(bitmap, dtype=np.uint8), cand_pdf["h"],
+            bloom_shard_bits(bitmap))
         return cand_pdf
 
     return (keyed.groupBy("partition")
@@ -348,7 +361,7 @@ def bloom_shards_stats(shards: DataFrame) -> tuple[int, int]:
 
     @F.pandas_udf(T.LongType())
     def bits(b: pd.Series) -> pd.Series:
-        return b.apply(lambda x: (len(bytes(x)) - 1) * 8)
+        return b.apply(lambda x: bloom_shard_bits(bytes(x)))
 
     row = (shards.select(pc(F.col("bitmap")).alias("pc"),
                          bits(F.col("bitmap")).alias("m"))
@@ -356,20 +369,6 @@ def bloom_shards_stats(shards: DataFrame) -> tuple[int, int]:
                 F.coalesce(F.sum("pc"), F.lit(0)).alias("pc"))
            .collect()[0])
     return int(row.m), int(row.pc)
-
-
-def filter_new_urls_sharded(candidates: DataFrame, seen: DataFrame,
-                            shards: DataFrame, n_partitions: int,
-                            strategy: str = "shuffle") -> DataFrame:
-    """filter_new_urls with the sharded-bloom prune in place of the
-    broadcast bitmap: identical output (both blooms only prune; the
-    anti-join is the exactness), different memory shape."""
-    flagged = bloom_shards_prune(candidates, shards, n_partitions)
-    definitely_new = flagged.where(~F.col("maybe_seen")) \
-        .drop("maybe_seen")
-    to_confirm = flagged.where(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed = _anti_seen(to_confirm, seen, strategy)
-    return definitely_new.unionByName(confirmed)
 
 
 # --------------------------------------------------------------------------
@@ -412,9 +411,6 @@ class CuckooFilter:
         i2 = (i1 ^ (fp.astype(np.int64) * 0x5BD1E995)) \
             & (self.n_buckets - 1)
         return fp, i1, i2
-
-    def _i1(self, h):
-        return int(h % np.uint64(self.n_buckets))
 
     def _i2(self, i1, fp):
         # xor-then-mask: involutive because n_buckets is a power of two
@@ -511,7 +507,7 @@ def _partition_of(url_col, n_partitions: int):
         F.lit(n_partitions)).cast("int")
 
 
-def update_cuckoo_shards(shards: DataFrame | None, new_urls: DataFrame,
+def update_cuckoo_shards(shards: DataFrame, new_urls: DataFrame,
                          n_partitions: int,
                          load_factor: float = 0.5) -> DataFrame:
     """Incrementally fold newly-seen urls into the per-partition
@@ -519,12 +515,9 @@ def update_cuckoo_shards(shards: DataFrame | None, new_urls: DataFrame,
     never a rebuild over the full seen set). Insertion order is
     sorted-by-url within partition -> byte-deterministic shards at
     any parallelism."""
-    spark = new_urls.sparkSession
     keyed = new_urls.select(
         "url", _partition_of(F.col("url"), n_partitions).alias("partition"),
         F.xxhash64("url").alias("h"))
-    if shards is None:
-        shards = spark.createDataFrame([], CUCKOO_SHARD_SCHEMA)
 
     def merge(key, new_pdf: pd.DataFrame, shard_pdf: pd.DataFrame):
         part = int(key[0])
@@ -559,44 +552,33 @@ def _any_overflow(path: str) -> bool:
     """True iff any row of the committed shard parquet has
     overflow=True — read driver-side (pyarrow, tiny file), zero
     Spark jobs."""
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    tbl = pq.read_table(path, columns=["overflow"])
-    col = tbl.column("overflow")
-    import pyarrow.compute as pc
-
+    col = pq.read_table(path, columns=["overflow"]).column("overflow")
     return bool(pc.any(col).as_py() or False)
 
 
 def maintain_cuckoo_shards(shards: DataFrame | None, delta_urls: DataFrame,
-                           full_seen: DataFrame,
-                           n_partitions: int,
-                           path: str | None = None) -> DataFrame:
+                           full_seen: DataFrame, n_partitions: int,
+                           path: str) -> DataFrame:
     """The safe maintenance protocol: incremental fold of the delta;
     if ANY partition overflowed, rebuild all shards from the seen
     table (source of truth) with extra headroom — restoring the
     no-false-negative invariant the definitely-new bypass relies on.
-    Geometric headroom makes full rebuilds amortized-rare.
+    Geometric headroom makes full rebuilds amortized-rare. ``shards``
+    None (dropped or never built) is a full build from the seen table.
 
-    With ``path`` set, the updated shards are written there directly
-    and the committed parquet is returned — the cogroup executes
-    exactly once (the write IS the materialization; the overflow
-    check reads the tiny committed file, not a second pass)."""
-    if shards is None:
-        fresh = build_cuckoo_shards(full_seen, n_partitions,
-                                    load_factor=0.25)
-        if path is None:
-            return fresh
-        fresh.write.mode("overwrite").parquet(path)
-        return delta_urls.sparkSession.read.parquet(path)
-    updated = update_cuckoo_shards(shards, delta_urls, n_partitions)
-    if path is None:
-        updated = updated.cache()
-        if updated.where(F.col("overflow")).limit(1).count() > 0:
-            return build_cuckoo_shards(full_seen, n_partitions,
-                                       load_factor=0.25)
-        return updated.drop("overflow")
+    The updated shards are written to ``path`` directly and the
+    committed parquet is returned — the cogroup executes exactly once
+    (the write IS the materialization; the overflow check reads the
+    tiny committed file, not a second pass)."""
     spark = delta_urls.sparkSession
+    if shards is None:
+        build_cuckoo_shards(full_seen, n_partitions, load_factor=0.25) \
+            .write.mode("overwrite").parquet(path)
+        return spark.read.parquet(path)
+    updated = update_cuckoo_shards(shards, delta_urls, n_partitions)
     updated.write.mode("overwrite").parquet(path)
     # overflow probe reads the just-committed tiny parquet (P rows)
     # driver-side via pyarrow — the probe was a whole Spark job per
@@ -613,8 +595,8 @@ def maintain_cuckoo_shards(shards: DataFrame | None, delta_urls: DataFrame,
 
 def cuckoo_prune(candidates: DataFrame, shards: DataFrame,
                  n_partitions: int) -> DataFrame:
-    """Adds boolean ``maybe_seen_cuckoo`` via a partition-local
-    cogroup probe: False = definitely new (cuckoo filters never
+    """Adds boolean ``maybe_seen`` via a partition-local cogroup
+    probe: False = definitely new (cuckoo filters never
     false-negative), True = confirm via anti-join."""
     keyed = (candidates
              .withColumn("partition",
@@ -622,23 +604,23 @@ def cuckoo_prune(candidates: DataFrame, shards: DataFrame,
              .withColumn("h", F.xxhash64("url")))
     out_schema = T.StructType(
         keyed.schema.fields
-        + [T.StructField("maybe_seen_cuckoo", T.BooleanType())])
+        + [T.StructField("maybe_seen", T.BooleanType())])
 
     def probe(key, cand_pdf: pd.DataFrame, shard_pdf: pd.DataFrame):
         cand_pdf = cand_pdf.copy()
         if not len(shard_pdf):
-            cand_pdf["maybe_seen_cuckoo"] = False
+            cand_pdf["maybe_seen"] = False
             return cand_pdf
         cf = CuckooFilter.from_bytes(bytes(shard_pdf["blob"].iloc[0]),
                                      int(shard_pdf["n_buckets"].iloc[0]))
         hashes = cand_pdf["h"].to_numpy(dtype=np.int64).view(np.uint64)
-        cand_pdf["maybe_seen_cuckoo"] = cf.contains_many(hashes)
+        cand_pdf["maybe_seen"] = cf.contains_many(hashes)
         return cand_pdf
 
     return (keyed.groupBy("partition")
             .cogroup(shards.groupBy("partition"))
             .applyInPandas(probe, out_schema)
-            .drop("h"))
+            .drop("h", "partition"))
 
 
 def build_cuckoo_shards(seen: DataFrame, n_partitions: int,
@@ -646,9 +628,7 @@ def build_cuckoo_shards(seen: DataFrame, n_partitions: int,
     """One cuckoo filter per seen partition, built executor-side with
     applyInPandas (urls sorted within partition -> deterministic)."""
     keyed = seen.select(
-        "url",
-        F.pmod(F.xxhash64(F.regexp_extract("url", r"^[a-z]+://([^/:?#]+)", 1)),
-               F.lit(n_partitions)).cast("int").alias("partition"),
+        "url", _partition_of(F.col("url"), n_partitions).alias("partition"),
         F.xxhash64("url").alias("h"))
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -666,3 +646,194 @@ def build_cuckoo_shards(seen: DataFrame, n_partitions: int,
                              "blob": [cf.to_bytes()]})
 
     return keyed.groupBy("partition").applyInPandas(build, CUCKOO_SHARD_SCHEMA)
+
+
+# --------------------------------------------------------------------------
+# The crawl's filter lifecycle
+# --------------------------------------------------------------------------
+
+#: 2^27 bits = 16 MiB — the broadcast-comfort ceiling shared by first
+#: activation (bloom_auto_bits) and the ×8 saturation rebuild path.
+BLOOM_MAX_BITS = 1 << 27
+
+
+def bloom_auto_bits(n_seen: int) -> int:
+    """Power-of-two bloom size giving ~16 bits per already-seen key
+    at first activation (k=3 -> est-fp ~0.5%), floored at 2^8 and
+    capped at BLOOM_MAX_BITS = 2^27 (16 MiB broadcast). Pure function
+    — the crawl oracle computes the identical value."""
+    bits = max(8, (16 * max(n_seen, 1) - 1).bit_length())
+    return min(1 << bits, BLOOM_MAX_BITS)
+
+
+def cuckoo_probes(cfg, n_seen: int, links: int | None) -> bool:
+    """Whether a wave over ``n_seen`` seen urls probes the cuckoo
+    shards, given the previous wave's distinct links (None: none
+    observed) — see CrawlConfig.cuckoo_probe_min_ratio. It also
+    predicts whether the next wave probes (``SeenFilters.maintain``)."""
+    return (n_seen >= cfg.cuckoo_min_seen
+            and (links is None
+                 or n_seen >= cfg.cuckoo_probe_min_ratio * max(links, 1)))
+
+
+def _write_bitmap(path: str, bitmap: bytes) -> None:
+    # plain write, no tmp + rename: a resume reads bloom.bin only from
+    # the last wave whose lineage marker (written after this) committed
+    # — a torn write re-runs its wave (pinned by fault-injection tests)
+    with open(path, "wb") as fh:
+        fh.write(bitmap)
+
+
+@dataclass
+class SeenFilters:
+    """The crawl's seen-set filter state, carried across waves:
+    ``bloom`` is the global bitmap (bytes, or the pool future building
+    them) or, when sharded, the (partition, bitmap) DataFrame; ``m``
+    the bits per bitmap (per shard); ``rebuild`` a pending ×8 rebuild;
+    ``cuckoo`` the cuckoo shards (None while dropped). Per wave:
+    ``activate`` at the boundary, ``prefilter`` in the seen check and
+    ``maintain`` after the seen-delta commit."""
+    cfg: object                   # CrawlConfig
+    bloom: object = None
+    m: int = 0
+    rebuild: bool = False
+    cuckoo: DataFrame | None = None
+    _built: DataFrame | None = None  # shard (re)build cache
+
+    @classmethod
+    def load(cls, spark, cfg, prev_dir: str | None = None,
+             prev_metrics: dict | None = None) -> "SeenFilters":
+        """Empty on a fresh crawl; on resume, what the last committed
+        wave ``prev_dir`` persisted (m from the bitmap length). A
+        pending rebuild is re-derived from its recorded est-fp, so a
+        resumed run reproduces the uninterrupted one exactly."""
+        f = cls(cfg, m=cfg.bloom_bits)
+        if prev_dir is None:
+            return f
+        prev_fp = (prev_metrics or {}).get("bloom_est_fp")
+        f.rebuild = prev_fp is not None and prev_fp > cfg.bloom_fp_rebuild
+        if os.path.isdir(os.path.join(prev_dir, "cuckoo")):
+            f.cuckoo = spark.read.parquet(os.path.join(prev_dir, "cuckoo"))
+        if cfg.bloom_mode == "sharded":
+            if os.path.isdir(os.path.join(prev_dir, "bloom_shards")):
+                f.bloom = spark.read.parquet(
+                    os.path.join(prev_dir, "bloom_shards"))
+                one = f.bloom.select("bitmap").limit(1).collect()
+                if one:
+                    f.m = bloom_shard_bits(bytes(one[0].bitmap))
+        elif os.path.exists(os.path.join(prev_dir, "bloom.bin")):
+            with open(os.path.join(prev_dir, "bloom.bin"), "rb") as fh:
+                f.bloom = fh.read()
+            f.m = bloom_shard_bits(f.bloom)
+        return f
+
+    def activate(self, seen: DataFrame, n_seen: int, pool) -> None:
+        """Wave-boundary bloom activation or ×8 saturation rebuild.
+
+        First activation sizes from the KNOWN seen count (~16 bits/key
+        -> est-fp ~0.5%) instead of starting saturated and paying ×8
+        rebuilds wave after wave: the global bitmap keeps
+        cfg.bloom_bits as its floor, a shard sizes for its partition's
+        share (uniform pmod split); the oracle mirrors both. A rebuild
+        (the est-fp fired last wave) grows ×8 from the seen table, the
+        truth the bitmap only approximates. Both cap at BLOOM_MAX_BITS;
+        past it the bitmap stays saturated but correct (it only
+        prunes), and scheduling is identical across resize histories.
+
+        The global build is a pool FUTURE resolved where the bitmap is
+        first needed (the seen-filter plan, or the fold), so it
+        overlaps the schedule phase's stats job (round 8). The sharded
+        build is a cached applyInPandas — no driver bitmap at all."""
+        cfg, bloom = self.cfg, self.bloom
+        rebuild, self.rebuild = self.rebuild, False
+        if n_seen < cfg.bloom_min_seen or not (
+                bloom is None or (rebuild and self.m < BLOOM_MAX_BITS)):
+            return
+        if bloom is not None:
+            self.m = min(self.m * 8, BLOOM_MAX_BITS)
+        elif cfg.bloom_mode == "sharded":
+            self.m = bloom_auto_bits(max(1, n_seen // max(1, cfg.partitions)))
+        else:
+            self.m = max(self.m, bloom_auto_bits(n_seen))
+        if cfg.bloom_mode == "sharded":
+            self.bloom = self._built = build_bloom_shards(
+                seen, cfg.partitions, self.m).cache()
+        else:
+            self.bloom = pool.submit(build_bloom, seen, self.m)
+
+    def bitmap(self) -> bytes:
+        """The global bitmap's bytes, joining its build future."""
+        if hasattr(self.bloom, "result"):
+            self.bloom = self.bloom.result()
+        return self.bloom
+
+    def prefilter(self, n_seen: int, prev_links: int | None):
+        """The wave's ONE pre-filter for ``filter_new_urls``: the
+        cuckoo shards when the probe routes on (``cuckoo_probes``),
+        else the bloom once active, else None. Returns (prefilter,
+        whether it is the cuckoo probe)."""
+        cfg, cuckoo, bloom = self.cfg, self.cuckoo, self.bloom
+        if cuckoo is not None and cuckoo_probes(cfg, n_seen, prev_links):
+            return (lambda c: cuckoo_prune(c, cuckoo, cfg.partitions)), True
+        if bloom is None or n_seen < cfg.bloom_min_seen:
+            return None, False
+        if cfg.bloom_mode == "sharded":
+            return (lambda c: bloom_shards_prune(c, bloom,
+                                                 cfg.partitions)), False
+        return (lambda c: bloom_maybe_seen(c, self.bitmap(), self.m)), False
+
+    def maintain(self, pool, delta_urls: DataFrame, full_seen: DataFrame,
+                 wave_dir: str, n_seen: int, links: int) -> dict:
+        """Maintain the filters on the pool once the wave's seen delta
+        committed (``delta_urls`` reads the warm new-rows cache;
+        ``full_seen``/``n_seen`` are post-wave, ``links`` the wave's
+        distinct links), overlapping the fetch_log/frontier writes.
+        Returns the wave's bloom_* metrics (none while no bloom is
+        active); an est-fp over bloom_fp_rebuild arms the ×8 rebuild.
+
+        The bloom folds the delta and persists — global:
+        bloom_merge_urls -> bloom.bin; sharded: a cogroup merge ->
+        bloom_shards/, no driver bitmap.
+
+        The cuckoo shards are maintained only when the NEXT wave is
+        predicted to probe them (``cuckoo_probes`` on this wave's
+        counts): in the expansion phase every wave's incremental fold
+        is flat per-wave cost for a filter nobody reads. Skipping
+        maintenance DROPS the shards (None, no cuckoo dir) — a stale
+        shard would false-negative, which the definitely-new bypass
+        turns into a correctness bug, so the only safe skip is
+        drop-and-rebuild-from-seen when the ratio finally crosses
+        (maintain_cuckoo_shards with shards=None; amortized-rare by
+        the ratio check)."""
+        f_bloom = f_cuckoo = None
+        if self.bloom is not None:
+            f_bloom = pool.submit(
+                self._merge if self.cfg.bloom_mode == "sharded"
+                else self._fold, delta_urls, wave_dir)
+        if cuckoo_probes(self.cfg, n_seen, links):
+            f_cuckoo = pool.submit(
+                maintain_cuckoo_shards, self.cuckoo, delta_urls, full_seen,
+                self.cfg.partitions, os.path.join(wave_dir, "cuckoo"))
+        metrics = {}
+        if f_bloom is not None:
+            self.bloom, m_total, pc = f_bloom.result()
+            if self._built is not None:
+                self._built.unpersist()  # the merged parquet replaces it
+                self._built = None
+            metrics = {"bloom_m": m_total, "bloom_popcount": pc,
+                       "bloom_est_fp": bloom_est_fp(pc, m_total)}
+            self.rebuild = metrics["bloom_est_fp"] > self.cfg.bloom_fp_rebuild
+        self.cuckoo = f_cuckoo.result() if f_cuckoo is not None else None
+        return metrics
+
+    def _fold(self, delta_urls: DataFrame, wave_dir: str):
+        bitmap = bloom_merge_urls(delta_urls, self.m, self.bitmap(), 16)
+        _write_bitmap(os.path.join(wave_dir, "bloom.bin"), bitmap)
+        return bitmap, self.m, bloom_popcount(bitmap)
+
+    def _merge(self, delta_urls: DataFrame, wave_dir: str):
+        path = os.path.join(wave_dir, "bloom_shards")
+        merge_bloom_shards(self.bloom, delta_urls, self.cfg.partitions,
+                           self.m).write.mode("overwrite").parquet(path)
+        shards = delta_urls.sparkSession.read.parquet(path)
+        return (shards, *bloom_shards_stats(shards))

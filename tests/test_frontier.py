@@ -90,26 +90,15 @@ def test_resume_reproduces_fresh_run(spark, tmp_path, oracle_state):
     shutil.rmtree(d1, ignore_errors=True)
 
 
-def test_bloom_disabled_same_result(spark, tmp_path, oracle_state):
-    """The bloom prefilter must be pruning-only: disabling it cannot
-    change any output."""
-    d = str(tmp_path / "nobloom")
-    cfg = CrawlConfig(checkpoint_dir=d, use_bloom=False,
-                      **{**CFG, "n_waves": 2})
-    summary = crawl(spark, cfg)
-    assert summary["metrics"] == oracle_state.metrics[:2]
-    shutil.rmtree(d, ignore_errors=True)
-
-
 def test_cuckoo_prune_path_same_result(spark, tmp_path, oracle_state):
     """Wave-loop cuckoo pruning must be pruning-only: forcing it on
     from wave 1 (threshold 0) cannot change any output."""
     d = str(tmp_path / "cuckoo_crawl")
-    cfg = CrawlConfig(checkpoint_dir=d, use_cuckoo=True, cuckoo_min_seen=0,
+    cfg = CrawlConfig(checkpoint_dir=d, cuckoo_min_seen=0,
                       cuckoo_probe_min_ratio=0,  # force the probe at
                       # toy scale (auto routing would skip it: the
                       # seen set doesn't dwarf the candidates here)
-                      use_bloom=False, **CFG)
+                      **CFG)
     summary = crawl(spark, cfg)
     assert summary["metrics"] == oracle_state.metrics
     import os
@@ -134,8 +123,7 @@ def test_cuckoo_probe_cost_routing(spark, tmp_path, oracle_state):
     import os as _os
 
     d = str(tmp_path / "cuckoo_routed")
-    cfg = CrawlConfig(checkpoint_dir=d, use_cuckoo=True,
-                      cuckoo_min_seen=0, use_bloom=False, **CFG)
+    cfg = CrawlConfig(checkpoint_dir=d, cuckoo_min_seen=0, **CFG)
     summary = crawl(spark, cfg)
     assert summary["metrics"] == oracle_state.metrics
     for w in range(CFG["n_waves"]):
@@ -186,7 +174,7 @@ def test_pluggable_fetcher_drives_full_wave_loop(spark, tmp_path):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_cuckoo_incremental_update_and_prune(spark):
+def test_cuckoo_incremental_update_and_prune(spark, tmp_path):
     from cuphic_spark.frontier import webgraph
     from cuphic_spark.frontier.seen import (
         cuckoo_prune,
@@ -200,12 +188,14 @@ def test_cuckoo_incremental_update_and_prune(spark):
     all_urls = batch1.unionByName(batch2)
     # maintenance protocol: incremental fold, rebuild-from-truth on
     # overflow — across both batches no false negative may survive
-    shards = maintain_cuckoo_shards(None, batch1, batch1, 4)
-    shards = maintain_cuckoo_shards(shards, batch2, all_urls, 4)
+    shards = maintain_cuckoo_shards(None, batch1, batch1, 4,
+                                    str(tmp_path / "c1"))
+    shards = maintain_cuckoo_shards(shards, batch2, all_urls, 4,
+                                    str(tmp_path / "c2"))
 
     probe = spark.createDataFrame(
         [(webgraph.url_of(i),) for i in range(0, 400)], "url string")
-    flags = {r.url: r.maybe_seen_cuckoo
+    flags = {r.url: r.maybe_seen
              for r in cuckoo_prune(probe, shards, 4).collect()}
     # every inserted url MUST flag maybe-seen (no false negatives)
     for i in range(300):
@@ -396,7 +386,7 @@ def test_bloom_path_same_result_and_incremental(spark, tmp_path, oracle_state):
 
     d = str(tmp_path / "bloom_crawl")
     bits = 1 << 16
-    cfg = CrawlConfig(checkpoint_dir=d, use_bloom=True, bloom_min_seen=0,
+    cfg = CrawlConfig(checkpoint_dir=d, bloom_min_seen=0,
                       bloom_bits=bits, **CFG)
     summary = crawl(spark, cfg)
     # the bloom-modeling oracle: same schedule/counts as the plain
@@ -437,7 +427,7 @@ def test_bloom_sharded_invariance(spark, tmp_path, oracle_state):
     metrics equality vs the plain oracle, and resume continuing from
     the persisted shards."""
     d = str(tmp_path / "sharded_crawl")
-    cfg = CrawlConfig(checkpoint_dir=d, use_bloom=True,
+    cfg = CrawlConfig(checkpoint_dir=d,
                       bloom_min_seen=0, bloom_mode="sharded",
                       partitions=4, **CFG)
     summary = crawl(spark, cfg)
@@ -561,12 +551,11 @@ def test_bloom_saturation_autoresize(spark, tmp_path):
     prune) and every bloom metric matching the oracle twin."""
     kw = dict(universe=5000, n_seeds=12, budget_per_host=6,
               wave_cap=48, n_waves=4)
-    bloom_kw = dict(use_bloom=True, bloom_bits=256, bloom_min_seen=1,
-                    bloom_fp_rebuild=0.2)
+    bloom_kw = dict(bloom_bits=256, bloom_min_seen=1, bloom_fp_rebuild=0.2)
     d = str(tmp_path / "bloom_sat")
     cfg = CrawlConfig(checkpoint_dir=d, **kw, **bloom_kw)
     summary = crawl(spark, cfg)
-    oracle = crawl_oracle.run(**kw, **bloom_kw)
+    oracle = crawl_oracle.run(**kw, **bloom_kw, use_bloom=True)
     assert summary["metrics"] == oracle.metrics
     ms = [m["bloom_m"] for m in summary["metrics"]]
     fps = [m["bloom_est_fp"] for m in summary["metrics"]]
@@ -594,6 +583,199 @@ def test_bloom_saturation_autoresize(spark, tmp_path):
     resumed = crawl(spark, CrawlConfig(checkpoint_dir=d, **kw,
                                        **bloom_kw))
     assert resumed["metrics"] == oracle.metrics[last:]
+    shutil.rmtree(d, ignore_errors=True)
+
+
+BOTH_BITS = 1 << 16
+
+
+@pytest.fixture(scope="module")
+def bloom_oracle_state():
+    return crawl_oracle.run(**CFG, use_bloom=True, bloom_bits=BOTH_BITS,
+                            bloom_min_seen=0)
+
+
+def _both_filters_cfg(d, mode):
+    """Bloom and cuckoo both live at toy scale: the bloom activates at
+    any seen count, and the cuckoo shards are maintained every wave
+    and probed from wave 1 on."""
+    return CrawlConfig(checkpoint_dir=d, bloom_min_seen=0,
+                       bloom_bits=BOTH_BITS, bloom_mode=mode,
+                       cuckoo_min_seen=0, cuckoo_probe_min_ratio=0,
+                       partitions=4, **CFG)
+
+
+def _assert_matches_oracle(spark, cfg, metrics, plain, with_bloom,
+                           first_wave=0):
+    """Global bloom: every metric equals the bloom-modeling oracle's.
+    Sharded: every non-bloom metric equals the plain oracle's. Both:
+    the fetch log equals the oracle's."""
+    if cfg.bloom_mode == "global":
+        assert metrics == with_bloom.metrics[first_wave:]
+    else:
+        blank = dict.fromkeys(("bloom_m", "bloom_popcount", "bloom_est_fp"))
+        assert [dict(m, **blank) for m in metrics] == \
+            [dict(m, **blank) for m in plain.metrics[first_wave:]]
+        assert all("bloom_popcount" in m for m in metrics)
+    log = read_fetch_log(spark, cfg).orderBy("wave", "rank_in_wave").collect()
+    assert [(r.wave, r.rank_in_wave, r.url) for r in log] == \
+        [(e["wave"], e["rank_in_wave"], e["url"]) for e in plain.fetch_log]
+
+
+def _assert_filters_match_rebuild(spark, cfg):
+    """The last committed wave's bloom (bitmap or shards) equals a
+    from-scratch build over the final seen table, and its cuckoo
+    shards flag every seen url (no false negatives)."""
+    import os
+
+    from cuphic_spark.frontier.crawl import _read_seen
+    from cuphic_spark.frontier.seen import (
+        bloom_shard_bits,
+        build_bloom,
+        build_bloom_shards,
+        cuckoo_prune,
+    )
+
+    last = last_complete_wave(cfg)
+    wd = os.path.join(cfg.checkpoint_dir, f"wave={last:05d}")
+    seen = _read_seen(spark, cfg, last)
+    if cfg.bloom_mode == "global":
+        with open(os.path.join(wd, "bloom.bin"), "rb") as fh:
+            got = fh.read()
+        assert got == build_bloom(seen, bloom_shard_bits(got))
+    else:
+        got = {r.partition: bytes(r.bitmap) for r in spark.read.parquet(
+            os.path.join(wd, "bloom_shards")).collect()}
+        m = bloom_shard_bits(next(iter(got.values())))
+        assert got == {r.partition: bytes(r.bitmap) for r in
+                       build_bloom_shards(seen, cfg.partitions, m).collect()}
+    cuckoo = spark.read.parquet(os.path.join(wd, "cuckoo"))
+    flagged = cuckoo_prune(seen.select("url"), cuckoo, cfg.partitions)
+    assert flagged.where(~F.col("maybe_seen")).count() == 0
+
+
+def _track_wave(monkeypatch):
+    """Patch crawl.run_wave to record the wave being run; returns the
+    one-slot list holding it."""
+    from cuphic_spark.frontier import crawl as crawl_mod
+
+    current = [None]
+    real_run_wave = crawl_mod.run_wave
+
+    def run_wave(spark_, cfg_, wave, *args, **kwargs):
+        current[0] = wave
+        return real_run_wave(spark_, cfg_, wave, *args, **kwargs)
+
+    monkeypatch.setattr(crawl_mod, "run_wave", run_wave)
+    return current
+
+
+@pytest.mark.parametrize("mode", ["global", "sharded"])
+def test_bloom_and_cuckoo_one_prefilter_per_wave(
+        spark, tmp_path, monkeypatch, oracle_state, bloom_oracle_state,
+        mode):
+    """With both filters live, a wave probes ONE pre-filter: the cuckoo
+    shards when the probe routes on, else the bloom. Stacked behind the
+    cuckoo, the bloom would only see the cuckoo's positives (already-
+    seen urls plus its ~1e-4 false positives) and prune nothing. The
+    bloom is still maintained every wave: metrics, fetch log, the
+    persisted filters and a resume all match."""
+    import collections
+    import json
+    import os
+
+    from cuphic_spark.frontier import seen as seen_mod
+
+    current = _track_wave(monkeypatch)
+    bloom_probes: collections.Counter = collections.Counter()
+
+    def counting(real):
+        def probe(*args, **kwargs):
+            bloom_probes[current[0]] += 1
+            return real(*args, **kwargs)
+        return probe
+
+    for name in ("bloom_maybe_seen", "bloom_shards_prune"):
+        monkeypatch.setattr(seen_mod, name, counting(getattr(seen_mod, name)))
+    d = str(tmp_path / f"both_{mode}")
+    cfg = _both_filters_cfg(d, mode)
+    summary = crawl(spark, cfg)
+    _assert_matches_oracle(spark, cfg, summary["metrics"], oracle_state,
+                           bloom_oracle_state)
+    probed = []
+    for w in range(CFG["n_waves"]):
+        with open(os.path.join(d, f"wave={w:05d}", "_lineage.json")) as fh:
+            probed.append(json.load(fh)["cuckoo_probe"])
+    # wave 0 has no shards yet, so the bloom pre-filters it; every
+    # later wave probes the shards its predecessor maintained
+    assert probed == [False] + [True] * (CFG["n_waves"] - 1)
+    assert bloom_probes[0] >= 1
+    assert [bloom_probes[w] for w, p in enumerate(probed) if p] == \
+        [0] * (CFG["n_waves"] - 1), bloom_probes
+    _assert_filters_match_rebuild(spark, cfg)
+
+    # resume: drop the last wave, re-run, identical metrics
+    last = last_complete_wave(cfg)
+    shutil.rmtree(os.path.join(d, f"wave={last:05d}"))
+    resumed = crawl(spark, cfg)
+    assert resumed["start_wave"] == last
+    assert resumed["metrics"][-1] == summary["metrics"][-1]
+    shutil.rmtree(d, ignore_errors=True)
+
+
+# stage -> (bloom mode, the seen-module function that raises in wave 1)
+_FILTER_FAULTS = {
+    "bloom_fold": ("global", "bloom_merge_urls"),
+    "bloom_torn_write": ("global", "_write_bitmap"),
+    "shard_merge": ("sharded", "merge_bloom_shards"),
+    "cuckoo": ("global", "maintain_cuckoo_shards"),
+}
+
+
+@pytest.mark.parametrize("stage", sorted(_FILTER_FAULTS))
+def test_filter_maintenance_fault_resumes_that_wave(
+        spark, tmp_path, monkeypatch, oracle_state, bloom_oracle_state,
+        stage):
+    """A failure inside a pool-side filter maintenance stage of wave 1
+    — the global bloom fold, a torn bloom.bin write, the sharded
+    merge, the cuckoo maintenance — leaves wave 1 uncommitted: its
+    lineage marker is written only after every filter stage joined.
+    The resume reads wave 0's filters, re-runs wave 1 and ends equal
+    to the oracle, with persisted filters equal to a fresh build."""
+    import os
+
+    from cuphic_spark.frontier import seen as seen_mod
+
+    mode, name = _FILTER_FAULTS[stage]
+    real = getattr(seen_mod, name)
+    current = _track_wave(monkeypatch)
+
+    def failing(*args, **kwargs):
+        if current[0] != 1:
+            return real(*args, **kwargs)
+        if name == "_write_bitmap":  # a torn write, then the fault
+            path, bitmap = args
+            with open(path, "wb") as fh:
+                fh.write(bitmap[:len(bitmap) // 2])
+        raise RuntimeError(f"injected {stage} fault")
+
+    monkeypatch.setattr(seen_mod, name, failing)
+    d = str(tmp_path / f"fault_{stage}")
+    cfg = _both_filters_cfg(d, mode)
+    with pytest.raises(RuntimeError, match="injected"):
+        crawl(spark, cfg)
+    monkeypatch.undo()
+    assert last_complete_wave(cfg) == 0
+    if name == "_write_bitmap":  # the torn bitmap sits uncommitted
+        sizes = [os.path.getsize(os.path.join(d, f"wave={w:05d}",
+                                              "bloom.bin")) for w in (0, 1)]
+        assert sizes[1] < sizes[0]
+
+    summary = crawl(spark, cfg)
+    assert summary["start_wave"] == 1
+    _assert_matches_oracle(spark, cfg, summary["metrics"], oracle_state,
+                           bloom_oracle_state, first_wave=1)
+    _assert_filters_match_rebuild(spark, cfg)
     shutil.rmtree(d, ignore_errors=True)
 
 
@@ -1014,22 +1196,16 @@ def test_extension_rounds_match_oracle(spark, tmp_path, monkeypatch):
     import collections
 
     from cuphic_spark.frontier import bands
-    from cuphic_spark.frontier import crawl as crawl_mod
 
     kw = {**CFG, "budget_per_host": 1, "band_width": 3}
     calls: collections.Counter = collections.Counter()
-    current = [None]
-    real_run_wave, real_plan_read = crawl_mod.run_wave, bands.plan_read
-
-    def run_wave(spark_, cfg_, wave, *args, **kwargs):
-        current[0] = wave
-        return real_run_wave(spark_, cfg_, wave, *args, **kwargs)
+    current = _track_wave(monkeypatch)
+    real_plan_read = bands.plan_read
 
     def plan_read(*args, **kwargs):
         calls[current[0]] += 1
         return real_plan_read(*args, **kwargs)
 
-    monkeypatch.setattr(crawl_mod, "run_wave", run_wave)
     monkeypatch.setattr(bands, "plan_read", plan_read)
     d = str(tmp_path / "extension")
     cfg = CrawlConfig(checkpoint_dir=d, **kw)
