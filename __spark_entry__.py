@@ -949,9 +949,9 @@ def q_crawl_fetch_log(spark, sf_dir):
 
 def _wildcard_robots_body(h: int) -> str:
     """Deterministic FULL-RFC robots.txt for host h: wildcards, ``$``
-    anchors, and Allow rules no prefix dim can express, so the wave
-    loop must take the rules_dim/denied_by_rules path (robots.crawl_dim
-    picks full). An ``otherbot`` group and a deny-everything ``*``
+    anchors, and Allow rules no plain prefix match can express, so the
+    wave loop's denied_by_rules verdict needs its full longest-match
+    semantics. An ``otherbot`` group and a deny-everything ``*``
     group must both be ignored for cuphicbot. Rule shapes: even
     hosts deny /private/ but Allow the LONGER /private/doc/1* back
     (longest-match); h%3==0 hosts add the anchored wildcard
@@ -987,9 +987,9 @@ def _wildcard_bodies_fn(spark, version, n_hosts):
 def q_crawl_robots_full(spark, sf_dir):
     """Round-6 verdict #1 gate: a 3-wave crawl whose robots source
     is a wildcard+Allow corpus (``_wildcard_robots_body``) fed
-    through extra['robots_txt_fn'] — parse_robots -> auto mode
-    detects non-prefix rules -> rules_dim broadcast ->
-    denied_by_rules longest-match verdict inside the wave loop. The
+    through extra['robots_txt_fn'] — parse_robots -> rules_dim
+    broadcast -> denied_by_rules longest-match verdict inside the
+    wave loop (the one robots evaluator, also behind the spec). The
     oracle re-runs the single-process crawl with deny verdicts from
     the pure-Python RFC evaluator (agent_group/path_allowed) and
     inlines the expected fetch log as VALUES — full hash pin."""

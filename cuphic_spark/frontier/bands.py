@@ -44,8 +44,8 @@ Manifest JSON (``_frontier_manifest.json`` inside each wave's
 Counts come from parquet FOOTERS (pyarrow, metadata-only) at write
 time — the same bookkeeping an Iceberg commit records in its
 manifest files; no Spark job is spent counting. Segment ``lo``/``hi``
-(min/max score) come from the run-split aggregation that is computed
-anyway.
+(min/max score) come from the per-score counts the run split
+consumes anyway.
 
 Sizing rules: ``band_width`` is the coarse IO granularity and
 ``band_split_rows`` (default: the crawl's wave cap) the fine one —
@@ -89,7 +89,7 @@ import json
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_NAME = "_frontier_manifest.json"
@@ -288,106 +288,73 @@ MAX_RUN_MAP_ROWS = 200_000  # loud-failure guard: the run map is one
 # O(|delta|) driver transfer
 
 
-def _with_runs(df: DataFrame, split_rows: int, precounts=None):
+def _score_counts(df: DataFrame) -> list[tuple[int, int]]:
+    """Exact per-score row counts [(score, cnt)] of a delta (branch) —
+    the input of the run split. limit() bounds the collect itself:
+    over-coarse inputs surface via the run-map size guard in
+    ``_with_runs``, never as a silent O(|delta|) driver transfer."""
+    return [(int(r["score"]), int(r["count"]))
+            for r in df.groupBy("score").count()
+            .limit(MAX_RUN_MAP_ROWS + 1).collect()]
+
+
+def _with_runs(df: DataFrame, split_rows: int, counts):
     """Assign each delta row its RUN: within a band, rows are grouped
     by score (descending) and cut into runs of ~``split_rows`` rows —
     every distinct score lands wholly in one run, so runs cover
     disjoint contiguous score ranges (the property the prefix read
     protocol needs). The run id is a pure function of the delta's
-    per-score counts: ONE tiny aggregation (collected once — the run
-    metadata derives from the same rows driver-side, so the agg is
-    never re-executed by a second action), then a broadcast join of
-    the literal score->run map back onto the delta.
-
-    ``precounts`` (round 8): when the caller already knows the
-    delta's exact per-(band, score) counts — the crawl wave computes
-    them from the residual/new caches, overlapping the seen-delta
-    write — pass them as [(band, score, cnt)] and the aggregation job
-    here is skipped entirely; the cumulative run split then runs
-    driver-side over the same tiny rows the window produced. Counts
-    MUST cover df exactly (the run map is total over df's scores by
-    construction either way).
+    per-score counts, computed driver-side: ``counts`` is
+    [(band, score, cnt)] and MUST cover df exactly (every df row's
+    score must appear in it).
 
     Returns (df + run column, {(band, run): (lo, hi)})."""
-    if precounts is None:
-        counts = df.groupBy("band", "score").agg(F.count("*").alias("cnt"))
-        w = (Window.partitionBy("band").orderBy(F.desc("score"))
-             .rowsBetween(Window.unboundedPreceding, -1))
-        runs = (counts
-                .withColumn("cum_before",
-                            F.coalesce(F.sum("cnt").over(w), F.lit(0)))
-                .withColumn("run",
-                            (F.col("cum_before") / F.lit(int(split_rows)))
-                            .cast("int"))
-                .select("band", "score", "run"))
-        # limit(MAX+1) bounds the collect ITSELF: the guard must not
-        # cost an O(|delta|) driver transfer to discover it should
-        # have fired (over-limit inputs raise, so the truncation never
-        # loses data)
-        rows = runs.limit(MAX_RUN_MAP_ROWS + 1).collect()
-    else:
-        # the same cumulative split, driver-side: per band, scores
-        # descending, run = rows-before // split_rows (the window
-        # above with its sort spelled out)
-        if len(precounts) > MAX_RUN_MAP_ROWS:
-            rows = precounts[:MAX_RUN_MAP_ROWS + 1]
-        else:
-            from types import SimpleNamespace
-
-            rows = []
-            cum: dict[int, int] = {}
-            for band, score, cnt in sorted(precounts,
-                                           key=lambda t: (t[0], -t[1])):
-                before = cum.get(band, 0)
-                # int(float-div) mirrors the Spark path's
-                # (cum_before / split) double division + cast("int")
-                # EXACTLY, including any double-rounding behavior
-                rows.append(SimpleNamespace(
-                    band=band, score=score,
-                    run=int(before / int(split_rows))))
-                cum[band] = before + cnt
-    if len(rows) > MAX_RUN_MAP_ROWS:
+    if len(counts) > MAX_RUN_MAP_ROWS:
         raise ValueError(
-            f"run map has {len(rows)} distinct (band, score) rows > "
+            f"run map has {len(counts)} distinct (band, score) rows > "
             f"{MAX_RUN_MAP_ROWS}: the run split assumes COARSE scores "
             "(same contract as max_score_histogram); coarsen the "
             "score function or widen band_split_rows deliberately")
+    # per band, scores descending: run = rows-before // split_rows,
+    # as a double division + int cast (int(a / b)) — the arithmetic
+    # the run layouts already on disk were split with
+    rows: list[tuple[int, int, int]] = []
+    cum: dict[int, int] = {}
+    for band, score, cnt in sorted(counts, key=lambda t: (t[0], -t[1])):
+        before = cum.get(band, 0)
+        rows.append((band, score, int(before / int(split_rows))))
+        cum[band] = before + cnt
     meta: dict[tuple[int, int], tuple[int, int]] = {}
-    for r in rows:
-        key = (int(r.band), int(r.run))
-        sc = int(r.score)
-        lo, hi = meta.get(key, (sc, sc))
-        meta[key] = (min(lo, sc), max(hi, sc))
+    for band, sc, run in rows:
+        lo, hi = meta.get((band, run), (sc, sc))
+        meta[(band, run)] = (min(lo, sc), max(hi, sc))
     # attach the run id. band is a pure function of score (band_expr =
     # score div width), so score alone keys the map; when the map is
     # small (the coarse-score contract — always, in practice) it is
     # attached as a LITERAL map lookup instead of a broadcast join:
     # one projection, no BroadcastExchange build job + no join per
     # frontier write (3+ writes per crawl leg). Every df row's score
-    # appears in the map by construction (the map came from df's own
-    # groupBy), so the lookup is total — identical rows to the former
-    # inner join, in the join's exact column order.
+    # appears in the map (the counts cover df), so the lookup is
+    # total — identical rows to the inner join, in the join's exact
+    # column order.
     join_cols = (["band", "score"]
                  + [c for c in df.columns if c not in ("band", "score")]
                  + ["run"])
     if rows and len(rows) <= 4096:
         lookup = F.create_map(
-            *[c for r in rows
-              for c in (F.lit(int(r.score)).cast("long"),
-                        F.lit(int(r.run)).cast("int"))])
+            *[c for _b, sc, run in rows
+              for c in (F.lit(sc).cast("long"), F.lit(run).cast("int"))])
         out = (df.withColumn("run", F.element_at(lookup, F.col("score")))
                .select(*join_cols))
         return out, meta
     spark = df.sparkSession
-    run_map = spark.createDataFrame(
-        [(int(r.band), int(r.score), int(r.run)) for r in rows],
-        "band int, score long, run int")
+    run_map = spark.createDataFrame(rows, "band int, score long, run int")
     out = df.join(F.broadcast(run_map), ["band", "score"])
     return out, meta
 
 
 def _write_run_partitioned(df: DataFrame, path: str, cfg,
-                           split_rows: int, precounts=None) -> list[dict]:
+                           split_rows: int, score_counts=None) -> list[dict]:
     """Write a (sub)delta as band/run-partitioned files with the
     north rule's physical layout INSIDE each run: files partitioned
     by pmod(xxhash64(host), P) with intra-host salt, score-sorted
@@ -395,20 +362,25 @@ def _write_run_partitioned(df: DataFrame, path: str, cfg,
     partitions" — now per run). Returns run records
     [{band, run, path, count, lo, hi}] in (band, run) order, counts
     from parquet footers."""
-    # With ``precounts`` (the crawl wave path, round 8) the delta
-    # chain executes exactly ONCE — for the write; the run map came
-    # driver-side from counts the caller collected off the wave
-    # caches while the seen-delta write was still running. Without
-    # precounts, cache the prepped delta across the run-histogram
-    # action and the write: the delta chain (union of residual
-    # filters over the wave caches + new rows) would otherwise
-    # re-execute once for _with_runs' counts and again for the write
-    # — measured as a second full 130+-task pass per wave.
+    # With ``score_counts`` (the crawl wave path, round 8) the delta
+    # chain executes exactly ONCE — for the write; the caller
+    # collected the counts off the wave caches while the seen-delta
+    # write was still running. Without them, cache the prepped delta
+    # across the counts collect and the write: the delta chain
+    # (union of residual filters over the wave caches + new rows)
+    # would otherwise re-execute once for the counts and again for
+    # the write — measured as a second full 130+-task pass per wave.
     cached = None
-    if precounts is None:
-        df = cached = df.cache()
     try:
-        with_run, meta_rows = _with_runs(df, split_rows, precounts)
+        if score_counts is None:
+            df = cached = df.cache()
+            score_counts = _score_counts(df)
+        # band derives via the same integer division as band_expr
+        # (scores >= 0 by the scoring contract)
+        width = int(cfg.band_width)
+        with_run, meta_rows = _with_runs(
+            df, split_rows,
+            [(int(s) // width, int(s), int(c)) for s, c in score_counts])
         # Sort keys LEAD with the dynamic-partition columns (round 8):
         # a partitionBy write requires task-local ordering by the
         # partition columns, and Spark's V1Writes rule was inserting
@@ -476,10 +448,9 @@ def write_wave_frontier(spark: SparkSession, delta: DataFrame,
 
     ``score_counts`` (round 8, optional): the delta's EXACT per-score
     row counts as [(score, cnt)] when the caller already knows them —
-    the run-map aggregation job (a full pass over the delta chain) is
-    then skipped and the delta executes once, for the write. Bands
-    derive here via the same integer division as band_expr (scores
-    >= 0 by the scoring contract).
+    the counts job (one ``groupBy("score").count()`` over the cached
+    delta, run when they are absent) is then skipped and the delta
+    executes once, for the write.
 
     ``prepped`` (round 8): the caller already applied ``_prep_delta``
     (part/host_salt/band columns) — the crawl wave builds that layout
@@ -495,14 +466,9 @@ def write_wave_frontier(spark: SparkSession, delta: DataFrame,
         consumed_keys = set(consumed)
 
     split_rows = split_rows_of(cfg)
-    precounts = None
-    if score_counts is not None:
-        width = int(cfg.band_width)
-        precounts = [(int(s) // width, int(s), int(c))
-                     for s, c in score_counts]
     records = _write_run_partitioned(
         delta if prepped else _prep_delta(delta, cfg),
-        frontier_dir, cfg, split_rows, precounts=precounts)
+        frontier_dir, cfg, split_rows, score_counts=score_counts)
     rows_written = sum(r["count"] for r in records)
 
     next_seq = int(prev_manifest.get("next_seq", 0))
@@ -530,10 +496,10 @@ def write_wave_frontier(spark: SparkSession, delta: DataFrame,
     # into fresh runs — deterministic: the run split is a pure
     # function of the band's per-score counts.
     # ALL over-fragmented bands are compacted in ONE
-    # _write_run_partitioned call (one run-map aggregation + one
-    # parquet write instead of one pair PER band — the per-wave job
-    # count is the crawl's fixed cost, round-6 verdict #6): the run
-    # split is per-band either way (_with_runs windows by band), the
+    # _write_run_partitioned call (one counts job + one parquet
+    # write instead of one pair PER band — the per-wave job count is
+    # the crawl's fixed cost, round-6 verdict #6): the run split is
+    # per-band either way (_with_runs splits each band alone), the
     # write partitions by (band, run), and records come back in
     # (band, run) order, so the seq sequence is IDENTICAL to the
     # former per-band loop over sorted(bands) — the oracle's

@@ -61,11 +61,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import webgraph
+from .robots import denied_by_rules, pattern_to_regex
 from .seen import SeenFilters, filter_new_urls
 from .urlnorm import canonicalize_cols, host_col, path_col
 
 FRONTIER_SCHEMA = "url string, host string, depth int, score long, discovered_wave int"
 SEEN_SCHEMA = "url string, added_wave int"
+FETCH_LOG_SCHEMA = ("wave int, rank_in_wave int, url string, host string, "
+                    "depth int, score long, status int, bytes long")
 
 
 @dataclass
@@ -172,14 +175,6 @@ def score_py(url_id: int, depth: int, is_seed: bool) -> int:
     return (10000 - 1000 * min(depth, 9)) + url_id % 7 + (5000 if is_seed else 0)
 
 
-# _seed_score_counts' closed form is only valid under the DEFAULT
-# scoring pair; tests (and deployments) may monkeypatch score_expr /
-# score_py as an extension point, and the seed write must then fall
-# back to the data-derived histogram.
-_SCORE_EXPR_DEFAULT = score_expr
-_SCORE_PY_DEFAULT = score_py
-
-
 def robots_rules(spark: SparkSession, version: int = 0,
                  n_hosts: int = webgraph.N_HOSTS) -> DataFrame:
     """The robots CACHE: tiny dim table, broadcast at join time,
@@ -194,12 +189,15 @@ def robots_rules(spark: SparkSession, version: int = 0,
     number (``CrawlConfig.robots_ttl_waves``): rules stay CACHED —
     one tiny broadcast per wave, never per url.
 
-    The dim shape is (host, deny_prefixes array) — the same shape
-    ``frontier.robots.prefix_rules`` derives from REAL robots.txt
-    bodies via the RFC 9309 parser, so a production crawl swaps the
-    spec for parsed bodies (``CrawlConfig.extra['robots_txt_fn']``)
-    without touching the wave loop."""
-    rows = [(f"host{h}.example", [webgraph.DENY_PREFIX])
+    The dim shape is ``frontier.robots.rules_dim``'s (host,
+    robots_rules array<struct<regex, pattern_len, allow>>), here one
+    Disallow rule per denied host — the shape the RFC 9309 parser
+    derives from REAL robots.txt bodies, so a production crawl swaps
+    the spec for parsed bodies (``CrawlConfig.extra['robots_txt_fn']``)
+    and the wave loop runs the one ``denied_by_rules`` evaluator."""
+    rule = (pattern_to_regex(webgraph.DENY_PREFIX),
+            len(webgraph.DENY_PREFIX), False)
+    rows = [(f"host{h}.example", [rule])
             for h in range(n_hosts) if h % 7 == version % 7]
     # LocalRelation via the Arrow/pandas path (round 8): list-of-rows
     # createDataFrame builds a PYTHON-RDD-backed DF, so every
@@ -209,8 +207,9 @@ def robots_rules(spark: SparkSession, version: int = 0,
     import pandas as pd
 
     return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["host", "deny_prefixes"]),
-        schema="host string, deny_prefixes array<string>")
+        pd.DataFrame(rows, columns=["host", "robots_rules"]),
+        schema="host string, robots_rules "
+               "array<struct<regex:string,pattern_len:int,allow:boolean>>")
 
 
 def seed_frontier(spark: SparkSession, cfg: CrawlConfig) -> DataFrame:
@@ -439,7 +438,7 @@ class Wave:
     n_denied: int
     dropped: object               # pages_dropped accumulator
     observed: dict
-    new_score_base: int | None    # None under overridden scoring
+    new_score_base: int           # lowest score a new row can take
     dir: str = ""
     f_log: object = None          # the fetch_log write's future
     extra_metrics: dict = field(default_factory=dict)
@@ -470,11 +469,7 @@ class Wave:
 
     def new_score_counts(self):
         """Per-score counts of the wave's new rows, read from the new
-        observation (rides the seen-delta write) — None when
-        non-default scoring made the conditional sums unavailable
-        (caller then runs the data-derived counts job)."""
-        if self.new_score_base is None:
-            return None
+        observation (rides the seen-delta write)."""
         m = self.get("new")
         return [(self.new_score_base + r, int(m[f"c{r}"]))
                 for r in range(7) if int(m[f"c{r}"])]
@@ -542,15 +537,13 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
     robots_version = (wave // cfg.robots_ttl_waves
                       if cfg.robots_ttl_waves else 0)
     robots_txt_fn = cfg.extra.get("robots_txt_fn")
-    robots_full = False
     if robots_txt_fn is not None:
         # production robots source: (host, robots_txt) bodies ->
-        # RFC 9309 parse -> a broadcast dim whose shape
-        # robots.crawl_dim picks per corpus; the spec path below
-        # stays the oracle-pinned default
-        from .robots import crawl_dim, parse_robots
+        # RFC 9309 parse -> the broadcast rules dim; the spec path
+        # below (same dim shape) stays the oracle-pinned default
+        from .robots import parse_robots, rules_dim
 
-        robots, robots_full = crawl_dim(
+        robots = rules_dim(
             parse_robots(robots_txt_fn(spark, robots_version,
                                        cfg.n_hosts)),
             agent=cfg.extra.get("robots_agent", "cuphicbot"))
@@ -619,21 +612,11 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         else:
             joined = joined.withColumn("host_budget",
                                        F.lit(cfg.budget_per_host))
-        if robots_full:
-            from .robots import denied_by_rules
-
-            is_denied = denied_by_rules(F.col("path"),
-                                        F.col("robots_rules"))
-            robots_col = "robots_rules"
-        else:
-            is_denied = _memo_cols("denied_prefix", lambda: F.coalesce(
-                F.exists(F.col("deny_prefixes"),
-                         lambda p: F.col("path").startswith(p)),
-                F.lit(False)))
-            robots_col = "deny_prefixes"
-        ranked = (joined.withColumn("den", is_denied)
+        den = _memo_cols("den", lambda: denied_by_rules(
+            F.col("path"), F.col("robots_rules")))
+        ranked = (joined.withColumn("den", den)
                   .withColumn("host_rank", F.row_number().over(w_host))
-                  .drop(robots_col, "path")).cache()
+                  .drop("robots_rules", "path")).cache()
         # CACHED: the stats collect below materializes this tiny agg
         # (<= max_score_histogram rows), and the in-plan offsets then
         # read the cached rows instead of re-aggregating the 10^5-row
@@ -782,34 +765,21 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         # one less shuffle per wave
 
         obs_new = Observation(f"new_w{wave}_{tag}")
-        # Under the DEFAULT scoring pair, a wave's new rows take exactly 7
-        # scores (base + id%7 at the fixed depth wave+1), so their
-        # per-score counts — the "late" half of the frontier write's run
-        # map — ride obs_new as 7 conditional sums on the seen-delta
-        # write instead of costing a separate post-commit job (round 8).
-        # Overridden scoring falls back to the data-derived counts job.
-        default_scoring = (score_expr is _SCORE_EXPR_DEFAULT
-                           and score_py is _SCORE_PY_DEFAULT)
+        # A wave's new rows take exactly 7 scores (base + id%7 at the
+        # fixed depth wave+1, see score_expr), so their per-score
+        # counts — the new-row half of the frontier write's run map —
+        # ride obs_new as 7 conditional sums on the seen-delta write
+        # instead of costing a separate post-commit job (round 8).
         new_score_base = 10000 - 1000 * min(wave + 1, 9)
-
-        def _build_new_aggs():
-            aggs = [F.count(F.lit(1)).alias("n")]
-            if default_scoring:
-                aggs += [
-                    F.coalesce(
-                        F.sum((F.col("score")
-                               == F.lit(new_score_base + r))
-                              .cast("long")), F.lit(0)).alias(f"c{r}")
-                    for r in range(7)]
-            return aggs
-
         # memo keys carry every input the trees bake in: the wave's
-        # literals and (for the score tree) the scoring function
-        # object itself, which tests rebind
-        new_aggs = _memo_cols(("new_aggs", wave, default_scoring),
-                              _build_new_aggs)
+        # literals
+        new_aggs = _memo_cols(("new_aggs", wave), lambda: [
+            F.count(F.lit(1)).alias("n")] + [
+            F.coalesce(F.sum((F.col("score") == F.lit(new_score_base + r))
+                             .cast("long")), F.lit(0)).alias(f"c{r}")
+            for r in range(7)])
         new_row_cols = _memo_cols(
-            ("new_row_cols", wave, score_expr),
+            ("new_row_cols", wave),
             lambda: [
                 F.col("url"),
                 host_col(F.col("url")).alias("host"),
@@ -857,12 +827,11 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
                 seen_delta.withColumn("host", host_col(F.col("url")))
                 .select("url", "added_wave", "host"), cfg)
             prepped = bands_mod._prep_delta(frontier_delta, cfg)
-            # run-map precount branches (see delta_counts below); the
-            # zero-job driver half derives from the collected stats
+            # the run map's residual branches (see delta_counts below);
+            # the zero-job driver half derives from the collected stats
             early = (over_budget.select("score")
                      .unionByName(passthrough.select("score")))
-            late = new_rows.select("score")
-            return seen_out, prepped, early, late
+            return seen_out, prepped, early
 
         f_layouts = pool.submit(_build_layouts)
 
@@ -892,7 +861,7 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         n_budgeted = sum(r.cnt for r in stats if not r.den)
         if n_budgeted >= cfg.wave_cap or plan.exhausted:
             (seen_delta_out, frontier_delta_prepped,
-             early_counts_df, late_counts_df) = f_layouts.result()
+             early_counts_df) = f_layouts.result()
             break
         # deterministic extension: re-plan with a larger coverage
         # target (plan_read is monotone in need — the new read set is
@@ -938,26 +907,22 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
     # they are knowable (round 8): "early" (over-budget ∪ passthrough)
     # reads only the schedule-phase caches (ranked/frontier — warm
     # once the stats job ran) and is counted on the pool WHILE the
-    # seen-delta write runs; "late" (new rows) needs that write's
-    # cache and is counted right after it commits; the unscheduled
-    # branch needs NO job at all — its counts derive exactly from the
-    # stats histogram and the rank offsets: per budgeted score s with
-    # count c, the wave schedules max(0, min(c, cap - offset_s)) rows
+    # seen-delta write runs; the new rows' counts ride that write's
+    # observation (Wave.new_score_counts); the unscheduled branch
+    # needs NO job at all — its counts derive exactly from the stats
+    # histogram and the rank offsets: per budgeted score s with count
+    # c, the wave schedules max(0, min(c, cap - offset_s)) rows
     # (ranks offset_s+1..offset_s+c, kept iff <= cap; scores outside
     # the offset map schedule none). The frontier write's run map
-    # then needs no aggregation pass over the full delta chain
-    # (bands._with_runs precounts).
+    # then needs no counts pass over the full delta chain
+    # (write_wave_frontier score_counts).
     unsched_counts: dict[int, int] = {}
     for s, c in hist:
         off = offsets.get(s)
         sched = 0 if off is None else max(0, min(c, cfg.wave_cap - off))
         if c - sched:
             unsched_counts[s] = c - sched
-    delta_counts = {
-        "early": early_counts_df,
-        "late": late_counts_df,
-        "driver": unsched_counts,
-    }
+    delta_counts = {"early": early_counts_df, "driver": unsched_counts}
     return Wave(
         wave=wave, plan=plan, frontier_delta=frontier_delta_prepped,
         seen_delta=seen_delta, seen_delta_out=seen_delta_out,
@@ -967,23 +932,11 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         observed={"fetch": (obs_fetch, fetched, fetch_aggs),
                   "links": (obs_links, distinct_links, links_aggs),
                   "new": (obs_new, new_rows, new_aggs)},
-        new_score_base=new_score_base if default_scoring else None)
+        new_score_base=new_score_base)
 
 
 def _wave_dir(cfg: CrawlConfig, wave: int) -> str:
     return os.path.join(cfg.checkpoint_dir, f"wave={wave:05d}")
-
-
-def _score_counts(df: DataFrame):
-    """Exact per-score row counts of a delta branch — the run-map
-    precount the frontier write consumes (bands._with_runs
-    precounts). limit() bounds the collect itself; over-coarse inputs
-    surface via the run-map size guard downstream, never as a silent
-    O(|delta|) driver transfer."""
-    from . import bands as bands_mod
-
-    return (df.groupBy("score").agg(F.count("*").alias("cnt"))
-            .limit(bands_mod.MAX_RUN_MAP_ROWS + 1).collect())
 
 
 def _seed_score_counts(cfg: CrawlConfig) -> list[tuple[int, int]]:
@@ -1030,16 +983,29 @@ def _partitioned_write(df: DataFrame, path: str, cfg: CrawlConfig):
 
 
 def last_complete_wave(cfg: CrawlConfig) -> int:
-    """Highest wave with a committed lineage marker, or -1."""
+    """Last wave of the contiguous committed prefix — waves 0..w all
+    carry a lineage marker — or -1. A marked wave above a gap builds
+    on a wave that never committed, so it does not count."""
     w = -1
-    if not os.path.isdir(cfg.checkpoint_dir):
-        return w
-    for name in sorted(os.listdir(cfg.checkpoint_dir)):
-        d = os.path.join(cfg.checkpoint_dir, name)
-        if name.startswith("wave=") and \
-                os.path.exists(os.path.join(d, "_lineage.json")):
-            w = max(w, int(name.split("=")[1]))
+    while os.path.exists(os.path.join(_wave_dir(cfg, w + 1),
+                                      "_lineage.json")):
+        w += 1
     return w
+
+
+def _drop_waves_above(cfg: CrawlConfig, wave: int) -> int:
+    """Delete every ``wave=`` dir above ``wave`` (gaps included);
+    returns how many were removed."""
+    if not os.path.isdir(cfg.checkpoint_dir):
+        return 0
+    import shutil
+
+    doomed = [name for name in os.listdir(cfg.checkpoint_dir)
+              if name.startswith("wave=") and name[5:].isdigit()
+              and int(name[5:]) > wave]
+    for name in doomed:
+        shutil.rmtree(os.path.join(cfg.checkpoint_dir, name))
+    return len(doomed)
 
 
 def _seen_delta_paths(cfg: CrawlConfig, upto_wave: int,
@@ -1148,6 +1114,10 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
     from . import bands as bands_mod
 
     start = last_complete_wave(cfg) + 1
+    # waves past the committed prefix (a torn wave, waves above a gap)
+    # are replayed: drop them first, so a stale lineage marker cannot
+    # count as committed once the replay fills the gap below it
+    _drop_waves_above(cfg, start - 1)
     seed_path = os.path.join(cfg.checkpoint_dir, "seen_seed")
     seed_frontier_dir = os.path.join(cfg.checkpoint_dir, "frontier_seed")
     prev, prev_lineage, prev_links = None, {}, None
@@ -1165,13 +1135,10 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
                          F.col("host")), seed_path, cfg)
         # seed frontier = the wave -1 manifest (band-partitioned like
         # every later wave; nothing was read, so nothing is carried)
-        default_scoring = (score_expr is _SCORE_EXPR_DEFAULT
-                           and score_py is _SCORE_PY_DEFAULT)
         manifest, _ = bands_mod.write_wave_frontier(
             spark, seeds, seed_frontier_dir, cfg,
             bands_mod.empty_manifest(cfg), consumed=[],
-            score_counts=(_seed_score_counts(cfg) if default_scoring
-                          else None))
+            score_counts=_seed_score_counts(cfg))
         bands_mod.write_manifest(seed_frontier_dir, manifest)
         f_seed.result()
         seen = _read_seen(spark, cfg, -1)
@@ -1274,9 +1241,9 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
         # the residual half of the frontier delta's score histogram
         # reads only schedule-phase caches — count it on the pool NOW
         # so the collect overlaps the seen-delta write below; the
-        # other half (unscheduled/new) is counted after that write
-        # commits, inside write_frontier (see run_wave delta_counts)
-        f_early_counts = pool.submit(_score_counts,
+        # other half (unscheduled/new) costs no job and is merged in
+        # write_frontier (see run_wave delta_counts)
+        f_early_counts = pool.submit(bands_mod._score_counts,
                                      w.delta_counts["early"])
         _mark("schedule")
         # the previous wave's fetch_log drain + finalize overlapped
@@ -1324,20 +1291,11 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
         def write_frontier():
             # merge the overlapped residual counts, the driver-derived
             # unscheduled counts and the new-row counts (observed on
-            # the seen-delta write under default scoring, else one
-            # small job over the new-rows cache); the frontier write
-            # then skips its run-map aggregation pass
+            # the seen-delta write); the frontier write then skips its
+            # counts pass
             merged: dict[int, int] = dict(w.delta_counts["driver"])
-            new_counts = w.new_score_counts()
-            if new_counts is None:
-                new_counts = [(int(r["score"]), int(r["cnt"]))
-                              for r in _score_counts(
-                                  w.delta_counts["late"])]
-            for s, c in new_counts:
+            for s, c in w.new_score_counts() + f_early_counts.result():
                 merged[s] = merged.get(s, 0) + c
-            for r in f_early_counts.result():
-                s = int(r["score"])
-                merged[s] = merged.get(s, 0) + int(r["cnt"])
             return bands_mod.write_wave_frontier(
                 spark, w.frontier_delta, os.path.join(d, "frontier"),
                 cfg, manifest, w.plan,
@@ -1416,8 +1374,14 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
 
 
 def read_fetch_log(spark: SparkSession, cfg: CrawlConfig) -> DataFrame:
-    return spark.read.parquet(os.path.join(cfg.checkpoint_dir, "wave=*",
-                                           "fetch_log"))
+    """The fetch log of the committed waves 0..last_complete_wave —
+    listed explicitly, with an explicit schema (like ``_read_seen``):
+    a wave whose lineage never committed contributes no rows."""
+    paths = [os.path.join(_wave_dir(cfg, w), "fetch_log")
+             for w in range(last_complete_wave(cfg) + 1)]
+    if not paths:
+        return spark.createDataFrame([], FETCH_LOG_SCHEMA)
+    return spark.read.schema(FETCH_LOG_SCHEMA).parquet(*paths)
 
 
 def _main() -> None:

@@ -14,19 +14,18 @@ the robots stage belongs to the north rule's frontier/scheduler,
   table via ``mapInPandas`` (one Arrow batch per partition; the same
   slow-path budget as page parsing — robots bodies are fetched once
   per host per TTL, orders of magnitude rarer than pages).
-* ``robots_allowed``         — per-URL allow/deny decision, pure
-  DataFrame ops: group selection (specific product token beats
-  ``*``), candidate rules via an equi-join on host, pattern match
-  JVM-side (each pattern is compiled to an anchored Java regex AT
-  PARSE TIME and matched with a column-side ``rlike`` — no Python in
-  the per-URL path), longest-match wins, tie -> Allow (RFC 9309
-  §2.2.2: least restrictive rule).
+* ``rules_dim`` + ``denied_by_rules`` — the one robots evaluator:
+  group selection (specific product token beats ``*``) collapses the
+  rules to a per-host array, and the verdict is a row-local column
+  expression (each pattern is compiled to an anchored Java regex AT
+  PARSE TIME and matched with ``regexp_like`` — no Python in the
+  per-URL path): longest match wins, tie -> Allow (RFC 9309 §2.2.2:
+  least restrictive rule).
+* ``robots_allowed``         — per-URL allow/deny decision plus
+  crawl-delay: a broadcast left join of ``rules_dim`` and that verdict.
 
-Scale notes: the rules table is O(hosts x rules/host) — tiny next to
-the frontier. ``robots_allowed`` shuffles once on ``host`` (or
-broadcasts if the caller wraps ``rules`` in ``F.broadcast``), and the
-per-URL verdict is an aggregation keyed by the URL itself, so skewed
-hosts spread across partitions exactly like the rest of the crawl.
+Scale notes: the rules dim is O(hosts x rules/host) — tiny next to
+the frontier, so it is broadcast and the URL side never shuffles.
 """
 
 from __future__ import annotations
@@ -42,7 +41,6 @@ __all__ = [
     "parse_robots_text",
     "pattern_to_regex",
     "parse_robots",
-    "prefix_rules",
     "rules_dim",
     "denied_by_rules",
     "agent_group",
@@ -220,75 +218,19 @@ def _select_group(parsed: DataFrame, kind: str, agent: str) -> DataFrame:
             .drop("_spec", "_mx"))
 
 
-def _non_prefix_probe(rules: DataFrame) -> list:
-    """At most one rule that exceeds prefix semantics (an Allow, or a
-    pattern with ``*``/``$``) — bounded collect over the
-    host-dim-sized rules table (one tiny job)."""
-    return (rules.filter(F.col("allow")
-                         | F.col("pattern").contains("*")
-                         | F.col("pattern").contains("$"))
-            .select("host", "allow", "pattern").limit(1).collect())
-
-
-def prefix_rules(parsed: DataFrame, agent: str) -> DataFrame:
-    """Crawl fast-path dim from parsed robots: (host, deny_prefixes
-    array<string>) — the shape the wave loop broadcast-joins and
-    prefix-matches JVM-side (crawl.run_wave).
-
-    Only plain-prefix Disallow groups qualify: any Allow rule or a
-    pattern containing ``*``/``$`` needs longest-match semantics and
-    REFUSES here (loudly, not by silent approximation) — route such
-    corpora through ``rules_dim``/``denied_by_rules`` (the wave
-    loop's full-RFC path) or ``robots_allowed``. The validation
-    collect is bounded: it fetches at most one offending rule from
-    the host-dim-sized rules table."""
-    rules = _select_group(parsed, "rule", agent)
-    bad = _non_prefix_probe(rules)
-    if bad:
-        r = bad[0]
-        raise ValueError(
-            f"robots rules for host {r['host']!r} exceed the prefix "
-            f"fast path ({'Allow' if r['allow'] else 'pattern'} "
-            f"{r['pattern']!r}); use robots_allowed for full RFC 9309 "
-            "longest-match")
-    return _prefix_dim(rules)
-
-
-def _prefix_dim(rules: DataFrame) -> DataFrame:
-    """(host, deny_prefixes) agg over ALREADY-VALIDATED prefix-only
-    rules — lets ``crawl_dim`` reuse its one probe job instead of
-    probing twice."""
-    return (rules.groupBy("host")
-            .agg(F.collect_list("pattern").alias("deny_prefixes")))
-
-
 def rules_dim(parsed: DataFrame, agent: str) -> DataFrame:
-    """Full-RFC crawl dim: (host, robots_rules array<struct<regex,
+    """The robots dim: (host, robots_rules array<struct<regex,
     pattern_len, allow>>) — one row per host that HAS an applicable
-    group (hosts absent -> left-join null -> allowed). The wave loop
-    broadcast-joins this exactly like the prefix dim and evaluates
-    ``denied_by_rules`` row-local: zero extra shuffles or jobs vs
-    the prefix path. Rule order inside the array is irrelevant —
-    the verdict is a max over matches."""
+    group (hosts absent -> left-join null -> allowed). The same shape
+    the crawl's closed-form spec (crawl.robots_rules) emits; the wave
+    loop and ``robots_allowed`` broadcast-join it and evaluate
+    ``denied_by_rules`` row-local. Rule order inside the array is
+    irrelevant — the verdict is a max over matches."""
     rules = _select_group(parsed, "rule", agent)
     return (rules.groupBy("host")
             .agg(F.collect_list(F.struct(
                 F.col("regex"), F.col("pattern_len"),
                 F.col("allow"))).alias("robots_rules")))
-
-
-def crawl_dim(parsed: DataFrame, agent: str) -> tuple[DataFrame, bool]:
-    """The wave loop's robots dim and whether it is the full-RFC one:
-    ``(prefix dim, False)`` when every applicable rule is a plain
-    Disallow prefix, else ``(rules_dim, True)``, whose longest-match /
-    Allow-wins verdict ``denied_by_rules`` evaluates row-local — same
-    broadcast join, zero extra shuffles or jobs either way. The choice
-    costs one bounded limit(1) probe (the same job prefix_rules spends
-    on validation)."""
-    rules = _select_group(parsed, "rule", agent)
-    if _non_prefix_probe(rules):
-        return rules_dim(parsed, agent=agent), True
-    return _prefix_dim(rules), False
 
 
 def denied_by_rules(path, rules):
@@ -297,9 +239,9 @@ def denied_by_rules(path, rules):
     (§2.2.2 least-restrictive), no applicable group or no matching
     rule -> allowed. Pure column expressions (higher-order functions
     + per-row regexp_like against the parse-time anchored regex), so
-    the wave loop's full-RFC decision is JVM-side like the prefix
-    fast path — identical semantics to ``robots_allowed``'s
-    aggregation, evaluated row-local against the broadcast array."""
+    the decision is JVM-side, evaluated row-local against the
+    broadcast array — the one evaluator behind the wave loop and
+    ``robots_allowed``; ``path_allowed`` is its Python twin."""
     matched = F.filter(rules, lambda r: F.regexp_like(path, r["regex"]))
     best = F.array_max(F.transform(matched, lambda r: F.struct(
         r["pattern_len"].alias("pattern_len"),
@@ -371,11 +313,11 @@ def robots_allowed(urls: DataFrame, parsed: DataFrame, agent: str,
 
     Adds to ``urls``: ``allowed`` (boolean — no applicable group or
     no matching rule means allowed), ``crawl_delay`` (double or null,
-    from the same group that decided). Longest pattern wins; equal
-    length -> Allow wins; matching is column-side ``rlike`` against
-    the parse-time regex.
+    from the same group that decided). The verdict is
+    ``denied_by_rules`` over the broadcast ``rules_dim`` — the same
+    evaluator the crawl's wave loop runs.
     """
-    rules = _select_group(parsed, "rule", agent)
+    rules = rules_dim(parsed, agent)
     delays = (_select_group(parsed, "delay", agent)
               .groupBy("host").agg(F.min("delay").alias("crawl_delay")))
 
@@ -390,21 +332,13 @@ def robots_allowed(urls: DataFrame, parsed: DataFrame, agent: str,
     # explicitly: their MapInPandas lineage has no stats, so without
     # the hint Catalyst may instead broadcast (or worse, shuffle) the
     # URL side, which is the 10^10-row side at crawl scale
-    verdict = (keyed
-               .join(F.broadcast(rules), "host")
-               .filter(F.regexp_like(F.col("_path"), F.col("regex")))
-               .groupBy("_u")
-               .agg(F.max(F.struct(
-                   F.col("pattern_len"),
-                   F.col("allow").cast("int").alias("_allow_rank"),
-                   F.col("allow"))).alias("_best"))
-               .select("_u", F.col("_best.allow").alias("_rule_allow")))
-
     out = (keyed
-           .join(verdict, "_u", "left")
+           .join(F.broadcast(rules), "host", "left")
            .join(F.broadcast(delays), "host", "left")
            .select(F.col("_u").alias(url_col),
-                   F.coalesce("_rule_allow", F.lit(True)).alias("allowed"),
+                   (~denied_by_rules(F.col("_path"),
+                                     F.col("robots_rules")))
+                   .alias("allowed"),
                    "crawl_delay"))
     return urls.join(out, url_col, "left")
 

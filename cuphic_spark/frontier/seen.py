@@ -426,10 +426,12 @@ class CuckooFilter:
                 return True
         # evict deterministically: rotate victim slots with kick count
         idx = i2
+        swaps = []
         for kick in range(self.MAX_KICKS):
             slot = kick % self.SLOTS
             victim = int(table[idx][slot])
             table[idx][slot] = fp
+            swaps.append((idx, slot, victim))
             fp = victim
             idx = self._i2(idx, fp)
             row = table[idx]
@@ -437,8 +439,13 @@ class CuckooFilter:
             if len(empty):
                 row[empty[0]] = fp
                 return True
-        return False  # overfull: caller resizes (membership safety is
+        # overfull: undo the chain — it ends holding an EARLIER
+        # member's fingerprint, and dropping it would be a false
+        # negative — and let the caller resize (membership safety is
         # ultimately backed by the exact anti-join regardless)
+        for idx, slot, victim in reversed(swaps):
+            table[idx][slot] = victim
+        return False
 
     def insert_hash(self, h: int) -> bool:
         h_arr = np.array([h], dtype=np.uint64)

@@ -15,7 +15,12 @@ import os
 import shutil
 
 from . import bands
-from .crawl import CrawlConfig, _wave_dir, last_complete_wave
+from .crawl import (
+    CrawlConfig,
+    _drop_waves_above,
+    _wave_dir,
+    last_complete_wave,
+)
 
 COMPACT_DIRNAME = "seen_compact"
 
@@ -194,29 +199,20 @@ def read_frontier_asof(spark, cfg: CrawlConfig, wave: int):
 
 
 def list_snapshots(cfg: CrawlConfig) -> list[dict]:
-    """Lineage records of all complete waves, in order."""
+    """Lineage records of the committed waves 0..last_complete_wave,
+    in order."""
     out = []
-    w = 0
-    while True:
-        path = os.path.join(_wave_dir(cfg, w), "_lineage.json")
-        if not os.path.exists(path):
-            break
-        with open(path) as fh:
+    for w in range(last_complete_wave(cfg) + 1):
+        with open(os.path.join(_wave_dir(cfg, w), "_lineage.json")) as fh:
             out.append(json.load(fh))
-        w += 1
     return out
 
 
 def rollback_to_wave(cfg: CrawlConfig, wave: int) -> int:
-    """Drop all snapshots AFTER ``wave``; returns number removed.
-    ``wave=-1`` resets to the seed state."""
-    removed = 0
-    last = last_complete_wave(cfg)
-    for w in range(wave + 1, last + 1):
-        d = _wave_dir(cfg, w)
-        if os.path.isdir(d):
-            shutil.rmtree(d)
-            removed += 1
+    """Drop all snapshots AFTER ``wave`` — every wave dir above it,
+    including any above a gap; returns number removed. ``wave=-1``
+    resets to the seed state."""
+    removed = _drop_waves_above(cfg, wave)
     # a compact covering waves beyond the target would resurrect
     # rolled-back urls — drop it (raw deltas remain the truth)
     marker = read_compact_marker(cfg)

@@ -369,11 +369,13 @@ def _tracked_local_checkpoint(df: DataFrame) -> tuple[DataFrame, set]:
 def _free_rdd_ids(spark_df_or_session, ids: set) -> None:
     sc = getattr(spark_df_or_session, "sparkSession",
                  spark_df_or_session).sparkContext
-    jmap = sc._jsc.getPersistentRDDs()
+    # SparkContext.unpersistRDD, not RDD.unpersist: the latter logs
+    # "RDD N was locally checkpointed ..." for every checkpoint freed
+    # here (callers free only blocks no later action reads); freeing
+    # an id no longer persisted is a no-op
+    jsc = sc._jsc.sc()
     for rid in ids:
-        rdd = jmap.get(rid)
-        if rdd is not None:
-            rdd.unpersist(False)
+        jsc.unpersistRDD(rid, False)
 
 
 def connected_components_star(edges: DataFrame, a: str = "doc_a",

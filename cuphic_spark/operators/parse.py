@@ -275,16 +275,10 @@ def pages_to_nodes(pages: DataFrame, dropped_acc=None) -> DataFrame:
     return pages.select("url", "html").mapInPandas(gen, NODES_SCHEMA)
 
 
-def pages_extract_text(pages: DataFrame, dropped_acc=None) -> DataFrame:
-    """pages -> (url, text): the byte-identity extraction operator.
-
-    Runs the STREAMING extractor through the lenient ladder — no
-    Hiccup tree is materialized per page (extract_text_streaming is
-    differentially pinned against parse+extract_text), which cuts the
-    extraction leg's per-page allocation ~2-3x and with it the
-    memory-bandwidth pressure that capped 8->32 scaling."""
-    from ..kernel.xmlparse import extract_text_streaming
-
+def _text_map(pages: DataFrame, parser, dropped_acc) -> DataFrame:
+    """pages -> (url, text) through ``parser`` in the lenient ladder:
+    the one text-extraction map behind pages_extract_text and
+    pages_extract_content."""
     def gen(batches):
         import pyarrow as pa
 
@@ -292,8 +286,7 @@ def pages_extract_text(pages: DataFrame, dropped_acc=None) -> DataFrame:
             urls, texts = [], []
             for url, html in zip(batch.column(0).to_pylist(),
                                  batch.column(1).to_pylist()):
-                text, _mode = parse_html_lenient(
-                    html, parser=extract_text_streaming)
+                text, _mode = parse_html_lenient(html, parser=parser)
                 if text is None:
                     if dropped_acc is not None:
                         dropped_acc.add(1)
@@ -312,6 +305,19 @@ def pages_extract_text(pages: DataFrame, dropped_acc=None) -> DataFrame:
     return pages.select("url", "html").mapInArrow(gen, TEXT_SCHEMA)
 
 
+def pages_extract_text(pages: DataFrame, dropped_acc=None) -> DataFrame:
+    """pages -> (url, text): the byte-identity extraction operator.
+
+    Runs the STREAMING extractor through the lenient ladder — no
+    Hiccup tree is materialized per page (extract_text_streaming is
+    differentially pinned against parse+extract_text), which cuts the
+    extraction leg's per-page allocation ~2-3x and with it the
+    memory-bandwidth pressure that capped 8->32 scaling."""
+    from ..kernel.xmlparse import extract_text_streaming
+
+    return _text_map(pages, extract_text_streaming, dropped_acc)
+
+
 def pages_extract_content(pages: DataFrame, drop_tags=None,
                           dropped_acc=None) -> DataFrame:
     """pages -> (url, text) with BOILERPLATE subtrees removed —
@@ -319,7 +325,8 @@ def pages_extract_content(pages: DataFrame, drop_tags=None,
     style, nav, header, footer, aside, form, ... (kernel
     BOILERPLATE_TAGS; pass ``drop_tags`` to override) vanish whole,
     everything else keeps the byte-identity text semantics. Same
-    streaming fast path and lenient ladder as pages_extract_text."""
+    streaming fast path, lenient ladder and map as
+    pages_extract_text."""
     import functools
 
     from ..kernel.xmlparse import (
@@ -329,23 +336,9 @@ def pages_extract_content(pages: DataFrame, drop_tags=None,
 
     drop = frozenset(t.lower() for t in drop_tags) if drop_tags \
         else BOILERPLATE_TAGS
-    parser = functools.partial(extract_content_streaming,
-                               drop_tags=drop)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, texts = [], []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                text, _mode = parse_html_lenient(html, parser=parser)
-                if text is None:
-                    if dropped_acc is not None:
-                        dropped_acc.add(1)
-                    continue
-                urls.append(url)
-                texts.append(text)
-            yield pd.DataFrame({"url": urls, "text": texts})
-
-    return pages.select("url", "html").mapInPandas(gen, TEXT_SCHEMA)
+    return _text_map(pages, functools.partial(extract_content_streaming,
+                                              drop_tags=drop),
+                     dropped_acc)
 
 
 def scrape_pages(pages: DataFrame, key_to_pattern: dict[str, str],

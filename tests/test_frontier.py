@@ -90,6 +90,79 @@ def test_resume_reproduces_fresh_run(spark, tmp_path, oracle_state):
     shutil.rmtree(d1, ignore_errors=True)
 
 
+def test_fetch_log_reads_only_committed_waves(spark, spark_crawl, tmp_path,
+                                              oracle_state):
+    """A wave whose lineage marker never committed contributes no
+    fetch-log rows: read_fetch_log lists waves 0..last_complete_wave,
+    not every fetch_log dir on disk."""
+    import os
+
+    cfg, _ = spark_crawl
+    d = str(tmp_path / "uncommitted")
+    shutil.copytree(cfg.checkpoint_dir, d)
+    os.remove(os.path.join(d, "wave=00002", "_lineage.json"))
+    log = read_fetch_log(spark, CrawlConfig(checkpoint_dir=d, **CFG)) \
+        .orderBy("wave", "rank_in_wave").collect()
+    assert [(r.wave, r.rank_in_wave, r.url) for r in log] == \
+        [(e["wave"], e["rank_in_wave"], e["url"])
+         for e in oracle_state.fetch_log if e["wave"] < 2]
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def test_resume_fills_a_gap_in_the_committed_prefix(spark, tmp_path,
+                                                    oracle_state):
+    """Waves commit as a contiguous prefix: with wave 1's lineage and
+    seen delta gone, wave 2's marker builds on a wave that never
+    committed, so the last complete wave is 0. A resume drops the
+    stale wave 2 before replaying wave 1 (its old marker must not
+    count once wave 1 commits), and the crawl ends in the oracle's
+    state."""
+    import os
+
+    from cuphic_spark.frontier.snapshots import list_snapshots, verify_lineage
+
+    d = str(tmp_path / "gap")
+    cfg = CrawlConfig(checkpoint_dir=d, **CFG)
+    crawl(spark, cfg)
+    w1 = os.path.join(d, "wave=00001")
+    os.remove(os.path.join(w1, "_lineage.json"))
+    shutil.rmtree(os.path.join(w1, "seen_delta"))
+    assert last_complete_wave(cfg) == 0
+    assert [s["wave"] for s in list_snapshots(cfg)] == [0]
+
+    first = crawl(spark, CrawlConfig(checkpoint_dir=d,
+                                     **{**CFG, "n_waves": 2}))
+    assert first["start_wave"] == 1
+    assert last_complete_wave(cfg) == 1
+    assert not os.path.exists(os.path.join(d, "wave=00002"))
+    summary = crawl(spark, cfg)
+    assert summary["start_wave"] == 2
+    assert first["metrics"] + summary["metrics"] == oracle_state.metrics[1:]
+    log = read_fetch_log(spark, cfg).orderBy("wave", "rank_in_wave").collect()
+    assert [(r.wave, r.rank_in_wave, r.url) for r in log] == \
+        [(e["wave"], e["rank_in_wave"], e["url"])
+         for e in oracle_state.fetch_log]
+    assert verify_lineage(cfg) == []
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def test_rollback_drops_waves_above_a_gap(spark_crawl, tmp_path):
+    """rollback_to_wave deletes every wave dir above its target — also
+    a marked wave that sits above an uncommitted one."""
+    import os
+
+    from cuphic_spark.frontier.snapshots import rollback_to_wave
+
+    cfg, _ = spark_crawl
+    d = str(tmp_path / "gap_rollback")
+    shutil.copytree(cfg.checkpoint_dir, d)
+    os.remove(os.path.join(d, "wave=00001", "_lineage.json"))
+    assert rollback_to_wave(CrawlConfig(checkpoint_dir=d, **CFG), 0) == 2
+    assert sorted(n for n in os.listdir(d) if n.startswith("wave=")) == \
+        ["wave=00000"]
+    shutil.rmtree(d, ignore_errors=True)
+
+
 def test_cuckoo_prune_path_same_result(spark, tmp_path, oracle_state):
     """Wave-loop cuckoo pruning must be pruning-only: forcing it on
     from wave 1 (threshold 0) cannot change any output."""
@@ -868,18 +941,13 @@ def test_broadcast_anti_seen_same_result(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_score_histogram_guard_raises(spark, tmp_path, monkeypatch):
-    """A fine-grained score_expr must fail LOUDLY (the distributed
-    top-W collects one row per distinct score; silence here would be
-    an O(|frontier|) driver transfer at scale)."""
-    import cuphic_spark.frontier.crawl as crawl_mod
-
-    def fine_score(id_col, depth_col, is_seed):
-        return id_col.cast("long")  # one distinct score per url
-
-    monkeypatch.setattr(crawl_mod, "score_expr", fine_score)
+def test_score_histogram_guard_raises(spark, tmp_path):
+    """More distinct scores than max_score_histogram must fail LOUDLY
+    (the distributed top-W collects one row per distinct score;
+    silence here would be an O(|frontier|) driver transfer at scale):
+    the 12 seeds take 7 distinct scores, over a bound of 1."""
     cfg = CrawlConfig(checkpoint_dir=str(tmp_path / "fine"),
-                      max_score_histogram=8, **CFG)
+                      max_score_histogram=1, **CFG)
     with pytest.raises(ValueError, match="max_score_histogram"):
         crawl(spark, cfg)
 
@@ -1792,9 +1860,10 @@ def test_seed_score_counts_closed_form(spark):
 
 
 def test_write_wave_frontier_precounts_identical(spark, tmp_path):
-    """score_counts precounts must produce the identical layout,
-    manifest and bytes as the data-derived run-map aggregation —
-    same files, same (band, run) split, same row order."""
+    """Caller-supplied score_counts must produce the identical layout,
+    manifest and bytes as the counts write_wave_frontier collects
+    itself when none are given — same files, same (band, run) split,
+    same row order."""
     import os
 
     from cuphic_spark.frontier import bands

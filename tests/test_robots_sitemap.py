@@ -220,32 +220,50 @@ class TestRobotsDataFrame:
             "https://h.example/sitemap.xml"]
 
 
-class TestPrefixRules:
-    def test_prefix_dim_shape(self, spark):
-        from cuphic_spark.frontier.robots import prefix_rules
+class TestOneRobotsEvaluator:
+    @pytest.mark.parametrize("epoch", [0, 3])
+    def test_spec_and_parsed_dims_agree(self, spark, epoch):
+        """The crawl's closed-form spec dim (crawl.robots_rules) and the
+        dim parsed from robots.txt bodies ENCODING the same epoch spec
+        (rules_dim(parse_robots(...))) have one schema and give equal
+        denied_by_rules verdicts on every host's /private/ and /doc/
+        urls — one evaluator behind both sources."""
+        from pyspark.sql import functions as F
 
+        from cuphic_spark.frontier.crawl import robots_rules
+        from cuphic_spark.frontier.robots import denied_by_rules, rules_dim
+
+        n_hosts = 10
         bodies = spark.createDataFrame(
-            [("a.example", "User-agent: *\nDisallow: /private/\n"
-                           "Disallow: /tmp/\n"),
-             ("b.example", "User-agent: *\nDisallow:\n")],
-            "host string, robots_txt string")
-        dim = prefix_rules(parse_robots(bodies), "cuphicbot")
-        rows = {r["host"]: sorted(r["deny_prefixes"])
-                for r in dim.collect()}
-        assert rows == {"a.example": ["/private/", "/tmp/"]}
+            [(f"host{h}.example",
+              "User-agent: *\nDisallow: /private/\n"
+              if h % 7 == epoch % 7 else "User-agent: *\nDisallow:\n")
+             for h in range(n_hosts)], "host string, robots_txt string")
+        spec = robots_rules(spark, epoch, n_hosts)
+        parsed = rules_dim(parse_robots(bodies), "cuphicbot")
+        assert spec.dtypes == parsed.dtypes
 
-    @pytest.mark.parametrize("body", [
-        "User-agent: *\nAllow: /ok\nDisallow: /x\n",
-        "User-agent: *\nDisallow: /x*\n",
-        "User-agent: *\nDisallow: /x$\n",
-    ])
-    def test_refuses_non_prefix_corpora(self, spark, body):
-        from cuphic_spark.frontier.robots import prefix_rules
+        urls = spark.createDataFrame(
+            [(f"host{h}.example", path) for h in range(n_hosts)
+             for path in ("/private/doc/11", "/private/", "/doc/5",
+                          "/doc/private/1", "/")],
+            "host string, path string")
 
-        bodies = spark.createDataFrame(
-            [("a.example", body)], "host string, robots_txt string")
-        with pytest.raises(ValueError, match="prefix fast path"):
-            prefix_rules(parse_robots(bodies), "cuphicbot")
+        def verdicts(dim):
+            return sorted(
+                (r.host, r.path, r.den) for r in urls
+                .join(F.broadcast(dim), "host", "left")
+                .select("host", "path", denied_by_rules(
+                    F.col("path"), F.col("robots_rules")).alias("den"))
+                .collect())
+
+        got = verdicts(spec)
+        assert got == verdicts(parsed)
+        denied = {(h, p) for h, p, den in got if den}
+        assert denied == {
+            (f"host{h}.example", p) for h in range(n_hosts)
+            if h % 7 == epoch % 7
+            for p in ("/private/doc/11", "/private/")}
 
 
 class TestRfcRobotsInCrawl:
@@ -255,7 +273,8 @@ class TestRfcRobotsInCrawl:
         hosts disallow /private/) parsed by the RFC parser and fed to
         the wave loop via extra['robots_txt_fn'] must schedule
         byte-identically to the closed-form spec path — parse ->
-        group-select -> prefix-dim == robots_rules."""
+        group-select -> rules_dim, the dim shape robots_rules emits,
+        through the one denied_by_rules evaluator."""
         import shutil
 
         from cuphic_spark.frontier.crawl import (
@@ -301,12 +320,10 @@ class TestFullRfcRobotsInCrawl:
         """Round-6 verdict #1: FULL RFC 9309 semantics (wildcards,
         ``$`` anchors, Allow rules, longest-match, tie -> Allow)
         inside the crawl wave loop. A robots corpus no prefix dim
-        can express drives a 3-wave crawl via extra['robots_txt_fn']
-        (mode auto -> full); the single-process oracle re-derives
-        the deny verdicts with the pure-Python RFC evaluator — fetch
-        log AND metrics must match exactly. Also pins that auto mode
-        on a PREFIX-only corpus still schedules identically (the
-        fast path is kept)."""
+        can express drives a 3-wave crawl via extra['robots_txt_fn'];
+        the single-process oracle re-derives the deny verdicts with
+        the pure-Python RFC evaluator — fetch log AND metrics must
+        match exactly."""
         import shutil
 
         from cuphic_spark.frontier.crawl import (
