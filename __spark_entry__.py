@@ -2633,8 +2633,9 @@ def _tei_scrape_oracle_sql() -> str:
     [:persName {:ref ref :type ?type} full-name] = persName with a
     ref attr and EXACTLY one hiccup child (non-blank text segments
     merge, blanks drop); [:item (... c)] = item with >= 1 child."""
-    import pathlib as _pathlib
     import xml.etree.ElementTree as _ET
+
+    from cuphic_spark.sources.tei import TEI_DIR
 
     def _local(tag):
         return tag.split("}")[-1]
@@ -2648,8 +2649,7 @@ def _tei_scrape_oracle_sql() -> str:
         return n
 
     counts = {"all-tags": 0, "p": 0, "persName": 0, "items": 0}
-    tei_dir = _pathlib.Path("/root/reference/resources/examples/tei")
-    for path in sorted(tei_dir.glob("*.xml")):
+    for path in sorted(TEI_DIR.glob("*.xml")):
         root = _ET.fromstring(path.read_bytes())
         for el in root.iter():
             counts["all-tags"] += 1

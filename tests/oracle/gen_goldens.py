@@ -1,7 +1,7 @@
 """One-shot golden generator.
 
 Parses the 12 TEI files from the reference corpus
-(/root/reference/resources/examples/tei/) with the kernel parser and
+(``cuphic_spark.sources.tei.TEI_DIR``) with the kernel parser and
 writes:
 
 * goldens/text/{file}.txt       — byte-identical extracted text
@@ -24,8 +24,8 @@ import pathlib
 
 from cuphic_spark.kernel import parse_xml, extract_text, scrape
 from cuphic_spark.kernel.reader import parse as p, dumps
+from cuphic_spark.sources.tei import TEI_DIR
 
-TEI_DIR = pathlib.Path("/root/reference/resources/examples/tei")
 REPO = pathlib.Path(__file__).resolve().parents[2]
 
 SCRAPE_PATTERNS = {

@@ -4,6 +4,8 @@ streaming extraction."""
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import requires_tei_corpus
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -100,6 +102,7 @@ def test_ivf_topk_subset_of_brute(spark, emb):
     assert len(set(ivf) & set(brute)) / len(ivf) >= 0.2
 
 
+@requires_tei_corpus
 def test_streaming_extraction(spark, tmp_path):
     from cuphic_spark.sources.tei import tei_pages
     from cuphic_spark.streaming.pages_stream import (

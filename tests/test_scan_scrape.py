@@ -18,11 +18,12 @@ from cuphic_spark.kernel import (
 )
 from cuphic_spark.kernel.reader import parse as p
 from cuphic_spark.kernel.values import Keyword, Symbol
+from cuphic_spark.sources.tei import TEI_DIR
+from tests.conftest import requires_tei_corpus
 
 S = Symbol
 K = Keyword
 
-TEI = pathlib.Path("/root/reference/resources/examples/tei")
 GOLDENS = pathlib.Path(__file__).resolve().parents[1] / "goldens"
 
 PATTERNS = {
@@ -38,10 +39,11 @@ PATTERNS = {
 
 @pytest.fixture(scope="module")
 def result():
-    tree = parse_xml((TEI / "test-1307-anno-tei.xml").read_bytes())
+    tree = parse_xml((TEI_DIR / "test-1307-anno-tei.xml").read_bytes())
     return scrape(tree, PATTERNS)
 
 
+@requires_tei_corpus
 def test_all_tags(result):
     all_tags = result["all-tags"]
     assert len(all_tags) == 123
@@ -50,6 +52,7 @@ def test_all_tags(result):
     assert all(len(b) == 1 for b in all_tags)
 
 
+@requires_tei_corpus
 def test_p(result):
     ps = result["p"]
     assert len(ps) == 22
@@ -58,11 +61,13 @@ def test_p(result):
     assert all(isinstance(b.get(S("?id")), str) for b in ps[1:-1])
 
 
+@requires_tei_corpus
 def test_rs(result):
     groups = Counter(b[S("type")] for b in result["rs"])
     assert groups == {"org": 4, "publication": 4}
 
 
+@requires_tei_corpus
 def test_persname(result):
     pn = result["persName"]
     groups = Counter(b.get(S("?type")) for b in pn)
@@ -80,12 +85,14 @@ def test_persname(result):
     assert sender[0][S("full-name")] == "AFSENDER "
 
 
+@requires_tei_corpus
 def test_ref(result):
     refs = result["ref"]
     assert len(refs) == 33
     assert all(len(b) == 1 for b in refs)
 
 
+@requires_tei_corpus
 def test_term(result):
     term = result["term"]
     assert len(term) == 4
@@ -93,10 +100,12 @@ def test_term(result):
     assert len({b[S("term/name")] for b in term}) == 3
 
 
+@requires_tei_corpus
 def test_bad_pattern_key_absent(result):
     assert "glen" not in result
 
 
+@requires_tei_corpus
 def test_scrape_matches_committed_golden(result):
     """The committed golden file freezes this exact behaviour for the
     Spark-parity checks."""

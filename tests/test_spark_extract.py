@@ -14,6 +14,7 @@ from cuphic_spark.operators.parse import (
     scrape_pages,
 )
 from cuphic_spark.sources.tei import tei_pages
+from tests.conftest import requires_tei_corpus
 
 GOLDENS = pathlib.Path(__file__).resolve().parents[1] / "goldens"
 
@@ -38,6 +39,7 @@ def _canon(df):
                      F.sort_array(F.map_entries("bindings")).alias("b"))
 
 
+@requires_tei_corpus
 def test_extracted_text_byte_identity(spark, pages):
     ext = pages_extract_text(pages).withColumnRenamed("text", "extracted")
     j = ext.join(pages.select("url", "text"), "url")
@@ -56,6 +58,7 @@ def test_relational_and_kernel_paths_identical(spark, pages):
     assert ker.exceptAll(rel).count() == 0
 
 
+@requires_tei_corpus
 def test_golden_counts_via_spark(spark, pages):
     compiled = [compile_pattern(k, v) for k, v in PATTERNS.items()]
     m = match_nodes(pages_to_nodes(pages), compiled)

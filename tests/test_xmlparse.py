@@ -10,9 +10,10 @@ from cuphic_spark.kernel import parse_xml, extract_text
 from cuphic_spark.kernel.reader import parse as p
 from cuphic_spark.kernel.values import Keyword
 from cuphic_spark.kernel.xmlparse import is_blank, keywordize
+from cuphic_spark.sources.tei import TEI_DIR
+from tests.conftest import requires_tei_corpus
 
 K = Keyword
-TEI = pathlib.Path("/root/reference/resources/examples/tei")
 GOLDEN_TEXT = pathlib.Path(__file__).resolve().parents[1] / "goldens" / "text"
 
 
@@ -69,11 +70,12 @@ def test_tag_with_namespace_prefix():
     assert h[0] == K("t/r")
 
 
-@pytest.mark.parametrize("path", sorted(TEI.glob("*.xml")),
-                         ids=lambda p: p.stem)
-def test_golden_text_byte_identity(path):
-    tree = parse_xml(path.read_bytes())
-    golden = (GOLDEN_TEXT / (path.stem + ".txt")).read_text(encoding="utf-8")
+@requires_tei_corpus
+@pytest.mark.parametrize(
+    "stem", sorted(g.stem for g in GOLDEN_TEXT.glob("*.txt")))
+def test_golden_text_byte_identity(stem):
+    tree = parse_xml((TEI_DIR / (stem + ".xml")).read_bytes())
+    golden = (GOLDEN_TEXT / (stem + ".txt")).read_text(encoding="utf-8")
     assert extract_text(tree) == golden
 
 
@@ -85,21 +87,19 @@ def test_extract_text_tree_rules():
     assert extract_text(tree2) == "xy"
 
 
+@requires_tei_corpus
 def test_streaming_extractor_matches_tree_extraction():
     """extract_text_streaming must be byte-identical to
     extract_text(parse(...)) — TEI corpus + edge shapes (comments
     splitting text runs, CDATA, blank-only runs, deep nesting)."""
-    import pathlib
-
     from cuphic_spark.kernel.xmlparse import (
         extract_text,
         extract_text_streaming,
         parse,
     )
 
-    tei_dir = pathlib.Path("/root/reference/resources/examples/tei")
     n = 0
-    for f in sorted(tei_dir.glob("*.xml")):
+    for f in sorted(TEI_DIR.glob("*.xml")):
         data = f.read_bytes()
         assert extract_text_streaming(data) == extract_text(parse(data)), f
         n += 1
