@@ -19,11 +19,7 @@ from cuphic_spark.plans import formatted_plan as plan_of  # noqa: E402
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from cuphic_spark.compiler import (
-        compile_pattern,
-        match_nodes,
-        match_nodes_union,
-    )
+    from cuphic_spark.compiler import compile_pattern, match_nodes
     from cuphic_spark.operators.dedup import minhash_signature
     from cuphic_spark.operators.parse import pages_to_nodes
     from cuphic_spark.operators.similarity import inner_product_topk_quantized
@@ -61,7 +57,7 @@ def main() -> None:
         "children keep the plan at exactly one MapInPandas.")
 
     add("Head-filter pushdown (materialized nodes parquet)",
-        match_nodes_union(nodes, compiled[:1]),
+        match_nodes(nodes, compiled[:1]),
         "Pattern head-check compiled to a filter that reaches the "
         "parquet scan. Check: PushedFilters on `tag`, ReadSchema "
         "pruned to the consumed columns.")

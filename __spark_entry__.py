@@ -1103,10 +1103,13 @@ def q_rescore_authority(spark, sf_dir):
 def q_tei_scrape_kernel(spark, sf_dir):
     """The reference's own golden corpus through the KERNEL (Arrow)
     path — per-pattern match counts (pytest pins exact values; the
-    gate records rows + schema)."""
+    gate records rows + schema). Raises when the corpus is absent:
+    zero pages would compare as zero rows, which pins nothing."""
     from cuphic_spark.operators.parse import scrape_pages
-    from cuphic_spark.sources.tei import tei_pages
+    from cuphic_spark.sources.tei import TEI_DIR, tei_pages
 
+    if not any(TEI_DIR.glob("*.xml")):
+        raise FileNotFoundError(f"TEI corpus absent: no *.xml in {TEI_DIR}")
     pats = {
         "all-tags": "[tag ???]",
         "p": "[:p {:xml/id ?id} ???]",

@@ -467,15 +467,3 @@ def match_nodes(nodes: DataFrame,
                         F.lit(" — nodes/targets invariant broken"))))
                     .alias("bindings")))
 
-
-def match_nodes_union(nodes: DataFrame,
-                      compiled: list[CompiledPattern]) -> DataFrame:
-    """Union-of-branches variant (kept for plan comparison in the
-    bench; prefer match_nodes). Each branch's head filter pushes into
-    a (materialized) parquet nodes scan independently — the right
-    shape when patterns run as SEPARATE queries over stored nodes."""
-    outs = [match_nodes(nodes, [cp]) for cp in compiled]
-    df = outs[0]
-    for o in outs[1:]:
-        df = df.unionByName(o)
-    return df

@@ -204,12 +204,18 @@ def robots_rules(spark: SparkSession, version: int = 0,
     # per-wave broadcast build of this dim was a 32-task Spark job
     # each invoking a Python worker for a near-empty partition; a
     # LocalRelation broadcast builds driver-side with zero tasks.
+    # An EMPTY pandas frame skips the Arrow path and falls back to
+    # that RDD scan, so an epoch that denies no host builds one
+    # placeholder row and cuts it with limit(0), which the optimizer
+    # folds to an empty LocalRelation.
     import pandas as pd
 
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["host", "robots_rules"]),
+    dim = spark.createDataFrame(
+        pd.DataFrame(rows or [(None, None)],
+                     columns=["host", "robots_rules"]),
         schema="host string, robots_rules "
                "array<struct<regex:string,pattern_len:int,allow:boolean>>")
+    return dim if rows else dim.limit(0)
 
 
 def seed_frontier(spark: SparkSession, cfg: CrawlConfig) -> DataFrame:
@@ -550,13 +556,6 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
     else:
         robots = robots_rules(spark, version=robots_version,
                               n_hosts=cfg.n_hosts)
-    # optional per-host politeness budgets (e.g. derived from robots
-    # Crawl-delay via robots.budgets_from_delays): a tiny (host,
-    # host_budget) dim broadcast like the robots rules; hosts absent
-    # from it fall back to the scalar budget_per_host
-    budgets_fn = cfg.extra.get("host_budgets_fn")
-    host_budgets = (budgets_fn(spark, wave, cfg.n_hosts)
-                    if budgets_fn is not None else None)
     plan = bands_mod.plan_read(manifest, cfg.wave_cap)
 
     # ONE window ranks eligible rows per host; denied rows rank inside
@@ -602,16 +601,8 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         fr = eligible_src.withColumn(
             "path", _memo_cols("path_url",
                                lambda: path_col(F.col("url"))))
-        joined = fr.join(F.broadcast(robots), "host", "left")
-        if host_budgets is not None:
-            joined = (joined
-                      .join(F.broadcast(host_budgets), "host", "left")
-                      .withColumn("host_budget",
-                                  F.coalesce(F.col("host_budget"),
-                                             F.lit(cfg.budget_per_host))))
-        else:
-            joined = joined.withColumn("host_budget",
-                                       F.lit(cfg.budget_per_host))
+        joined = (fr.join(F.broadcast(robots), "host", "left")
+                  .withColumn("host_budget", F.lit(cfg.budget_per_host)))
         den = _memo_cols("den", lambda: denied_by_rules(
             F.col("path"), F.col("robots_rules")))
         ranked = (joined.withColumn("den", den)

@@ -57,7 +57,6 @@ __all__ = [
     "pagerank",
     "in_degree",
     "anchor_stats",
-    "rank_priority_expr",
 ]
 
 
@@ -362,11 +361,3 @@ SELECT (CASE WHEN id % 3 = 0 THEN 0 ELSE id % {n_hosts} END)::BIGINT
        count(*)::BIGINT AS n_pages
 FROM r5 GROUP BY 1"""
 
-
-def rank_priority_expr(rank_col, depth_col, scale: int = 10**9):
-    """Frontier priority blending link authority into the crawl
-    score: higher rank → earlier schedule, depth still dominates
-    (BFS-ish politeness-friendly ordering, cf. crawl.score_expr).
-    Integer-only, so resumable runs re-derive identical order."""
-    return (depth_col.cast("long") * F.lit(scale * 1000)
-            - rank_col.cast("long"))

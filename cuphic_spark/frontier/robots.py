@@ -45,7 +45,6 @@ __all__ = [
     "denied_by_rules",
     "agent_group",
     "path_allowed",
-    "budgets_from_delays",
     "robots_allowed",
     "url_path_col",
     "PARSED_SCHEMA",
@@ -284,27 +283,6 @@ def path_allowed(group: dict | None, path: str) -> bool:
             if best is None or key > best[0]:
                 best = (key, allow)
     return True if best is None else best[1]
-
-
-def budgets_from_delays(parsed: DataFrame, agent: str,
-                        wave_period_s: float,
-                        cap: int | None = None) -> DataFrame:
-    """(host, host_budget) politeness dim from robots Crawl-delays:
-    a host asking for delay D seconds gets floor(wave_period / D)
-    fetches per wave (min 1 — a polite crawler still makes progress),
-    optionally capped. Hosts without a (positive) delay are ABSENT —
-    the wave loop coalesces them to the scalar budget_per_host. Feed
-    the result via ``CrawlConfig.extra['host_budgets_fn']``."""
-    delays = (_select_group(parsed, "delay", agent)
-              .filter(F.col("delay") > 0)
-              .groupBy("host").agg(F.min("delay").alias("crawl_delay")))
-    budget = F.greatest(
-        F.lit(1),
-        F.floor(F.lit(float(wave_period_s)) / F.col("crawl_delay"))
-        .cast("int"))
-    if cap is not None:
-        budget = F.least(budget, F.lit(int(cap)))
-    return delays.select("host", budget.alias("host_budget"))
 
 
 def robots_allowed(urls: DataFrame, parsed: DataFrame, agent: str,

@@ -35,8 +35,7 @@ from pyspark.sql import DataFrame
 from ..kernel import parse_pattern, parse_xml, scan
 from ..kernel.match import Matcher
 
-__all__ = ["extract_sitemap_entries", "parse_sitemaps",
-           "sitemap_frontier_rows", "SITEMAP_SCHEMA"]
+__all__ = ["extract_sitemap_entries", "parse_sitemaps", "SITEMAP_SCHEMA"]
 
 _PATTERNS: list[tuple[str, str]] | None = None
 
@@ -119,33 +118,3 @@ def parse_sitemaps(bodies: DataFrame, host_col: str = "host",
     return bodies.select(host_col, body_col).mapInPandas(
         gen, SITEMAP_SCHEMA)
 
-
-def sitemap_frontier_rows(entries: DataFrame, wave: int = 0,
-                          base_score: int = 15000,
-                          priority_scale: int = 1000) -> DataFrame:
-    """Sitemap ``url`` entries -> frontier-shaped rows, closing the
-    robots → Sitemap: → parse → frontier loop (the robots parser
-    surfaces sitemap urls, ``parse_sitemaps`` their entries; the
-    result unions into the frontier exactly like discovered links —
-    `crawl`'s frontier merge dedups against seen).
-
-    Score = base + priority*scale: a site's own 0.0-1.0 priority
-    ranks its urls within the sitemap band; the default band sits
-    between seed scores and organic-link scores so operators can
-    band-tune it. ``kind='sitemap'`` rows (sitemapindex children) are
-    NOT emitted — those are more sitemaps to fetch, not page urls;
-    route them through another parse round."""
-    from pyspark.sql import functions as F
-
-    from .urlnorm import host_col as url_host_col
-
-    urls = entries.filter(F.col("kind") == "url")
-    score = (F.lit(int(base_score))
-             + (F.coalesce(F.col("priority"), F.lit(0.5))
-                * priority_scale).cast("long"))
-    return urls.select(
-        F.col("loc").alias("url"),
-        url_host_col(F.col("loc")).alias("host"),
-        F.lit(0).alias("depth"),
-        score.alias("score"),
-        F.lit(int(wave)).alias("discovered_wave"))

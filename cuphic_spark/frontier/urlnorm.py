@@ -1,13 +1,11 @@
-"""URL canonicalization — two implementations, one contract.
+"""URL canonicalization — one implementation, pinned to a Python twin.
 
 * ``canonicalize_cols`` — pure built-in column expressions (the hot
   path: codegen'd, pushdown-friendly). Handles the full synthetic
   graph plus the common real-world cases: relative paths, fragment
   strip, scheme/host lowercasing, default-port removal.
-* ``resolve_urls_pandas`` — Arrow-batched pandas UDF wrapping
-  urllib's RFC-3986 reference resolution (dot-segments, ../, etc.)
-  for corpora the expression path can't express. Same contract,
-  pinned equal on the synthetic corpus by tests.
+* ``urlnorm_py.canonicalize_py`` — the urllib twin the crawl oracle
+  uses; tests pin the two equal on the synthetic corpus.
 
 Contract: lowercase scheme+host, strip fragment, drop default port
 (:80 http, :443 https), resolve against the base page url, keep the
@@ -75,26 +73,3 @@ def path_col(url: Column) -> Column:
     p = F.regexp_extract(url, r"^[a-z]+://[^/]+(/[^#?]*)", 1)
     return F.when(p == "", F.lit("/")).otherwise(p)
 
-
-def resolve_urls_pandas(df, href_col: str, base_col: str, out_col: str):
-    """Full RFC-3986 resolution via urllib inside mapInPandas —
-    the fallback for messy real-world hrefs (dot segments, protocol-
-    relative, userinfo). Arrow-batched, never row-at-a-time SQL UDF."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(df.schema.fields
-                          + [T.StructField(out_col, T.StringType())])
-
-    def gen(batches):
-        from .urlnorm_py import canonicalize_py
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = [
-                canonicalize_py(h, b)
-                for h, b in zip(pdf[href_col], pdf[base_col])
-            ]
-            yield pdf
-
-    return df.mapInPandas(gen, schema)

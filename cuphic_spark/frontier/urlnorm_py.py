@@ -1,5 +1,5 @@
 """Pure-Python canonicalization twin of urlnorm.canonicalize_cols —
-used by the Arrow-batched fallback path and by the crawl oracle.
+used by the crawl oracle and the differential tests.
 Same contract: lowercase scheme+host, strip fragment, default-port
 removal, resolve against base, keep query."""
 

@@ -230,35 +230,6 @@ LSH_PRESETS = {
 }
 
 
-def lsh_pick_config(target_s: float, min_recall: float = 0.9,
-                    max_hashes: int = 256) -> dict:
-    """Pick the (n_hashes, band_size) whose recall at the target
-    similarity meets ``min_recall`` with the SHARPEST selectivity:
-    among qualifying configs, maximize the knee (highest threshold =
-    fewest sub-threshold candidates into the verify stage), then
-    minimize n_hashes (hashing cost). Deterministic exhaustive search
-    over n in {8,16,...,max_hashes} x ALL divisor band sizes of n —
-    the knob a user turns instead of guessing b x r (picks the web_08
-    preset for target 0.8 exactly)."""
-    best = None
-    n = 8
-    while n <= max_hashes:
-        for r in range(n, 0, -1):
-            if n % r:
-                continue
-            if lsh_recall(target_s, n, r) >= min_recall:
-                key = (lsh_threshold(n, r), -n)
-                if best is None or key > best[0]:
-                    best = (key, {"n_hashes": n, "band_size": r})
-        n *= 2
-    if best is None:
-        raise ValueError(
-            f"no config with <= {max_hashes} hashes reaches recall "
-            f">= {min_recall} at similarity {target_s}; raise "
-            "max_hashes or lower min_recall")
-    return best[1]
-
-
 def minhash_lsh_pairs(docs: DataFrame, k: int = 3, n_hashes: int = 8,
                       band_size: int = 2,
                       max_bucket: int = 4096) -> DataFrame:

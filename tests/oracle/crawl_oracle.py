@@ -261,7 +261,6 @@ def run(universe: int, n_seeds: int, budget_per_host: int, wave_cap: int,
         bloom_min_seen: int = 50_000,
         bloom_fp_rebuild: float = 0.2,
         redirect_mod: int = 0,
-        host_budgets: dict[str, int] | None = None,
         robots_deny_fn=None) -> OracleState:
     split_rows = band_split_rows or max(wave_cap, 1)
     st = OracleState()
@@ -335,9 +334,7 @@ def run(universe: int, n_seeds: int, budget_per_host: int, wave_cap: int,
             budgeted = []
             for url, (depth, sc, dw) in eligible:
                 h = host_of_url(url)
-                limit = (host_budgets.get(h, budget_per_host)
-                         if host_budgets else budget_per_host)
-                if per_host.get(h, 0) < limit:
+                if per_host.get(h, 0) < budget_per_host:
                     per_host[h] = per_host.get(h, 0) + 1
                     budgeted.append((url, depth, sc))
             if len(budgeted) >= wave_cap or exhausted:

@@ -20,7 +20,6 @@ from cuphic_spark.frontier.graphrank import (
     in_degree,
     pagerank,
     pagerank_oracle_sql,
-    rank_priority_expr,
     synthetic_edges,
     synthetic_pages,
 )
@@ -109,18 +108,6 @@ def test_anchor_stats_matches_closed_form_oracle(spark):
     # is NOT any page's canonical url_of
     urls = {webgraph.url_of(i) for i in range(U)}
     assert any(t not in urls for t in got)
-
-
-def test_rank_priority_orders_by_depth_then_rank(spark):
-    df = spark.createDataFrame(
-        [(0, 2 * SCALE, 1), (1, SCALE, 0), (2, 3 * SCALE, 0)],
-        "id long, rank long, depth int")
-    got = [r.id for r in
-           df.orderBy(rank_priority_expr(F.col("rank"),
-                                         F.col("depth")))
-           .collect()]
-    # depth 0 first; within depth, higher rank first
-    assert got == [2, 1, 0]
 
 
 def test_pagerank_rejects_nothing_but_frees_checkpoints(spark):

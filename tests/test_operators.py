@@ -1,10 +1,7 @@
-"""Training-data operator tests: dedup family, similarity search,
-streaming extraction."""
+"""Training-data operator tests: dedup family, similarity search."""
 
 import pytest
 from pyspark.sql import functions as F
-
-from tests.conftest import requires_tei_corpus
 
 SF = "/root/testdata/sf0.001"
 
@@ -102,33 +99,6 @@ def test_ivf_topk_subset_of_brute(spark, emb):
     assert len(set(ivf) & set(brute)) / len(ivf) >= 0.2
 
 
-@requires_tei_corpus
-def test_streaming_extraction(spark, tmp_path):
-    from cuphic_spark.sources.tei import tei_pages
-    from cuphic_spark.streaming.pages_stream import (
-        read_pages_stream,
-        run_to_sink,
-        streaming_extract,
-        windowed_page_counts,
-    )
-
-    src = str(tmp_path / "pages_in")
-    tei_pages(spark).write.parquet(src)
-
-    stream = read_pages_stream(spark, src, max_files_per_trigger=2)
-    assert stream.isStreaming
-
-    q = run_to_sink(streaming_extract(stream), str(tmp_path / "out"),
-                    str(tmp_path / "chk"))
-    q.awaitTermination(120)
-    out = spark.read.parquet(str(tmp_path / "out"))
-    assert out.count() == 12  # all TEI pages extracted through the stream
-
-    # windowed agg compiles and is streaming (smoke: plan only)
-    win = windowed_page_counts(stream)
-    assert win.isStreaming
-
-
 def test_lsh_recall_math_and_presets():
     """Round-4 verdict item 3: the 1-(1-s^r)^b recall helper, its
     knee, and the documented production presets — pure math, pinned
@@ -165,18 +135,6 @@ def test_lsh_recall_math_and_presets():
     with _pytest.raises(ValueError, match="multiple"):
         lsh_recall(0.5, 10, 4)
 
-    # the config chooser recovers the documented web preset at the
-    # 0.8 dedup point, always meets the recall floor, and refuses
-    # unreachable asks loudly
-    from cuphic_spark.operators.dedup import lsh_pick_config
-
-    assert lsh_pick_config(0.8) == LSH_PRESETS["web_08"]
-    for s in (0.5, 0.6, 0.7, 0.9):
-        cfg = lsh_pick_config(s, min_recall=0.9)
-        assert lsh_recall(s, **cfg) >= 0.9
-        assert lsh_threshold(**cfg) < s  # knee below the target
-    with _pytest.raises(ValueError, match="raise"):
-        lsh_pick_config(0.3, min_recall=0.999, max_hashes=8)
 
 
 def test_minhash_lsh_hot_band_star_capped(spark):

@@ -265,6 +265,24 @@ class TestOneRobotsEvaluator:
             if h % 7 == epoch % 7
             for p in ("/private/doc/11", "/private/")}
 
+    @pytest.mark.parametrize("version,hosts",
+                             [(5, []), (0, ["host0.example"])])
+    def test_spec_dim_is_a_local_relation(self, spark, version, hosts):
+        """The spec dim plans as a driver-side LocalTableScan, never a
+        Python-RDD scan, whether or not the epoch denies any host (with
+        3 hosts, epoch 5 denies none)."""
+        from cuphic_spark.frontier.crawl import robots_rules
+        from cuphic_spark.plans import executed_plan
+
+        dim = robots_rules(spark, version=version, n_hosts=3)
+        plan = executed_plan(dim)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+        assert dim.dtypes == [
+            ("host", "string"),
+            ("robots_rules",
+             "array<struct<regex:string,pattern_len:int,allow:boolean>>")]
+        assert [r.host for r in dim.collect()] == hosts
+
 
 class TestRfcRobotsInCrawl:
     def test_rfc_source_matches_spec_crawl(self, spark, tmp_path):
@@ -381,34 +399,11 @@ class TestFullRfcRobotsInCrawl:
 
 
 class TestCrawlDelayBudgets:
-    def test_budgets_from_delays(self, spark):
-        from cuphic_spark.frontier.robots import budgets_from_delays
-
-        bodies = spark.createDataFrame(
-            [("slow.example", "User-agent: *\nCrawl-delay: 10\n"
-                              "Disallow: /x\n"),
-             ("fast.example", "User-agent: *\nCrawl-delay: 0.5\n"
-                              "Disallow: /x\n"),
-             ("zero.example", "User-agent: *\nCrawl-delay: 0\n"
-                              "Disallow: /x\n"),
-             ("none.example", "User-agent: *\nDisallow: /x\n")],
-            "host string, robots_txt string")
-        got = {r["host"]: r["host_budget"] for r in budgets_from_delays(
-            parse_robots(bodies), "cuphicbot", wave_period_s=30,
-            cap=40).collect()}
-        # 30s / 10s = 3; 30 / 0.5 = 60 capped at 40; delay 0 and
-        # missing delay are absent (scalar fallback)
-        assert got == {"slow.example": 3, "fast.example": 40}
-
     def test_delay_from_deciding_group_only(self, spark):
         """RFC 9309 group selection happens once per host: a specific
-        group with rules but no Crawl-delay yields NULL delay / no
-        budget — it must not borrow the ``*`` group's delay (mixing
-        two groups)."""
-        from cuphic_spark.frontier.robots import (
-            budgets_from_delays,
-            robots_allowed,
-        )
+        group with rules but no Crawl-delay yields NULL delay — it
+        must not borrow the ``*`` group's delay (mixing two groups)."""
+        from cuphic_spark.frontier.robots import robots_allowed
 
         bodies = spark.createDataFrame(
             [("mix.example",
@@ -427,54 +422,6 @@ class TestCrawlDelayBudgets:
         assert got["https://mix.example/x"] == (False, None)
         assert got["https://mix.example/y"] == (True, None)
         assert got["https://star.example/y"] == (False, 7.0)
-        bud = {r["host"]: r["host_budget"] for r in budgets_from_delays(
-            parsed, "cuphicbot", wave_period_s=14).collect()}
-        assert bud == {"star.example": 2}
-
-    def test_per_host_budgets_match_oracle(self, spark, tmp_path):
-        """Crawl-delay-aware politeness end-to-end: a (host,
-        host_budget) dim throttles host0 (the skew host) to 1 fetch
-        per wave; scheduling must match the oracle given the same
-        budgets, diverge from the uniform-budget crawl, and absent
-        hosts must keep the scalar budget."""
-        import shutil
-
-        from cuphic_spark.frontier.crawl import (
-            CrawlConfig,
-            crawl,
-            read_fetch_log,
-        )
-        from tests.oracle import crawl_oracle
-
-        kw = dict(universe=5000, n_seeds=12, budget_per_host=4,
-                  wave_cap=24, n_waves=2)
-
-        def budgets_fn(spark_, wave, n_hosts):
-            return spark_.createDataFrame(
-                [("host0.example", 1)],
-                "host string, host_budget int")
-
-        d = str(tmp_path / "delay_budgets")
-        cfg = CrawlConfig(checkpoint_dir=d, **kw,
-                          extra={"host_budgets_fn": budgets_fn})
-        summary = crawl(spark, cfg)
-        oracle = crawl_oracle.run(
-            **kw, host_budgets={"host0.example": 1})
-        assert summary["metrics"] == oracle.metrics
-        log = read_fetch_log(spark, cfg).orderBy(
-            "wave", "rank_in_wave").collect()
-        assert [(r.wave, r.rank_in_wave, r.url) for r in log] == \
-            [(e["wave"], e["rank_in_wave"], e["url"])
-             for e in oracle.fetch_log]
-        # throttle actually binds: host0 is the i%3==0 skew host
-        waves = {}
-        for r in log:
-            if r.host == "host0.example":
-                waves[r.wave] = waves.get(r.wave, 0) + 1
-        assert waves and all(v == 1 for v in waves.values())
-        # and the schedule diverges from the uniform-budget oracle
-        assert oracle.metrics != crawl_oracle.run(**kw).metrics
-        shutil.rmtree(d, ignore_errors=True)
 
 
 class TestSitemap:
@@ -502,33 +449,6 @@ class TestSitemap:
             b"<url><loc>https://a/x</loc><priority>high</priority></url>"
             b"</urlset>")
         assert entries == [("url", "https://a/x", None, None)]
-
-    def test_sitemap_frontier_rows(self, spark):
-        """robots Sitemap: -> parse -> frontier rows end-to-end: url
-        entries become frontier-shaped rows scored by priority;
-        sitemapindex children are excluded (they are more sitemaps,
-        not pages)."""
-        from cuphic_spark.frontier.sitemap import sitemap_frontier_rows
-
-        bodies = spark.createDataFrame(
-            [("h0.example",
-              "<urlset>"
-              "<url><loc>https://h0.example/a</loc>"
-              "<priority>0.9</priority></url>"
-              "<url><loc>https://h0.example/b</loc></url>"
-              "</urlset>"),
-             ("h1.example",
-              "<sitemapindex><sitemap>"
-              "<loc>https://h1.example/s1.xml</loc>"
-              "</sitemap></sitemapindex>")],
-            "host string, sitemap_xml string")
-        rows = {r["url"]: (r["host"], r["depth"], r["score"],
-                           r["discovered_wave"])
-                for r in sitemap_frontier_rows(
-                    parse_sitemaps(bodies), wave=2).collect()}
-        assert rows == {
-            "https://h0.example/a": ("h0.example", 0, 15900, 2),
-            "https://h0.example/b": ("h0.example", 0, 15500, 2)}
 
     def test_dataframe_face_lenient(self, spark):
         bodies = spark.createDataFrame(

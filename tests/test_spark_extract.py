@@ -58,6 +58,23 @@ def test_relational_and_kernel_paths_identical(spark, pages):
     assert ker.exceptAll(rel).count() == 0
 
 
+def test_relational_and_kernel_paths_identical_on_synth_pages(spark):
+    """The same parity on the gate's synthetic pages and patterns,
+    which exist on every box (the TEI case above needs the corpus)."""
+    import __spark_entry__ as e
+    from cuphic_spark.sources.pagegen import DEFAULT_COPIES, synth_pages
+
+    pages = synth_pages(spark, "/root/testdata/sf0.001", DEFAULT_COPIES)
+    compiled = [compile_pattern(k, v) for k, v in e.GOLDEN_PATTERNS.items()]
+    assert all(c.strategy == "relational" for c in compiled)
+    rel = _canon(match_nodes(pages_to_nodes(pages), compiled)).cache()
+    ker = _canon(scrape_pages(pages, e.GOLDEN_PATTERNS)).cache()
+    assert rel.count() > 0
+    assert rel.count() == ker.count()
+    assert rel.exceptAll(ker).count() == 0
+    assert ker.exceptAll(rel).count() == 0
+
+
 @requires_tei_corpus
 def test_golden_counts_via_spark(spark, pages):
     compiled = [compile_pattern(k, v) for k, v in PATTERNS.items()]
@@ -123,15 +140,13 @@ def test_single_var_element_child_binds_subtree(spark):
 def test_head_filter_pushdown_on_materialized_nodes(spark, pages, tmp_path):
     """Over a MATERIALIZED nodes table the head filter reaches the
     parquet scan (PushedFilters) — the parse-once/query-many shape."""
-    from cuphic_spark.compiler import match_nodes_union
-
     path = str(tmp_path / "nodes")
     pages_to_nodes(pages).write.parquet(path)
     nodes = spark.read.parquet(path)
     compiled = [compile_pattern("rs", PATTERNS["rs"])]
     from cuphic_spark.plans import executed_plan
 
-    plan = executed_plan(match_nodes_union(nodes, compiled))
+    plan = executed_plan(match_nodes(nodes, compiled))
     assert "PushedFilters: [IsNotNull(tag), EqualTo(tag,rs)]" in plan \
         or "PushedFilters: [" in plan and "tag" in plan
 
