@@ -53,6 +53,7 @@ import json
 import os
 import threading
 import warnings
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from xml.parsers import expat as _expat
 
@@ -60,9 +61,11 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import bands as bands_mod
 from . import webgraph
 from .robots import denied_by_rules, pattern_to_regex
 from .seen import SeenFilters, filter_new_urls
+from .stages import Executor, Stage
 from .urlnorm import canonicalize_cols, host_col, path_col
 
 FRONTIER_SCHEMA = "url string, host string, depth int, score long, discovered_wave int"
@@ -311,8 +314,6 @@ def _fetch_extract(scheduled: DataFrame, universe: int,
     downstream — lenient parse ladder, link extraction, politeness,
     seen set, checkpointing — is fetcher-agnostic (pinned by the
     custom-fetcher crawl test)."""
-    import pandas as pd
-
     from ..operators.parse import parse_html_lenient
 
     schema = T.StructType(scheduled.schema.fields + [
@@ -418,8 +419,8 @@ def _memo_cols(key, build):
 @dataclass
 class Wave:
     """One scheduled wave: run_wave's write-ready plans, routing
-    decisions and observed metrics, carried through the wave's commit
-    by the crawl loop (which fills in the commit fields below).
+    decisions and observed metrics — the ``schedule`` stage's result,
+    which the wave's commit stages read (see STAGES).
 
     ``frontier_delta`` carries the band/part/salt layout columns
     (write_wave_frontier prepped=True); ``seen_delta_out`` is the
@@ -445,11 +446,6 @@ class Wave:
     dropped: object               # pages_dropped accumulator
     observed: dict
     new_score_base: int           # lowest score a new row can take
-    dir: str = ""
-    f_log: object = None          # the fetch_log write's future
-    extra_metrics: dict = field(default_factory=dict)
-    timings: dict = field(default_factory=dict)
-    lineage: dict = field(default_factory=dict)
 
     def get(self, name: str) -> dict:
         """Observed metrics, with a fallback for degenerate waves: a
@@ -505,8 +501,8 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
              filters: SeenFilters, n_seen: int,
              prev_links: int | None) -> Wave:
     """Schedules one wave and builds its lazy commit chain; returns
-    the Wave. ``pool`` (the crawl's thread pool) runs the stats job
-    and the layout build while the rest of the chain is constructed.
+    the Wave. ``pool`` (the crawl executor's thread pool) runs the stats
+    job and the layout build while the rest of the chain is constructed.
     ``filters`` supplies the seen check's pre-filter; ``n_seen`` is
     the seen count, ``prev_links`` the previous wave's distinct links
     (None when none was observed).
@@ -531,15 +527,13 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
 
     * ONE aggregation job over the ranked read set (score histogram
       for the distributed top-W *and* the denied count, same pass);
-    * the checkpoint writes issued by crawl() — every remaining
-      metric (scheduled, bytes, links, new urls) rides on those
-      writes via ``observe()``: zero additional actions.
+    * the checkpoint writes of the crawl's commit stages — every
+      remaining metric (scheduled, bytes, links, new urls) rides on
+      those writes via ``observe()``: zero additional actions.
 
     ``Wave.metrics()`` must be called AFTER the checkpoint writes ran;
     it reads the observations and returns the metrics row.
     """
-    from . import bands as bands_mod
-
     robots_version = (wave // cfg.robots_ttl_waves
                       if cfg.robots_ttl_waves else 0)
     robots_txt_fn = cfg.extra.get("robots_txt_fn")
@@ -601,8 +595,7 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         fr = eligible_src.withColumn(
             "path", _memo_cols("path_url",
                                lambda: path_col(F.col("url"))))
-        joined = (fr.join(F.broadcast(robots), "host", "left")
-                  .withColumn("host_budget", F.lit(cfg.budget_per_host)))
+        joined = fr.join(F.broadcast(robots), "host", "left")
         den = _memo_cols("den", lambda: denied_by_rules(
             F.col("path"), F.col("robots_rules")))
         ranked = (joined.withColumn("den", den)
@@ -615,7 +608,7 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         # which sat on the wave's critical path (round 8, ~0.2-0.3 s)
         stats_q = (ranked
                    .where(F.col("den")
-                          | (F.col("host_rank") <= F.col("host_budget")))
+                          | (F.col("host_rank") <= cfg.budget_per_host))
                    .groupBy("den", "score").agg(F.count("*").alias("cnt"))
                    .cache())
         # The stats job runs on the POOL while the wave's entire lazy
@@ -637,8 +630,8 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         passthrough = frontier.where(F.col("score") < plan.s_cut)
         budgeted = (ranked
                     .where(~F.col("den")
-                           & (F.col("host_rank") <= F.col("host_budget")))
-                    .drop("den", "host_rank", "host_budget"))
+                           & (F.col("host_rank") <= cfg.budget_per_host))
+                    .drop("den", "host_rank"))
 
         # Global top-W WITHOUT TakeOrdered (orderBy+limit would merge
         # W rows x partitions single-threaded on the driver — at
@@ -786,7 +779,7 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         cols = ["url", "host", "depth", "score", "discovered_wave"]
         over_budget = (ranked
                        .where(~F.col("den")
-                              & (F.col("host_rank") > F.col("host_budget")))
+                              & (F.col("host_rank") > cfg.budget_per_host))
                        .select(*cols))
         # the wave's frontier DELTA: residual of the consumed segments
         # (over-budget ∪ unscheduled ∪ below-cut passthrough — denied
@@ -1065,35 +1058,257 @@ _SESSION_CONFS = (
 )
 
 
+@dataclass
+class _Crawl:
+    """What every stage ``fn(ctx, wave, got)`` of a crawl() reads."""
+    spark: SparkSession
+    cfg: CrawlConfig
+    filters: SeenFilters
+    pool: object                  # run_wave's helper tasks
+
+
+def _seed_seen(ctx, wave, got):
+    """Bootstrap: the seed seen delta (the seen table's first root)."""
+    seeds = seed_frontier(ctx.spark, ctx.cfg)
+    _partitioned_write(
+        seeds.select("url", F.lit(0).alias("added_wave"), F.col("host")),
+        os.path.join(ctx.cfg.checkpoint_dir, "seen_seed"), ctx.cfg)
+    return ctx.cfg.n_seeds, None
+
+
+def _seed_manifest(ctx, wave, got):
+    """Bootstrap: seed frontier = the wave -1 manifest (band-
+    partitioned like every later wave; nothing was read, so nothing
+    is carried)."""
+    d = os.path.join(ctx.cfg.checkpoint_dir, "frontier_seed")
+    manifest, _ = bands_mod.write_wave_frontier(
+        ctx.spark, seed_frontier(ctx.spark, ctx.cfg), d, ctx.cfg,
+        bands_mod.empty_manifest(ctx.cfg), consumed=[],
+        score_counts=_seed_score_counts(ctx.cfg))
+    bands_mod.write_manifest(d, manifest)
+    return manifest
+
+
+def _activate(ctx, wave, got):
+    """Wave-boundary bloom activation or ×8 rebuild
+    (SeenFilters.activate) over the committed seen set, which it
+    returns for ``schedule``."""
+    seen = _read_seen(ctx.spark, ctx.cfg, wave - 1)
+    ctx.filters.activate(seen, got["seen_delta@-1"][0])
+    return seen
+
+
+def _schedule(ctx, wave, got):
+    return run_wave(ctx.spark, ctx.cfg, wave, got["manifest@-1"],
+                    got["activate"], ctx.pool, ctx.filters,
+                    *got["seen_delta@-1"])  # n_seen, prev_links
+
+
+def _early_counts(ctx, wave, got):
+    """The residual half of the frontier delta's score histogram reads
+    only schedule-phase caches, so its collect overlaps the seen-delta
+    write; the other half (unscheduled/new) costs no job and is merged
+    in ``_frontier`` (see run_wave delta_counts)."""
+    return bands_mod._score_counts(got["schedule"].delta_counts["early"])
+
+
+def _seen_delta(ctx, wave, got):
+    """The checkpoint writes ARE the wave's remaining Spark jobs;
+    per-wave metrics ride on them via observe(). PIPELINED: the
+    seen-delta write runs FIRST and alone — it owns the fetch+link
+    chain and materializes the fetch cache with every task slot doing
+    real work — then the fetch_log write (a pure cache read + parquet
+    encode) launches with the frontier/cuckoo/bloom writes and drains
+    into the next wave's schedule phase. The round-7 shape raced
+    fetch_log and seen-delta on the shared fetch cache: block locks
+    made each partition compute once, but the losing job's 32 tasks
+    sat BLOCKED on those locks while HOLDING task slots (REST
+    profile: fetch_log stage run 31.5 core-s, cpu 2.9 core-s per
+    wave) — half the cluster waiting on the other half.
+    Launch-after-commit keeps the overlap (fetch_log serialization
+    shares the cluster with the frontier write + next wave's
+    planning) without the blocked-slot tax.
+
+    Returns the post-wave seen count and the wave's distinct links:
+    obs_new/obs_links rode this write, so the filter maintenance and
+    the next wave read them without waiting on the fetch_log
+    write's observation."""
+    w = got["schedule"]
+    # layout prebuilt by run_wave (w.seen_delta_out) inside the
+    # overlapped construction window — only the write command itself
+    # is planned here
+    w.seen_delta_out.write.mode("overwrite").parquet(
+        os.path.join(_wave_dir(ctx.cfg, wave), "seen_delta"))
+    return (got["seen_delta@-1"][0] + int(w.get("new")["n"]),
+            int(w.get("links")["d"]))
+
+
+def _fetch_log(ctx, wave, got):
+    got["schedule"].fetch_log.write.mode("overwrite").parquet(
+        os.path.join(_wave_dir(ctx.cfg, wave), "fetch_log"))
+
+
+def _frontier(ctx, wave, got):
+    """The frontier delta's band write; returns (manifest,
+    rows_written). Merges the overlapped residual counts, the
+    driver-derived unscheduled counts and the new-row counts
+    (observed on the seen-delta write), so the write skips its counts
+    pass."""
+    w = got["schedule"]
+    merged: dict[int, int] = dict(w.delta_counts["driver"])
+    for s, c in w.new_score_counts() + got["early_counts"]:
+        merged[s] = merged.get(s, 0) + c
+    return bands_mod.write_wave_frontier(
+        ctx.spark, w.frontier_delta,
+        os.path.join(_wave_dir(ctx.cfg, wave), "frontier"), ctx.cfg,
+        got["manifest@-1"], w.plan, score_counts=sorted(merged.items()),
+        prepped=True)
+
+
+def _bloom(ctx, wave, got):
+    """Bloom maintenance folds the committed delta's cache into the
+    bitmap, overlapping the fetch_log/frontier writes — round 8: the
+    previous shape rode the seen-delta write itself via a mapInPandas
+    accumulator, which put a full Arrow->pandas->Arrow transpose of
+    every delta column on the wave's LONGEST job for work that only
+    needs the url hashes; bloom_merge_urls over the cached new_rows
+    produces the identical bitmap (same xxhash64 -> _bit_indices) off
+    the critical path. Returns the wave's bloom_* metrics."""
+    return ctx.filters.maintain_bloom(got["schedule"].seen_delta.select("url"),
+                                     _wave_dir(ctx.cfg, wave))
+
+
+def _cuckoo(ctx, wave, got):
+    ctx.filters.maintain_cuckoo(
+        got["schedule"].seen_delta.select("url"),
+        _read_seen(ctx.spark, ctx.cfg, wave), _wave_dir(ctx.cfg, wave),
+        *got["seen_delta"])  # n_seen, links
+
+
+def _manifest(ctx, wave, got):
+    """Commit the frontier manifest once the frontier, bloom and
+    cuckoo writes are all done: the point where the next wave can
+    start, so its mtime anchors the wave's phase timings (perfbench)."""
+    manifest = got["frontier"][0]
+    bands_mod.write_manifest(
+        os.path.join(_wave_dir(ctx.cfg, wave), "frontier"), manifest)
+    return manifest
+
+
+def _finalize(ctx, wave, got):
+    """Assemble the wave's metrics + lineage, commit the lineage
+    marker, release the wave's caches; returns the metrics row.
+
+    WAVE OVERLAP (round-5 verdict item 1): nothing downstream of a
+    wave depends on its fetch_log parquet except the metrics that
+    ride it, so this tail waits only on the fetch_log write and the
+    manifest — it runs while the NEXT wave's schedule phase
+    (frontier read + ranking + stats job) runs, and the fetch_log
+    serialization drain and the next wave's planning jobs share the
+    cluster instead of serializing. Ordering safety: the next wave's
+    seen-delta write needs this stage, so the lineage marker is
+    always written BEFORE the next wave's own writes launch — wave
+    directories + lineage commit strictly in wave order and
+    last_complete_wave stays contiguous (a crash mid-overlap re-runs
+    the unfinalized wave deterministically). Metric VALUES are
+    unaffected by the deferral — observations accumulate on their
+    writes no matter when .get is read; the oracle pins them
+    exactly."""
+    w, cfg = got["schedule"], ctx.cfg
+    d = _wave_dir(cfg, wave)
+    # manifest bookkeeping (footer counts recorded at write time): no
+    # Spark job, no observation, no exhaustion edge case
+    metrics = {**w.metrics(), "frontier_rows_read": w.plan.rows_read,
+               **got["bloom"], "frontier_rows_written": got["frontier"][1],
+               "frontier_size": bands_mod.manifest_total(got["manifest"])}
+    lineage = {
+        "wave": wave,
+        "input_wave_dir": _wave_dir(cfg, wave - 1) if wave else "seeds",
+        "partitions": cfg.partitions,
+        "seen_deltas": _seen_delta_paths(cfg, wave),
+        "frontier_manifest": bands_mod.manifest_path(
+            os.path.join(d, "frontier")),
+        "frontier_bands_read": w.plan.read_bands,
+        "frontier_segments_read": sorted(w.plan.consumed_keys()),
+        "frontier_score_cut": w.plan.s_cut,
+        "seen_strategy": w.seen_strategy,
+        "cuckoo_probe": w.cuckoo_probed,
+        "config": {**{k: getattr(cfg, k) for k in (
+            "universe", "n_seeds", "budget_per_host", "wave_cap",
+            "band_width")}, "band_split_rows": bands_mod.split_rows_of(cfg)},
+        "metrics": metrics,
+    }
+    bands_mod.write_json_atomic(os.path.join(d, "_lineage.json"), lineage)
+    for c in w.caches:
+        c.unpersist()
+    return metrics
+
+
+#: The bootstrap as wave -1: its seen delta and manifest feed wave 0
+#: like any wave's. The two seed writes are independent (separate
+#: dirs, and the seeds chain is a cheap range->concat built by each),
+#: so seen_seed runs on the pool while the frontier seed's histogram +
+#: band write run on the main thread — the crawl's fixed bootstrap
+#: cost was two sequential writes (round-8 driver profile: ~2.5 s of
+#: the bench leg).
+SEED_STAGES = (Stage("seen_delta", _seed_seen),
+               Stage("manifest", _seed_manifest, main=True))
+
+#: One wave. The main thread activates the bloom and schedules; the
+#: seen-delta write waits for the previous wave's finalize, so lineage
+#: commits in wave order; the next wave starts once the manifest is
+#: written, while this wave's fetch_log write and finalize overlap it.
+STAGES = (
+    Stage("activate", _activate, ("seen_delta@-1", "manifest@-1"), True),
+    Stage("schedule", _schedule,
+          ("activate", "seen_delta@-1", "manifest@-1"), main=True),
+    Stage("early_counts", _early_counts, ("schedule",)),
+    Stage("seen_delta", _seen_delta,
+          ("schedule", "seen_delta@-1", "finalize@-1")),
+    Stage("fetch_log", _fetch_log, ("schedule", "seen_delta")),
+    Stage("frontier", _frontier,
+          ("schedule", "seen_delta", "early_counts", "manifest@-1")),
+    Stage("bloom", _bloom, ("schedule", "seen_delta", "activate")),
+    Stage("cuckoo", _cuckoo, ("schedule", "seen_delta")),
+    Stage("manifest", _manifest, ("frontier", "bloom", "cuckoo")),
+    Stage("finalize", _finalize,
+          ("schedule", "fetch_log", "frontier", "bloom", "manifest")),
+)
+
+
+def _timings(spans: dict, wave: int) -> dict:
+    """One ``summary["timings"]`` row from the executor's spans. The
+    legacy keys are consecutive intervals ending at the manifest write
+    (perfbench anchors a wave on the manifest's mtime):
+    the bloom activation, the schedule phase, the wait for the previous
+    wave's finalize and the commit up to the manifest;
+    ``fetch_log_drain`` is how long past the manifest the wave's
+    finalize waited for its writes. ``stages`` maps every stage to its
+    [start, end] as offsets from the wave start."""
+    s = {n: ab for (w, n), ab in spans.items() if w == wave}
+    t0, t_man = s["activate"][0], s["manifest"][1]
+    legacy = {"bloom_build": s["activate"][1] - t0,
+              "schedule": s["schedule"][1] - s["activate"][1],
+              "prev_wave_drain": s["seen_delta"][0] - s["schedule"][1],
+              "seen_frontier_cuckoo": t_man - s["seen_delta"][0],
+              "fetch_log_drain": s["finalize"][0] - t_man}
+    return {"wave": wave, **{k: round(v, 3) for k, v in legacy.items()},
+            "stages": {n: [round(a - t0, 3), round(b - t0, 3)]
+                       for n, (a, b) in s.items()}}
+
+
 def crawl(spark: SparkSession, cfg: CrawlConfig) -> dict:
     """Run (or resume) the crawl up to cfg.n_waves. Returns summary.
 
     Sets the crawl-session confs (_SESSION_CONFS) around the wave loop
     and restores the caller's values on exit — they change the Spark-
     job count per wave, never any output."""
-    from concurrent.futures import ThreadPoolExecutor
-
     prior = {key: spark.conf.get(key, None) for key, _ in _SESSION_CONFS}
     for key, val in _SESSION_CONFS:
         spark.conf.set(key, val)
-    # the pool that runs the pipelined checkpoint writes is owned HERE
-    # so any exception inside the loop still joins in-flight writes
-    # (a write racing session teardown is worse than a leaked cache)
-    # 5 slots: the fetch_log, frontier, cuckoo and bloom (fold or
-    # shard merge) writes can all be in flight once the seen delta
-    # commits. The driver-side overlap tasks (stats collect, layout
-    # build, bloom activation build, the previous wave's finalize)
-    # queue behind them, which is safe only under one rule: NO POOL
-    # TASK EVER WAITS ON A FUTURE SUBMITTED AFTER ITSELF. Every wait on
-    # the pool's results happens on the main thread (or on an earlier-
-    # submitted future: the bloom fold on its activation build), so a full
-    # pool only delays work and cannot deadlock; a task that blocks on
-    # a later submission could wait forever behind itself.
-    pool = ThreadPoolExecutor(max_workers=5)
     try:
-        return _crawl_loop(spark, cfg, pool)
+        return _crawl_loop(spark, cfg)
     finally:
-        pool.shutdown(wait=True)
         for key, val in prior.items():
             if val is None:
                 spark.conf.unset(key)
@@ -1101,266 +1316,74 @@ def crawl(spark: SparkSession, cfg: CrawlConfig) -> dict:
                 spark.conf.set(key, val)
 
 
-def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
-    from . import bands as bands_mod
-
+def _crawl_loop(spark: SparkSession, cfg: CrawlConfig) -> dict:
     start = last_complete_wave(cfg) + 1
     # waves past the committed prefix (a torn wave, waves above a gap)
     # are replayed: drop them first, so a stale lineage marker cannot
     # count as committed once the replay fills the gap below it
     _drop_waves_above(cfg, start - 1)
-    seed_path = os.path.join(cfg.checkpoint_dir, "seen_seed")
-    seed_frontier_dir = os.path.join(cfg.checkpoint_dir, "frontier_seed")
-    prev, prev_lineage, prev_links = None, {}, None
-    if start == 0:
-        seeds = seed_frontier(spark, cfg)
-        # the two seed writes are independent (separate dirs, and the
-        # seeds chain is a cheap range->concat recomputed by each):
-        # run seen_seed on the pool while the frontier seed's
-        # histogram + band write run on this thread — the crawl's
-        # fixed bootstrap cost was two sequential writes (round-8
-        # driver profile: ~2.5 s of the bench leg)
-        f_seed = pool.submit(
-            _partitioned_write,
-            seeds.select("url", F.lit(0).alias("added_wave"),
-                         F.col("host")), seed_path, cfg)
-        # seed frontier = the wave -1 manifest (band-partitioned like
-        # every later wave; nothing was read, so nothing is carried)
-        manifest, _ = bands_mod.write_wave_frontier(
-            spark, seeds, seed_frontier_dir, cfg,
-            bands_mod.empty_manifest(cfg), consumed=[],
-            score_counts=_seed_score_counts(cfg))
-        bands_mod.write_manifest(seed_frontier_dir, manifest)
-        f_seed.result()
-        seen = _read_seen(spark, cfg, -1)
-        n_seen = cfg.n_seeds
-    else:
+    prev, prev_lineage = None, {}
+    if start > 0:
         prev = _wave_dir(cfg, start - 1)
+        with open(os.path.join(prev, "_lineage.json")) as fh:
+            prev_lineage = json.load(fh)
+        manifest = bands_mod.load_manifest(os.path.join(prev, "frontier"))
         # cuckoo shards bake the partition id they were built for;
         # resuming with a different cfg.partitions would silently
         # probe candidates against the wrong shard (false negatives
-        # through the definitely-new bypass) — refuse loudly.
-        with open(os.path.join(prev, "_lineage.json")) as fh:
-            prev_lineage = json.load(fh)
-        if prev_lineage.get("partitions") != cfg.partitions:
-            raise ValueError(
-                f"resume partitions mismatch: checkpoint {prev} was "
-                f"written with partitions={prev_lineage.get('partitions')} "
-                f"but cfg.partitions={cfg.partitions}; resume with the "
-                "recorded value (shard/candidate partition ids must agree)")
-        manifest = bands_mod.load_manifest(os.path.join(prev, "frontier"))
-        if manifest["band_width"] != cfg.band_width:
-            raise ValueError(
-                f"resume band_width mismatch: checkpoint {prev} was "
-                f"written with band_width={manifest['band_width']} but "
-                f"cfg.band_width={cfg.band_width}; the read protocol "
-                "(and its oracle) is a function of the band layout")
-        prev_split = manifest.get("band_split_rows")
-        if (prev_split is not None
-                and prev_split != bands_mod.split_rows_of(cfg)):
-            raise ValueError(
-                f"resume band_split_rows mismatch: checkpoint {prev} "
-                f"was written with run size {prev_split} but cfg "
-                f"resolves to {bands_mod.split_rows_of(cfg)}; the read "
-                "protocol (and its oracle) is a function of the run "
-                "layout — resume with the recorded value")
-        seen = _read_seen(spark, cfg, start - 1)
-        n_seen = seen.count()  # parquet footer count — cheap
-        prev_links = prev_lineage.get("metrics", {}).get("links_distinct")
+        # through the definitely-new bypass), and the read protocol
+        # (and its oracle) is a function of the band and run layout —
+        # refuse loudly, naming the recorded value to resume with
+        split = bands_mod.split_rows_of(cfg)
+        for key, was, now in (
+                ("partitions", prev_lineage.get("partitions"),
+                 cfg.partitions),
+                ("band_width", manifest["band_width"], cfg.band_width),
+                ("band_split_rows", manifest.get("band_split_rows", split),
+                 split)):
+            if was != now:
+                raise ValueError(
+                    f"resume {key} mismatch: checkpoint {prev} was "
+                    f"written with {key}={was} but cfg resolves to "
+                    f"{now}; resume with the recorded value")
 
-    filters = SeenFilters.load(spark, cfg, prev,
-                               prev_lineage.get("metrics", {}))
+    pool = ThreadPoolExecutor(max_workers=5)  # 5: early_counts and the
+    # fetch_log/frontier/bloom/cuckoo stages can all be in flight;
+    # run_wave's helper tasks queue behind them, which only delays work
+    ex = Executor(spark, _Crawl(spark, cfg, SeenFilters.load(
+        spark, cfg, prev, prev_lineage.get("metrics", {})), pool), pool,
+        keep=("finalize",))  # the metrics rows the summary returns
+    ex.done[(start - 1, "finalize")] = None  # nothing before it to wait on
+    try:
+        if start == 0:
+            ex.run(-1, SEED_STAGES)
+        else:
+            # the resumed wave's inputs, as its predecessor left them
+            # (the seen count is a parquet footer count — cheap)
+            ex.done.update({
+                (start - 1, "seen_delta"): (
+                    _read_seen(spark, cfg, start - 1).count(),
+                    prev_lineage.get("metrics", {}).get("links_distinct")),
+                (start - 1, "manifest"): manifest})
+        for wave in range(start, cfg.n_waves):
+            ex.run(wave, STAGES)
+            if cfg.compact_every and (wave + 1) % cfg.compact_every == 0:
+                # compaction must see a fully-committed wave (and resume
+                # correctness must never find a compacted snapshot ahead
+                # of the lineage markers), so a compacting wave gives up
+                # its overlap and finalizes in place; the next wave's
+                # seen read re-roots on the compact
+                ex.join()
+                from .snapshots import compact_seen
 
-    import time as _time
-
-    all_metrics = []
-    all_timings = []
-    pending: Wave | None = None  # deferred tail of the previous wave
-
-    def _finalize(w: Wave):
-        """Drain the pending wave's fetch_log write, assemble its
-        metrics + lineage, release its caches.
-
-        WAVE OVERLAP (round-5 verdict item 1): nothing downstream of
-        a wave depends on its fetch_log parquet except the metrics
-        that ride it, so the wave loop defers this tail and calls it
-        only after the NEXT wave's schedule phase (frontier read +
-        ranking + stats job) has already run — the fetch_log
-        serialization drain and the next wave's planning jobs share
-        the cluster instead of serializing. Ordering safety: the
-        deferred wave's lineage marker is always written BEFORE the
-        next wave's own writes launch, so wave directories + lineage
-        commit strictly in wave order and last_complete_wave stays
-        contiguous (a crash mid-overlap re-runs the unfinalized wave
-        deterministically). Metric VALUES are unaffected by the
-        deferral — observations accumulate on their writes no matter
-        when .get is read; the oracle pins them exactly."""
-        t0 = _time.perf_counter()
-        w.f_log.result()
-        w.timings["fetch_log_drain"] = round(_time.perf_counter() - t0, 3)
-        metrics = w.metrics()
-        metrics.update(w.extra_metrics)
-        lineage = {**w.lineage, "metrics": metrics}
-        bands_mod.write_json_atomic(
-            os.path.join(w.dir, "_lineage.json"), lineage)
-        for c in w.caches:
-            c.unpersist()
-        all_timings.append({"wave": w.wave, **w.timings})
-        all_metrics.append(metrics)
-
-    for wave in range(start, cfg.n_waves):
-        tt, t0 = {}, _time.perf_counter()
-
-        def _mark(name):
-            nonlocal t0
-            tt[name] = round(_time.perf_counter() - t0, 3)
-            t0 = _time.perf_counter()
-
-        # the previous wave's finalize (fetch_log drain + metrics +
-        # lineage + cache release) runs on the POOL, overlapping this
-        # wave's schedule phase; it is joined below, before this
-        # wave's writes launch, so wave directories + lineage still
-        # commit strictly in wave order (round 8 — previously the
-        # drain overlapped but the metrics/lineage/unpersist tail ran
-        # serially between the schedule phase and the writes)
-        f_fin = (pool.submit(_finalize, pending)
-                 if pending is not None else None)
-        filters.activate(seen, n_seen, pool)
-        _mark("bloom_build")
-        w = run_wave(spark, cfg, wave, manifest, seen, pool, filters,
-                     n_seen, prev_links)
-        # the residual half of the frontier delta's score histogram
-        # reads only schedule-phase caches — count it on the pool NOW
-        # so the collect overlaps the seen-delta write below; the
-        # other half (unscheduled/new) costs no job and is merged in
-        # write_frontier (see run_wave delta_counts)
-        f_early_counts = pool.submit(bands_mod._score_counts,
-                                     w.delta_counts["early"])
-        _mark("schedule")
-        # the previous wave's fetch_log drain + finalize overlapped
-        # the schedule phase above (pool future); it must complete
-        # (and its lineage commit) before THIS wave's writes launch —
-        # see _finalize
-        if f_fin is not None:
-            f_fin.result()
-            pending = None
-        _mark("prev_wave_drain")
-        w.dir = d = _wave_dir(cfg, wave)
-
-        # The checkpoint writes ARE the wave's remaining Spark jobs;
-        # per-wave metrics ride on them via observe(), and bloom
-        # maintenance folds the committed delta's cache into the
-        # bitmap on the POOL (overlapping the fetch_log/frontier
-        # writes) — round 8: the previous shape rode the seen-delta
-        # write itself via a mapInPandas accumulator, which put a
-        # full Arrow->pandas->Arrow transpose of every delta column
-        # on the wave's LONGEST job for work that only needs the url
-        # hashes; bloom_merge_urls over the cached new_rows produces
-        # the identical bitmap (same xxhash64 -> _bit_indices) off
-        # the critical path. PIPELINED: the seen-delta write runs FIRST
-        # and alone — it owns the fetch+link chain and materializes
-        # the fetch cache with every task slot doing real work — then
-        # the fetch_log write (a pure cache read + parquet encode)
-        # launches with the frontier/cuckoo/bloom writes and drains
-        # into the next wave's schedule phase via _finalize. The
-        # round-7 shape raced fetch_log and seen-delta on the shared
-        # fetch cache: block locks made each partition compute once,
-        # but the losing job's 32 tasks sat BLOCKED on those locks
-        # while HOLDING task slots (REST profile: fetch_log stage
-        # run 31.5 core-s, cpu 2.9 core-s per wave) — half the
-        # cluster waiting on the other half. Launch-after-commit
-        # keeps the overlap (fetch_log serialization shares the
-        # cluster with the frontier write + next wave's planning)
-        # without the blocked-slot tax.
-        def write_seen_delta():
-            # layout prebuilt by run_wave (w.seen_delta_out) inside the
-            # overlapped construction window — only the write command
-            # itself is planned here
-            w.seen_delta_out.write.mode("overwrite").parquet(
-                os.path.join(d, "seen_delta"))
-
-        def write_frontier():
-            # merge the overlapped residual counts, the driver-derived
-            # unscheduled counts and the new-row counts (observed on
-            # the seen-delta write); the frontier write then skips its
-            # counts pass
-            merged: dict[int, int] = dict(w.delta_counts["driver"])
-            for s, c in w.new_score_counts() + f_early_counts.result():
-                merged[s] = merged.get(s, 0) + c
-            return bands_mod.write_wave_frontier(
-                spark, w.frontier_delta, os.path.join(d, "frontier"),
-                cfg, manifest, w.plan,
-                score_counts=sorted(merged.items()), prepped=True)
-
-        pool.submit(write_seen_delta).result()
-        w.f_log = pool.submit(w.fetch_log.write.mode("overwrite").parquet,
-                              os.path.join(d, "fetch_log"))
-        f_frontier = pool.submit(write_frontier)
-        # obs_new/obs_links rode the just-committed seen write — the
-        # filter maintenance needs the post-wave seen count and
-        # candidate volume without blocking on the fetch_log write's
-        # observation
-        n_seen += int(w.get("new")["n"])
-        seen = _read_seen(spark, cfg, wave)
-        # metrics that do NOT ride the fetch_log write are assembled
-        # now (the filter maintenance needs only the committed seen
-        # delta); the obs_fetch-backed ones are read in _finalize,
-        # after the deferred f_log drain
-        extra_metrics = w.extra_metrics = {
-            "frontier_rows_read": w.plan.rows_read,
-            **filters.maintain(pool, w.seen_delta.select("url"), seen, d,
-                               n_seen, int(w.get("links")["d"]))}
-        new_manifest, rows_written = f_frontier.result()
-        bands_mod.write_manifest(os.path.join(d, "frontier"),
-                                 new_manifest)
-        # manifest bookkeeping (footer counts recorded at write time):
-        # no Spark job, no observation, no exhaustion edge case
-        extra_metrics["frontier_rows_written"] = rows_written
-        extra_metrics["frontier_size"] = bands_mod.manifest_total(
-            new_manifest)
-        _mark("seen_frontier_cuckoo")
-        w.timings = tt
-
-        # this wave's fetch_log drain + metrics/lineage/caches are
-        # DEFERRED past the next wave's schedule phase (see _finalize)
-        w.lineage = {
-            "wave": wave,
-            "input_wave_dir": (_wave_dir(cfg, wave - 1) if wave
-                               else "seeds"),
-            "partitions": cfg.partitions,
-            "seen_deltas": _seen_delta_paths(cfg, wave),
-            "frontier_manifest": bands_mod.manifest_path(
-                os.path.join(d, "frontier")),
-            "frontier_bands_read": w.plan.read_bands,
-            "frontier_segments_read": sorted(w.plan.consumed_keys()),
-            "frontier_score_cut": w.plan.s_cut,
-            "seen_strategy": w.seen_strategy,
-            "cuckoo_probe": w.cuckoo_probed,
-            "config": {"universe": cfg.universe,
-                       "n_seeds": cfg.n_seeds,
-                       "budget_per_host": cfg.budget_per_host,
-                       "wave_cap": cfg.wave_cap,
-                       "band_width": cfg.band_width,
-                       "band_split_rows": bands_mod.split_rows_of(cfg)},
-        }
-        pending = w
-        manifest = new_manifest
-        prev_links = int(w.get("links")["d"])
-        if cfg.compact_every and (wave + 1) % cfg.compact_every == 0:
-            # compaction must see a fully-committed wave (and resume
-            # correctness must never find a compacted snapshot ahead
-            # of the lineage markers), so a compacting wave gives up
-            # its overlap and finalizes in place
-            _finalize(pending)
-            pending = None
-            from .snapshots import compact_seen
-
-            compact_seen(spark, cfg, upto_wave=wave)
-            seen = _read_seen(spark, cfg, wave)  # re-root on the compact
-    if pending is not None:
-        _finalize(pending)
-    return {"start_wave": start, "metrics": all_metrics,
-            "timings": all_timings,
+                compact_seen(spark, cfg, upto_wave=wave)
+        ex.join()
+    finally:
+        ex.close()
+    waves = range(start, cfg.n_waves)
+    return {"start_wave": start,
+            "metrics": [ex.done[(w, "finalize")] for w in waves],
+            "timings": [_timings(ex.spans, w) for w in waves],
             "checkpoint_dir": cfg.checkpoint_dir}
 
 

@@ -33,7 +33,8 @@ Scale design (10^10 urls):
   once active. The bloom stacked behind the cuckoo would only see the
   cuckoo's positives — already-seen urls plus a ~1e-4 false-positive
   share of the new ones — which it cannot prune. Both are still
-  maintained every wave (``SeenFilters.maintain``).
+  maintained every wave (``SeenFilters.maintain_bloom`` and
+  ``maintain_cuckoo``).
 """
 
 from __future__ import annotations
@@ -315,12 +316,11 @@ def merge_bloom_shards(shards: DataFrame, delta: DataFrame,
             .applyInPandas(merge, BLOOM_SHARD_SCHEMA))
 
 
-def bloom_shards_prune(candidates: DataFrame, shards: DataFrame,
-                       n_partitions: int) -> DataFrame:
-    """Adds boolean ``maybe_seen`` via a partition-local shard probe
-    (cogroup): False = definitely new. A task holds exactly one
-    shard's bitmap — the executor-memory contract of the sharded
-    design. Candidates in a partition with no shard are all
+def _probe_shards(candidates: DataFrame, shards: DataFrame,
+                  n_partitions: int, member) -> DataFrame:
+    """Adds boolean ``maybe_seen`` via a partition-local cogroup probe:
+    ``member(shard_row, hashes)`` flags the candidates of a partition
+    against its shard; candidates in a partition with no shard are all
     definitely-new (their partition has never seen a url)."""
     keyed = (candidates
              .withColumn("partition",
@@ -332,19 +332,28 @@ def bloom_shards_prune(candidates: DataFrame, shards: DataFrame,
 
     def probe(key, cand_pdf: pd.DataFrame, shard_pdf: pd.DataFrame):
         cand_pdf = cand_pdf.copy()
-        if not len(shard_pdf):
-            cand_pdf["maybe_seen"] = False
-            return cand_pdf
-        bitmap = bytes(shard_pdf["bitmap"].iloc[0])
-        cand_pdf["maybe_seen"] = _all_bits_set(
-            np.frombuffer(bitmap, dtype=np.uint8), cand_pdf["h"],
-            bloom_shard_bits(bitmap))
+        cand_pdf["maybe_seen"] = (member(shard_pdf.iloc[0], cand_pdf["h"])
+                                  if len(shard_pdf) else False)
         return cand_pdf
 
     return (keyed.groupBy("partition")
             .cogroup(shards.groupBy("partition"))
             .applyInPandas(probe, out_schema)
             .drop("h", "partition"))
+
+
+def bloom_shards_prune(candidates: DataFrame, shards: DataFrame,
+                       n_partitions: int) -> DataFrame:
+    """Adds boolean ``maybe_seen`` via a partition-local shard probe
+    (cogroup): False = definitely new. A task holds exactly one
+    shard's bitmap — the executor-memory contract of the sharded
+    design."""
+    def member(shard, h):
+        bitmap = bytes(shard["bitmap"])
+        return _all_bits_set(np.frombuffer(bitmap, dtype=np.uint8), h,
+                             bloom_shard_bits(bitmap))
+
+    return _probe_shards(candidates, shards, n_partitions, member)
 
 
 def bloom_shards_stats(shards: DataFrame) -> tuple[int, int]:
@@ -605,29 +614,12 @@ def cuckoo_prune(candidates: DataFrame, shards: DataFrame,
     """Adds boolean ``maybe_seen`` via a partition-local cogroup
     probe: False = definitely new (cuckoo filters never
     false-negative), True = confirm via anti-join."""
-    keyed = (candidates
-             .withColumn("partition",
-                         _partition_of(F.col("url"), n_partitions))
-             .withColumn("h", F.xxhash64("url")))
-    out_schema = T.StructType(
-        keyed.schema.fields
-        + [T.StructField("maybe_seen", T.BooleanType())])
+    def member(shard, h):
+        cf = CuckooFilter.from_bytes(bytes(shard["blob"]),
+                                     int(shard["n_buckets"]))
+        return cf.contains_many(h.to_numpy(dtype=np.int64).view(np.uint64))
 
-    def probe(key, cand_pdf: pd.DataFrame, shard_pdf: pd.DataFrame):
-        cand_pdf = cand_pdf.copy()
-        if not len(shard_pdf):
-            cand_pdf["maybe_seen"] = False
-            return cand_pdf
-        cf = CuckooFilter.from_bytes(bytes(shard_pdf["blob"].iloc[0]),
-                                     int(shard_pdf["n_buckets"].iloc[0]))
-        hashes = cand_pdf["h"].to_numpy(dtype=np.int64).view(np.uint64)
-        cand_pdf["maybe_seen"] = cf.contains_many(hashes)
-        return cand_pdf
-
-    return (keyed.groupBy("partition")
-            .cogroup(shards.groupBy("partition"))
-            .applyInPandas(probe, out_schema)
-            .drop("h", "partition"))
+    return _probe_shards(candidates, shards, n_partitions, member)
 
 
 def build_cuckoo_shards(seen: DataFrame, n_partitions: int,
@@ -677,7 +669,7 @@ def cuckoo_probes(cfg, n_seen: int, links: int | None) -> bool:
     """Whether a wave over ``n_seen`` seen urls probes the cuckoo
     shards, given the previous wave's distinct links (None: none
     observed) — see CrawlConfig.cuckoo_probe_min_ratio. It also
-    predicts whether the next wave probes (``SeenFilters.maintain``)."""
+    predicts whether the next wave probes (``SeenFilters.maintain_cuckoo``)."""
     return (n_seen >= cfg.cuckoo_min_seen
             and (links is None
                  or n_seen >= cfg.cuckoo_probe_min_ratio * max(links, 1)))
@@ -694,12 +686,12 @@ def _write_bitmap(path: str, bitmap: bytes) -> None:
 @dataclass
 class SeenFilters:
     """The crawl's seen-set filter state, carried across waves:
-    ``bloom`` is the global bitmap (bytes, or the pool future building
-    them) or, when sharded, the (partition, bitmap) DataFrame; ``m``
-    the bits per bitmap (per shard); ``rebuild`` a pending ×8 rebuild;
-    ``cuckoo`` the cuckoo shards (None while dropped). Per wave:
+    ``bloom`` is the global bitmap (bytes) or, when sharded, the
+    (partition, bitmap) DataFrame; ``m`` the bits per bitmap (per
+    shard); ``rebuild`` a pending ×8 rebuild; ``cuckoo`` the cuckoo
+    shards (None while dropped). Per wave:
     ``activate`` at the boundary, ``prefilter`` in the seen check and
-    ``maintain`` after the seen-delta commit."""
+    ``maintain_bloom``/``maintain_cuckoo`` after the seen-delta commit."""
     cfg: object                   # CrawlConfig
     bloom: object = None
     m: int = 0
@@ -734,7 +726,7 @@ class SeenFilters:
             f.m = bloom_shard_bits(f.bloom)
         return f
 
-    def activate(self, seen: DataFrame, n_seen: int, pool) -> None:
+    def activate(self, seen: DataFrame, n_seen: int) -> None:
         """Wave-boundary bloom activation or ×8 saturation rebuild.
 
         First activation sizes from the KNOWN seen count (~16 bits/key
@@ -747,10 +739,10 @@ class SeenFilters:
         past it the bitmap stays saturated but correct (it only
         prunes), and scheduling is identical across resize histories.
 
-        The global build is a pool FUTURE resolved where the bitmap is
-        first needed (the seen-filter plan, or the fold), so it
-        overlaps the schedule phase's stats job (round 8). The sharded
-        build is a cached applyInPandas — no driver bitmap at all."""
+        The global build collects the bitmap here, on the crawl's
+        ``activate`` stage; the bloom stage reads it as that stage's
+        output. The sharded build is a cached applyInPandas — no
+        driver bitmap at all."""
         cfg, bloom = self.cfg, self.bloom
         rebuild, self.rebuild = self.rebuild, False
         if n_seen < cfg.bloom_min_seen or not (
@@ -766,13 +758,7 @@ class SeenFilters:
             self.bloom = self._built = build_bloom_shards(
                 seen, cfg.partitions, self.m).cache()
         else:
-            self.bloom = pool.submit(build_bloom, seen, self.m)
-
-    def bitmap(self) -> bytes:
-        """The global bitmap's bytes, joining its build future."""
-        if hasattr(self.bloom, "result"):
-            self.bloom = self.bloom.result()
-        return self.bloom
+            self.bloom = build_bloom(seen, self.m)
 
     def prefilter(self, n_seen: int, prev_links: int | None):
         """The wave's ONE pre-filter for ``filter_new_urls``: the
@@ -787,22 +773,40 @@ class SeenFilters:
         if cfg.bloom_mode == "sharded":
             return (lambda c: bloom_shards_prune(c, bloom,
                                                  cfg.partitions)), False
-        return (lambda c: bloom_maybe_seen(c, self.bitmap(), self.m)), False
+        return (lambda c: bloom_maybe_seen(c, bloom, self.m)), False
 
-    def maintain(self, pool, delta_urls: DataFrame, full_seen: DataFrame,
-                 wave_dir: str, n_seen: int, links: int) -> dict:
-        """Maintain the filters on the pool once the wave's seen delta
-        committed (``delta_urls`` reads the warm new-rows cache;
-        ``full_seen``/``n_seen`` are post-wave, ``links`` the wave's
-        distinct links), overlapping the fetch_log/frontier writes.
-        Returns the wave's bloom_* metrics (none while no bloom is
-        active); an est-fp over bloom_fp_rebuild arms the ×8 rebuild.
+    def maintain_bloom(self, delta_urls: DataFrame, wave_dir: str) -> dict:
+        """Fold the wave's committed seen delta (``delta_urls`` reads
+        the warm new-rows cache) into the bloom and persist it —
+        global: bloom_merge_urls -> bloom.bin; sharded: a cogroup
+        merge -> bloom_shards/, no driver bitmap. Returns the wave's
+        bloom_* metrics (none while no bloom is active); an est-fp over
+        bloom_fp_rebuild arms the ×8 rebuild."""
+        if self.bloom is None:
+            return {}
+        if self.cfg.bloom_mode == "sharded":
+            path = os.path.join(wave_dir, "bloom_shards")
+            merge_bloom_shards(self.bloom, delta_urls, self.cfg.partitions,
+                               self.m).write.mode("overwrite").parquet(path)
+            self.bloom = delta_urls.sparkSession.read.parquet(path)
+            m_total, pc = bloom_shards_stats(self.bloom)
+            if self._built is not None:
+                self._built.unpersist()  # the merged parquet replaces it
+                self._built = None
+        else:
+            bitmap = bloom_merge_urls(delta_urls, self.m, self.bloom, 16)
+            _write_bitmap(os.path.join(wave_dir, "bloom.bin"), bitmap)
+            self.bloom, m_total, pc = bitmap, self.m, bloom_popcount(bitmap)
+        est_fp = bloom_est_fp(pc, m_total)
+        self.rebuild = est_fp > self.cfg.bloom_fp_rebuild
+        return {"bloom_m": m_total, "bloom_popcount": pc,
+                "bloom_est_fp": est_fp}
 
-        The bloom folds the delta and persists — global:
-        bloom_merge_urls -> bloom.bin; sharded: a cogroup merge ->
-        bloom_shards/, no driver bitmap.
-
-        The cuckoo shards are maintained only when the NEXT wave is
+    def maintain_cuckoo(self, delta_urls: DataFrame, full_seen: DataFrame,
+                        wave_dir: str, n_seen: int, links: int) -> None:
+        """Maintain the cuckoo shards once the wave's seen delta
+        committed (``full_seen``/``n_seen`` are post-wave, ``links``
+        the wave's distinct links) — only when the NEXT wave is
         predicted to probe them (``cuckoo_probes`` on this wave's
         counts): in the expansion phase every wave's incremental fold
         is flat per-wave cost for a filter nobody reads. Skipping
@@ -812,35 +816,7 @@ class SeenFilters:
         drop-and-rebuild-from-seen when the ratio finally crosses
         (maintain_cuckoo_shards with shards=None; amortized-rare by
         the ratio check)."""
-        f_bloom = f_cuckoo = None
-        if self.bloom is not None:
-            f_bloom = pool.submit(
-                self._merge if self.cfg.bloom_mode == "sharded"
-                else self._fold, delta_urls, wave_dir)
-        if cuckoo_probes(self.cfg, n_seen, links):
-            f_cuckoo = pool.submit(
-                maintain_cuckoo_shards, self.cuckoo, delta_urls, full_seen,
-                self.cfg.partitions, os.path.join(wave_dir, "cuckoo"))
-        metrics = {}
-        if f_bloom is not None:
-            self.bloom, m_total, pc = f_bloom.result()
-            if self._built is not None:
-                self._built.unpersist()  # the merged parquet replaces it
-                self._built = None
-            metrics = {"bloom_m": m_total, "bloom_popcount": pc,
-                       "bloom_est_fp": bloom_est_fp(pc, m_total)}
-            self.rebuild = metrics["bloom_est_fp"] > self.cfg.bloom_fp_rebuild
-        self.cuckoo = f_cuckoo.result() if f_cuckoo is not None else None
-        return metrics
-
-    def _fold(self, delta_urls: DataFrame, wave_dir: str):
-        bitmap = bloom_merge_urls(delta_urls, self.m, self.bitmap(), 16)
-        _write_bitmap(os.path.join(wave_dir, "bloom.bin"), bitmap)
-        return bitmap, self.m, bloom_popcount(bitmap)
-
-    def _merge(self, delta_urls: DataFrame, wave_dir: str):
-        path = os.path.join(wave_dir, "bloom_shards")
-        merge_bloom_shards(self.bloom, delta_urls, self.cfg.partitions,
-                           self.m).write.mode("overwrite").parquet(path)
-        shards = delta_urls.sparkSession.read.parquet(path)
-        return (shards, *bloom_shards_stats(shards))
+        self.cuckoo = (maintain_cuckoo_shards(
+            self.cuckoo, delta_urls, full_seen, self.cfg.partitions,
+            os.path.join(wave_dir, "cuckoo"))
+            if cuckoo_probes(self.cfg, n_seen, links) else None)

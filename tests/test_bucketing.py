@@ -19,23 +19,26 @@ def warehouse(spark, tmp_path_factory):
 def test_bucketed_join_has_no_exchange(spark, warehouse):
     from cuphic_spark.compiler import compile_pattern, match_nodes
     from cuphic_spark.operators.parse import pages_to_nodes
-    from cuphic_spark.sources.tei import tei_pages
+    from cuphic_spark.sources.pagegen import DEFAULT_COPIES, synth_pages
 
-    nodes = pages_to_nodes(tei_pages(spark))
+    nodes = pages_to_nodes(
+        synth_pages(spark, "/root/testdata/sf0.001", DEFAULT_COPIES))
     (nodes.write.mode("overwrite")
      .bucketBy(8, "url").sortBy("url", "node_id")
      .saveAsTable("nodes_bucketed"))
 
     nb = spark.table("nodes_bucketed")
-    m = match_nodes(nb, [compile_pattern("ref", "[_ {:ref ref} ???]")])
+    m = match_nodes(nb, [compile_pattern("links", "[:a {:href href} ???]")])
     (m.write.mode("overwrite")
      .bucketBy(8, "url").sortBy("url")
      .saveAsTable("matches_bucketed"))
 
     mb = spark.table("matches_bucketed")
+    n_matches = mb.count()
+    assert n_matches > 0  # the join checks below are not vacuous
     joined = mb.join(nb, ["url", "node_id"]).select(
         "url", "node_id", "tag",
-        F.element_at("bindings", "ref").alias("ref"))
+        F.element_at("bindings", "href").alias("href"))
 
     from cuphic_spark.plans import executed_plan
 
@@ -43,5 +46,5 @@ def test_bucketed_join_has_no_exchange(spark, warehouse):
     # co-located buckets: the join must not shuffle either side
     assert "Exchange hashpartitioning" not in plan
     rows = joined.collect()
-    assert len(rows) == mb.count()  # every match row joined
-    assert all(r.ref is not None for r in rows)
+    assert len(rows) == n_matches  # every match row joined
+    assert all(r.tag == "a" and r.href is not None for r in rows)

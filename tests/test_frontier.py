@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cuphic_spark.frontier.crawl import (
+    STAGES,
     CrawlConfig,
     crawl,
     last_complete_wave,
@@ -849,6 +850,111 @@ def test_filter_maintenance_fault_resumes_that_wave(
     _assert_matches_oracle(spark, cfg, summary["metrics"], oracle_state,
                            bloom_oracle_state, first_wave=1)
     _assert_filters_match_rebuild(spark, cfg)
+    shutil.rmtree(d, ignore_errors=True)
+
+
+# what each table stage writes inside its wave's dir
+_STAGE_OUTPUTS = {
+    "seen_delta": ("seen_delta",),
+    "fetch_log": ("fetch_log",),
+    "frontier": ("frontier",),
+    "bloom": ("bloom.bin", "bloom_shards"),
+    "cuckoo": ("cuckoo",),
+    "manifest": ("frontier/_frontier_manifest.json",),
+    "finalize": ("_lineage.json",),
+}
+
+
+def _dependents(name):
+    """The table stages of one wave that need ``name``, transitively."""
+    from cuphic_spark.frontier.crawl import STAGES
+
+    out = {name}
+    for _ in STAGES:
+        out |= {s.name for s in STAGES if out & set(s.inputs)}
+    return out - {name}
+
+
+@pytest.mark.parametrize("stage", [s.name for s in STAGES])
+def test_stage_fault_resumes_that_wave(
+        spark, tmp_path, monkeypatch, oracle_state, bloom_oracle_state,
+        stage):
+    """A fault raised inside any stage of wave 1 — for ``finalize``
+    that is wave 1's, which runs during wave 2 — stops the crawl with
+    wave 1 uncommitted, and no stage that needs the failed one wrote
+    anything in wave 1's dir. The resume re-runs wave 1 and ends equal
+    to the oracle, with persisted filters equal to a fresh build and a
+    consistent lineage. The fault is injected at the executor's one
+    per-stage call, so a new table stage gets a case here."""
+    import os
+
+    from cuphic_spark.frontier import stages
+    from cuphic_spark.frontier.snapshots import verify_lineage
+
+    assert set(_STAGE_OUTPUTS) <= {s.name for s in STAGES}
+    real, fired = stages._call_stage, []
+
+    def failing(st, ctx, wave, got):
+        if (wave, st.name) == (1, stage):
+            fired.append(st.name)
+            raise RuntimeError(f"injected {stage} fault")
+        return real(st, ctx, wave, got)
+
+    monkeypatch.setattr(stages, "_call_stage", failing)
+    d = str(tmp_path / f"stage_{stage}")
+    cfg = _both_filters_cfg(d, "global")  # bloom and cuckoo run in wave 1
+    with pytest.raises(RuntimeError, match="injected"):
+        crawl(spark, cfg)
+    monkeypatch.undo()
+    assert fired == [stage]
+    assert last_complete_wave(cfg) == 0
+    wave1 = os.path.join(d, "wave=00001")
+    for dep in sorted(_dependents(stage)):
+        for rel in _STAGE_OUTPUTS.get(dep, ()):
+            assert not os.path.exists(os.path.join(wave1, rel)), (dep, rel)
+
+    summary = crawl(spark, cfg)
+    assert summary["start_wave"] == 1
+    _assert_matches_oracle(spark, cfg, summary["metrics"], oracle_state,
+                           bloom_oracle_state, first_wave=1)
+    _assert_filters_match_rebuild(spark, cfg)
+    assert verify_lineage(cfg) == []
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def test_summary_timings_contract(spark, tmp_path, monkeypatch):
+    """``summary["timings"]`` (read by perfbench/layers.py and bench.py)
+    keeps one row per wave with the legacy interval keys, all
+    non-negative, plus every table stage's [start, end] offsets. Each
+    stage runs under the Spark local property ``cuphic.span`` =
+    ``w{wave}/{stage}``, which is unset on the main thread once
+    crawl() returns."""
+    from cuphic_spark.frontier import stages
+
+    sc = spark.sparkContext
+    real, calls = stages._call_stage, []
+
+    def recording(st, ctx, wave, got):
+        calls.append((wave, st.name,
+                      sc.getLocalProperty(stages.SPAN_PROPERTY)))
+        return real(st, ctx, wave, got)
+
+    monkeypatch.setattr(stages, "_call_stage", recording)
+    d = str(tmp_path / "timings")
+    summary = crawl(spark, _both_filters_cfg(d, "global"))
+    assert sc.getLocalProperty(stages.SPAN_PROPERTY) is None
+    assert [c for c in calls if c[2] != f"w{c[0]}/{c[1]}"] == []
+    names = {s.name for s in STAGES}
+    waves = range(CFG["n_waves"])
+    assert {(w, n) for w, n, _ in calls if w >= 0} == \
+        {(w, n) for w in waves for n in names}
+    assert [row["wave"] for row in summary["timings"]] == list(waves)
+    for row in summary["timings"]:
+        for key in ("bloom_build", "schedule", "prev_wave_drain",
+                    "seen_frontier_cuckoo", "fetch_log_drain"):
+            assert row[key] >= 0, (key, row)
+        assert set(row["stages"]) == names
+        assert all(0 <= a <= b for a, b in row["stages"].values()), row
     shutil.rmtree(d, ignore_errors=True)
 
 
